@@ -246,6 +246,11 @@ def main() -> None:
                 # not a level, and the round-close note must quote this
                 # field.
                 "load_contaminated": _contaminated(load_before, load_after),
+                # The effective master and core count the session ran
+                # on, so a reading taken with fewer cores than the host
+                # offers is visible from this line alone.
+                "master": spark.sparkContext.master,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
             }
         )
     )

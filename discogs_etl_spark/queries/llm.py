@@ -453,7 +453,8 @@ def gate_control_quadratic_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-factorable (no marginal-sum shortcut exists) and every pair
     must actually be enumerated and hashed.
 
-    Calibration (r19, min-of-5 quiet, local[32]): 0.76 s at sf0.01
+    Calibration (r19, one-off min-of-5 quiet, local[32]; each sweep
+    records min-of-3): 0.76 s at sf0.01
     (125k pairs) -> 6.5 s at sf0.1 (2M pairs), alpha ~1.55 against the
     embeddings plane's 4x growth — above ALPHA_FLAG = 1.35 with ~0.2
     margin, material at the high sf, above the overhead floor at the

@@ -5,6 +5,9 @@ named query builder ``fn(spark, sf_dir) -> DataFrame`` together with an
 equivalent ANSI/DuckDB SQL string (the correctness oracle).  The driver
 contract (``__spark_entry__.py``) and the local pytest harness both consume
 this registry, so "implemented" always means "oracle-checked".
+``all_specs`` returns the queries in registration order; the verification
+driver checks the first 50 of them, and ``tests/test_oracle.py`` checks
+every one.
 
 Determinism rules every registered query follows (so the driver's
 order-insensitive value-hash matches bit-for-bit):
@@ -28,28 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _REGISTRY: dict[str, "QuerySpec"] = {}
-
-# Canonical registration order, import-order-INDEPENDENT.  ``_REGISTRY``
-# insertion order depends on which module a process happens to import
-# first (a pytest session that touches ``curation`` before ``analytics``
-# registers the llm block ahead of the analytics block), but the
-# evidence-rotation basis ("registration order among last-green ties",
-# scripts/evidence_audit.py) must be reproducible in ANY process.  Each
-# name therefore gets a (module rank, in-module sequence) key at
-# registration time: ranks follow ``_load_all``'s import order — which
-# a clean process realizes as one contiguous block per module — and the
-# in-module sequence is file order, so sorting by this key reproduces
-# the clean-process order exactly no matter who imported what first.
-_MODULE_RANK: dict[str, int] = {
-    "discogs_etl_spark.multimodal": 0,
-    "discogs_etl_spark.scale": 1,
-    "discogs_etl_spark.queries.analytics": 2,
-    "discogs_etl_spark.queries.etl_roundtrip": 3,
-    "discogs_etl_spark.queries.llm": 4,
-    "discogs_etl_spark.queries.python_api": 5,
-    "discogs_etl_spark.queries.stats": 6,
-    "discogs_etl_spark.streaming.events": 7,
-}
 
 
 @dataclass(frozen=True)
@@ -81,35 +62,6 @@ def register(
     return deco
 
 
-def registration_order() -> list[str]:
-    """Registered names in CANONICAL registration order — the order a
-    clean ``_load_all`` process inserts them — regardless of the import
-    history of the calling process.  The evidence-rotation basis
-    (scripts/evidence_audit.py stale-order tie-break) and ``all_specs``'s
-    post-window fill both use this so a pytest session that imported
-    modules in a different order computes the same rotation.
-
-    The key is DERIVED here, not recorded at registration time (keeping
-    ``register``'s AST untouched keeps every query's rewindow closure
-    clean): decorators run top-to-bottom within a module no matter who
-    triggered the import, so each name's index within its own module's
-    insertion subsequence is already import-order-invariant; only the
-    inter-module order varies, and ``_MODULE_RANK`` pins that."""
-    _load_all()
-    counters: dict[str, int] = {}
-    unknown = len(_MODULE_RANK)
-    key: dict[str, tuple[int, int]] = {}
-    for name, spec in _REGISTRY.items():
-        mod = spec.fn.__module__
-        seq = counters.get(mod, 0)
-        counters[mod] = seq + 1
-        # Unknown modules (test-local registrations) rank after every
-        # product module; ties among them keep insertion order via
-        # sorted()'s stability.
-        key[name] = (_MODULE_RANK.get(mod, unknown), seq)
-    return sorted(_REGISTRY, key=lambda n: key[n])
-
-
 def _load_all() -> None:
     # Import for side effect: modules register their queries on import.
     from discogs_etl_spark import multimodal, scale  # noqa: F401
@@ -123,155 +75,9 @@ def _load_all() -> None:
     from discogs_etl_spark.streaming import events  # noqa: F401
 
 
-# Evidence-rotation window.  The verification driver checks the FIRST 50
-# registered queries per round, so ``all_specs`` surfaces queries with NO
-# driver-side correctness evidence (or changed since their last green row)
-# ahead of queries whose green rows already stand from a prior round.
-#
-# Round 19 rotation.  Basis (COMPUTED by scripts/evidence_audit.py over
-# a FIXED round range — the note is stamped with the round it describes
-# so the suite stays green after later artifacts land;
-# tests/test_evidence_audit.py recomputes audit(max_round=as_of_round)
-# and asserts this line matches, and separately proves the comparison is
-# immune to a synthetic future-round artifact):
-#   evidence_audit as_of_round=18: registered=380 unique_checked=379 ever_green=379 \
-#     never_checked=1 net_new_last_round=1
-# The 379-name r18 ledger closed fully (backfill_audit_table, the one
-# name never checked before r18, went green on first check); the one
-# never-checked name on the 380-query registry is
-# gate_control_quadratic_join, REGISTERED THIS ROUND as the exponent
-# gate's dedicated quadratic positive control (the r19 prefix-filter
-# optimization de-flagged the previous control — see
-# scripts/scale_exponents.py SUPERLINEAR_BASELINES).  Policy unchanged:
-# (a) mechanical re-window flags lead (scripts/rewindow_check.py vs the
-# r18-end rev 78e1ae9 — ONE flag at composition time: the new control
-# query, never-checked names first, the r16-r18 precedent; this
-# optimization round's OTHER rewrites land after composition, covered
-# by the oracle gate + the targeted scale-exponent refresh rather than
-# window slots); then (b)
-# OLDEST-EVIDENCE-FIRST rotation — registered names ordered by
-# last-green round ascending (registration order among ties, printed by
-# `evidence_audit.py --stale-order` and filled by round_start.py).  The
-# fill LEADS with the three names the r18 45-name fill stopped short of
-# (pandas_udf_vector_norm / applyinpandas_lang_stats /
-# retention_halflife_fit — exactly the trio
-# test_endangered_names_are_in_current_window flagged the moment
-# CORRECTNESS_r18.json landed), then continues through the round-11
-# cohort (window_lag_lead_gap / q6_forecast_revenue ...) and the
-# round-12 TPC-H backlog into the round-13 cohort.
-# Every name passes the local one-session driver replica
-# (tests/test_oracle.py) and the plain-session derisk_window.py sweep,
-# so rotation stays pure evidence collection.
-#
-# EVIDENCE-FRESHNESS SLO (machine-enforced since round 14 by
-# tests/test_evidence_freshness.py, driven by
-# scripts/evidence_audit.py just like the timing/plansweep gates):
-# no registered query's last driver-green round may be older than
-# MAX_EVIDENCE_AGE_ROUNDS = 8 rounds behind the newest landed
-# CORRECTNESS artifact.  Rationale: the driver re-checks 50 names per
-# round, so a correctly-rotated 369-name registry revisits every name
-# within ceil(369 / 50) = 8 rounds; evidence older than that means a
-# window was skipped or mis-composed (rotation not oldest-first), which
-# previously reddened nothing.  The test also asserts the CURRENT
-# tuple is a prefix-faithful oldest-evidence-first slice, so a
-# mis-rotated tuple fails BEFORE its round lands, not 8 rounds later.
-# The ceil(369/50) derivation assumes full-window rotation, while the
-# composition gate sanctions up to MAX_FLAG_BLOCK=25 re-window slots
-# per round — that tension is reconciled at COMPOSITION time, not by
-# widening the bound: the freshness test also requires every
-# SLO-endangered name (evidence_audit.endangered_names — would exceed
-# the bound once the next artifact lands) to appear in the current
-# window, so a flag block large enough to starve the rotation reddens
-# the round it is composed, forcing a conscious split or a documented
-# bound change rather than a silent SLO trip several rounds later.
-_WINDOW_PRIORITY: tuple[str, ...] = (
-    # mechanical flag block (1): gate_control_quadratic_join LEADS —
-    # registered this round as the exponent gate's dedicated quadratic
-    # positive control (never-checked names sort to the stale-order
-    # head, the r16-r18 precedent).  Then the oldest-evidence-first
-    # rotation fill (49 names): leads with the three names the r18
-    # fill stopped short of (pandas_udf_vector_norm /
-    # applyinpandas_lang_stats / retention_halflife_fit — the
-    # SLO-endangered trio), then the round-11 cohort, the round-12
-    # TPC-H backlog, and into round 13.
-    "gate_control_quadratic_join",
-    "pandas_udf_vector_norm",
-    "applyinpandas_lang_stats",
-    "retention_halflife_fit",
-    "window_lag_lead_gap",
-    "q6_forecast_revenue",
-    "window_distribution_funcs",
-    "window_sliding_range_events",
-    "scalar_datetime_extended",
-    "scalar_math_extended",
-    "agg_corr_exact",
-    "sort_nulls_ordering",
-    "range_join_bucketed",
-    "nested_struct_roundtrip",
-    "q8_market_share",
-    "q10_returned_items",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customer",
-    "q21_waiting_supplier",
-    "q22_global_sales_opportunity",
-    "q2_min_cost_supplier",
-    "q9_product_type_profit",
-    "q11_important_stock",
-    "q16_parts_supplier_count",
-    "q20_potential_promotion",
-    "join_skew_salted",
-    "asof_join_tolerance",
-    "events_retention_cohorts",
-    "window_running_distinct_users",
-    "graph_pagerank_coorder",
-    "activation_latency_percentiles",
-    "users_reactivation_rate",
-    "graph_modularity_lpa",
-    "lang_id_confusion",
-    "similarity_ivf_topk",
-    "text_repetition_score",
-    "dedup_ngram_crossdoc",
-    "decontaminate_eval_overlap",
-    "text_redact_pii",
-    "corpus_mix_sources",
-    "corpus_shuffle_shards",
-    "boilerplate_prefix_groups",
-    "bpe_learn_merges",
-    "embedding_power_iteration_pc1_gram",
-    "embedding_triplet_check",
-    "retrieval_rank_agreement",
-    "dedup_granularity_compare",
-    "events_harmonic_peak_hour",
-    # ROUND-20 ROTATION NOTE: keep the policy — refresh the audit line
-    # to as_of_round=19 and COVERAGE.md's evidence paragraph as the
-    # first commit, then compose the window with
-    # `python scripts/round_start.py <r19-end-rev>`: mechanical
-    # re-window flags lead (never-checked names first), oldest-evidence
-    # -first rotation fills (`python scripts/evidence_audit.py
-    # --stale-order` prints the basis).
-    # tests/test_evidence_freshness.py reddens a skipped or
-    # mis-composed rotation automatically.
-)
-
-
-# Evidence-freshness bound enforced by tests/test_evidence_freshness.py.
-# 369 names / 50 driver checks per round => every name re-verified
-# within ceil(369/50) = 8 rounds under correct oldest-first rotation.
-MAX_EVIDENCE_AGE_ROUNDS = 8
-
-
 def all_specs() -> dict[str, QuerySpec]:
     _load_all()
-    ordered: dict[str, QuerySpec] = {}
-    for name in _WINDOW_PRIORITY:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
-    for name in registration_order():
-        if name not in ordered:
-            ordered[name] = _REGISTRY[name]
-    return ordered
+    return dict(_REGISTRY)
 
 
 def queries() -> dict[str, QueryFn]:

@@ -1,4 +1,4 @@
-"""De-risk the evidence-rotation window the way the DRIVER will run it.
+"""Check the first 50 registered queries the way the DRIVER will run them.
 
 Fresh process, PLAIN SparkSession (no tuned builder confs) with only
 the runtime knobs the driver contract itself applies — the
@@ -6,10 +6,10 @@ the runtime knobs the driver contract itself applies — the
 ``session.tune_for_correctness`` before every builder, so the faithful
 replica does too (UTC session timezone being the critical one).  Full
 value compare vs DuckDB at sf0.01 for the first 50 registered queries —
-the exact set the verification driver's CORRECTNESS gate checks.  This
-has caught session-sensitivity (timezone, shuffle-partition,
-active-session leakage) every round that the tuned pytest fixture
-session hides.
+the exact set the verification driver's CORRECTNESS gate checks
+(``--all`` runs every registered query).  This catches
+session-sensitivity (timezone, shuffle-partition, active-session
+leakage) that the tuned pytest fixture session hides.
 
 TIMEZONE, fully mapped (r7, swept under TZ=Asia/Kolkata at sf0.01).
 Two independent knobs exist and BOTH must be UTC for full 366/366
@@ -30,9 +30,9 @@ queries in the same run, are only consistent with a UTC driver box):
   process=+05:30, the 9 timestamp-RETURNING queries shift on collect
   while DuckDB's naive timestamps do not.  No contract knob can pin
   the driver's process zone, hence this script pins its own (below)
-  for parity, and the r9 hardening plan is to cast returned timestamp
-  columns to TIMESTAMP_NTZ (collects the UTC wall clock regardless of
-  process zone — measured) once re-window slots are free.
+  for parity.  Casting returned timestamp columns to TIMESTAMP_NTZ
+  would remove the dependence (it collects the UTC wall clock
+  regardless of process zone — measured).
 
 Usage::
 
@@ -79,9 +79,9 @@ def main() -> int:
     ap.add_argument(
         "--all",
         action="store_true",
-        help="run the ENTIRE registry, not just the 50-name window — "
-        "catches plain-session sensitivity in backlog queries BEFORE a "
-        "future rotation windows them",
+        help="run the ENTIRE registry, not just the first 50 registered "
+        "queries — catches plain-session sensitivity in queries the "
+        "driver does not check",
     )
     ap.add_argument(
         "--raw",

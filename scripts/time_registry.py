@@ -138,11 +138,13 @@ def main() -> int:
                 flush=True,
             )
 
-    # CALIBRATION CONTROLS are measured min-of-3, not single-run (r19).
-    # The scale-exponent gate's positive control must read its true
-    # compute at BOTH sfs or the fitted alpha rides cold-start noise:
-    # a single cold run adds ~1 s of codegen/JIT to the LO reading
-    # (measured: 1.77 s cold vs 0.76 s min-of-5 for
+    # CALIBRATION CONTROLS are recorded min-of-3 on each sweep, not
+    # single-run (r19); the control's alpha ~1.55 comes from a one-off
+    # min-of-5 calibration.  The scale-exponent gate's positive control
+    # must read its true compute at BOTH sfs or the fitted alpha rides
+    # cold-start noise: a single cold run adds ~1 s of codegen/JIT to
+    # the LO reading (measured: 1.77 s cold vs 0.76 s in the one-off
+    # min-of-5 calibration of
     # gate_control_quadratic_join at sf0.01), which alone deflates a
     # true alpha ~1.55 to ~0.94 — under the flag the control exists to
     # trip, failing the stale-allowance test spuriously.  Same
