@@ -246,15 +246,19 @@ def main() -> None:
                 # not a level, and the round-close note must quote this
                 # field.
                 "load_contaminated": _contaminated(load_before, load_after),
-                # The effective master and core count the session ran
-                # on, so a reading taken with fewer cores than the host
-                # offers is visible from this line alone.
-                "master": spark.sparkContext.master,
-                "default_parallelism": spark.sparkContext.defaultParallelism,
+                **_session_stamp(spark),
             }
         )
     )
     spark.stop()
+
+
+def _session_stamp(spark) -> dict:
+    """The effective master and core count the session ran on, so a
+    reading taken with fewer cores than the host offers is visible from
+    the contract line alone."""
+    sc = spark.sparkContext
+    return {"master": sc.master, "default_parallelism": sc.defaultParallelism}
 
 
 def _loadavg() -> list[float] | None:

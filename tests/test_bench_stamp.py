@@ -110,3 +110,11 @@ def test_mid_run_contention_flags_via_after_loadavg():
     assert b._contaminated([0.1, 0.1, 0.1], [t + 0.01, 0.0, 0.0])
     assert not b._contaminated([0.1, 0.1, 0.1], None)  # unknown end load
     assert not b._contaminated([0.1, 0.1, 0.1], [])
+
+
+def test_session_stamp_reports_master_and_parallelism(spark):
+    # Stamped next to load_contaminated: a run that ignored its CPUs shows.
+    sc = spark.sparkContext
+    stamp = _bench()._session_stamp(spark)
+    assert stamp == {"master": sc.master, "default_parallelism": sc.defaultParallelism}
+    assert list(stamp) == ["master", "default_parallelism"] and stamp["default_parallelism"] >= 1
