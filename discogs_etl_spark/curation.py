@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from discogs_etl_spark.session import local_frame
+
 
 def dedup_corpus(
     spark: SparkSession,
@@ -126,7 +128,8 @@ def dedup_corpus(
         raise ValueError(f"unknown dedup method {method!r}; use 'exact' or 'minhash'")
     n_in = df.count()
     n_out = survivors.count()
-    report = spark.createDataFrame(
+    report = local_frame(
+        spark,
         [
             (
                 method,
@@ -247,7 +250,8 @@ def dedup_media(
     ).drop(tid, tpay)
     n_in = df.count()
     n_out = survivors.count()
-    report = spark.createDataFrame(
+    report = local_frame(
+        spark,
         [
             (
                 "phash",

@@ -5,12 +5,13 @@ organizes them into latest-per-(month, type), then processes each dump
 STRICTLY SEQUENTIALLY on one thread, scaling out only by launching whole
 containers per run (reference §3.3: Lambda / AWS Batch, 2 vCPU each).
 
-Spark-shaped: the catalog is a DataFrame (sources.manifest), each dump is
-an independent map-only job (gzip is unsplittable → intra-file parallelism
-is impossible anyway, exactly the reference's constraint), and dumps run
-CONCURRENTLY — a thread pool submits per-dump jobs to the shared scheduler,
-which is how one Spark application saturates a cluster with many
-single-task file reads.  Checksum verification (reference
+Spark-shaped: the latest-per-(month, type) pick is plain driver-side
+Python over a few filenames (sources.manifest — no Spark job), each dump
+is an independent map-only job (gzip is unsplittable → intra-file
+parallelism is impossible anyway, exactly the reference's constraint),
+and dumps run CONCURRENTLY — a thread pool submits per-dump jobs to the
+shared scheduler, which is how one Spark application saturates a cluster
+with many single-task file reads.  Checksum verification (reference
 process.py:95-173) is preserved as an audit record per dump, not an
 inline side effect.
 """
@@ -25,7 +26,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from discogs_etl_spark.lake import ingest_dump_to_lake
-from discogs_etl_spark.sources.manifest import dumps_catalog, organize_dumps
+from discogs_etl_spark.session import local_frame
+from discogs_etl_spark.sources.manifest import catalog_entries, checksum_map, latest_dumps
 
 
 @dataclass(frozen=True)
@@ -240,30 +242,32 @@ def backfill(
     from all dumps across the cluster.  The reference's month-by-month
     serial loop (run.py:28-41) becomes wall-clock-bounded by the LARGEST
     dump instead of the SUM of dumps."""
-    catalog = dumps_catalog(spark, dump_paths)
-    chosen = organize_dumps(catalog, checksums)
-    rows = chosen.collect()  # catalog rows, not data — always tiny
-    expected = {r["filename"]: r["checksum"] for r in rows} if checksums is not None else {}
+    expected = (
+        checksum_map(checksums.select("filename", "checksum").collect())
+        if checksums is not None
+        else {}
+    )
     path_by_name = {os.path.basename(p): p for p in dump_paths}
 
-    def run_one(row) -> DumpResult:
-        path = path_by_name[row["filename"]]
+    def run_one(entry) -> DumpResult:
+        path = path_by_name[entry.filename]
         sha = ok = None
         if verify_checksums:
             sha = _sha256_file(path)
-            exp = expected.get(row["filename"])
+            exp = expected.get(entry.filename)
             ok = (sha.lower() == exp.lower()) if exp else None
         lake_path = ingest_dump_to_lake(spark, path, lake_root)
-        return DumpResult(row["filename"], row["data_type"], lake_path, sha, ok)
+        return DumpResult(entry.filename, entry.data_type, lake_path, sha, ok)
 
     with ThreadPoolExecutor(max_workers=max_concurrent_dumps) as pool:
-        return list(pool.map(run_one, rows))
+        return list(pool.map(run_one, latest_dumps(catalog_entries(dump_paths))))
 
 
 def audit_table(spark: SparkSession, results: list[DumpResult]) -> DataFrame:
     """Checksum/landing audit as a DataFrame (the reference only logs;
     SURVEY.md §2.1 S8 says record instead)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r.filename, r.data_type, r.lake_path, r.sha256, r.checksum_ok)
             for r in results

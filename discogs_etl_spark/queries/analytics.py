@@ -27,6 +27,7 @@ from discogs_etl_spark.queries._util import (
     sql_dsum,
 )
 from discogs_etl_spark.registry import register
+from discogs_etl_spark.session import local_frame
 from discogs_etl_spark.tables import load
 
 
@@ -5379,7 +5380,8 @@ def join_range_band_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Non-overlapping, gap-free bands are the stated contract (each order
     matches exactly one tier) — revenue then partitions exactly."""
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("budget", 0.0, 50_000.0),
             ("standard", 50_000.0, 150_000.0),
@@ -9479,9 +9481,7 @@ def supplier_greedy_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((rnd, int(top["s"]), int(top["gain"])))
         newly = sp.where(F.col("s") == int(top["s"])).select("p")
         covered = newly if covered is None else covered.unionAll(newly).distinct()
-    return sp.sparkSession.createDataFrame(
-        rows, "round int, l_suppkey bigint, parts_added bigint"
-    )
+    return local_frame(spark, rows, "round int, l_suppkey bigint, parts_added bigint")
 
 
 def _modularity_oracle() -> str:

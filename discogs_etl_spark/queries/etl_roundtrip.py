@@ -751,7 +751,7 @@ _AUDIT_ARTISTS_SHA = _sha256_hex(_AUDIT_ARTISTS_GZ)
 def backfill_audit_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `backfill` CLI verb's composition END TO END (cli.py:29-50):
     dumps → catalog → organize (latest per month, checksum manifest
-    broadcast-joined) → threaded ingest into the partitioned lake →
+    attached by filename) → threaded ingest into the partitioned lake →
     ``audit_table`` report — the one user-facing verb whose GLUE
     (pipeline.backfill + audit_table, reference run.py:20-41 +
     s3.py:292-424) ran on local tests only until this query (r17
@@ -765,11 +765,11 @@ def backfill_audit_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     path.  ``sf_dir`` is unused — ETL-plane fixture input, uniform
     registry signature.
 
-    Scale: the catalog/organize stage is metadata-sized (one row per
-    dump file; window argmax + broadcast manifest join — the S11 plan),
-    and each dump ingests as an independent Spark job from a thread
-    pool, so a month-by-month backfill is wall-clock-bounded by the
-    largest dump, not the sum."""
+    Scale: the catalog/organize stage is metadata-sized (one entry per
+    dump file, picked on the driver with no Spark job — the S11 plan;
+    the report itself is a ``LocalRelation``), and each dump ingests as
+    an independent Spark job from a thread pool, so a month-by-month
+    backfill is wall-clock-bounded by the largest dump, not the sum."""
     from discogs_etl_spark.pipeline import audit_table, backfill
     from discogs_etl_spark.sources.manifest import parse_checksum_manifest
 

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from discogs_etl_spark.queries._util import half_up_long
 from discogs_etl_spark.registry import register
+from discogs_etl_spark.session import local_frame
 from discogs_etl_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -4476,8 +4477,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s3 = F.replace(s2, F.lit(f" {a}  {b} "), F.lit(f" {a}_{b} "))
         texts = texts.select(F.trim(F.replace(s3, F.lit("  "), F.lit(" "))).alias("t"))
-    return spark.createDataFrame(
-        rules, "step int, token_a string, token_b string, pair_count bigint"
+    return local_frame(
+        spark, rules, "step int, token_a string, token_b string, pair_count bigint"
     )
 
 
@@ -7442,9 +7443,7 @@ def pack_efficiency_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").select(
         F.size(F.split("text", " ")).alias("n_tok")
     )
-    sizes = load(spark, sf_dir, "documents").sparkSession.createDataFrame(
-        [(64,), (128,), (256,)], "ctx int"
-    )
+    sizes = local_frame(spark, [(64,), (128,), (256,)], "ctx int")
     x = d.crossJoin(F.broadcast(sizes))
     chunks = F.ceil(F.col("n_tok") / F.col("ctx"))
     return x.groupBy(F.col("ctx").cast("bigint").alias("context_size")).agg(
@@ -7639,9 +7638,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("j")
         )
     )
-    marks = load(spark, sf_dir, "documents").sparkSession.createDataFrame(
-        [(0.2,), (0.3,), (0.5,), (0.7,)], "thr double"
-    )
+    marks = local_frame(spark, [(0.2,), (0.3,), (0.5,), (0.7,)], "thr double")
     return (
         jp.crossJoin(F.broadcast(marks))
         .groupBy(F.col("thr").alias("threshold"))

@@ -14,15 +14,26 @@ unchanged:
 - Arrow-backed Python interop (Pandas UDFs are the only Python on the hot
   path anywhere in this engine).
 - UTC session timezone so timestamp semantics are environment-independent.
+
+``local_frame`` is the one way the engine turns driver-side Python rows
+into a DataFrame (catalogs, audit/report rows, constant tables).
+``createDataFrame(<list>)`` plans as ``parallelize`` →
+``applySchemaToPythonRDD``, so every action on such a frame runs
+``defaultParallelism`` Python tasks whatever its row count; a frame
+built from a ``pyarrow.Table`` is a ``LocalRelation`` (with or without
+the Arrow conf), and projections/filters over it fold at optimisation
+time, so ``collect()`` runs no job.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-__all__ = ["get_spark", "host_fingerprint", "tune_for_correctness"]
+__all__ = ["get_spark", "host_fingerprint", "local_frame", "tune_for_correctness"]
 
 
 def host_fingerprint() -> dict:
@@ -129,3 +140,19 @@ def tune_for_correctness(spark: SparkSession) -> SparkSession:
     # changes WHICH compiled form runs, never what it computes.
     spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> DataFrame:
+    """Driver-side rows → a ``LocalRelation`` DataFrame with exactly the
+    DDL ``schema``, built through a ``pyarrow.Table`` (see the module
+    docstring for why)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 
 from discogs_etl_spark.queries._util import dec
 from discogs_etl_spark.registry import register
+from discogs_etl_spark.session import local_frame
 
 # The on-disk parquet stores TIMESTAMP(MICROS) with isAdjustedToUTC=false
 # (verified via the parquet footer at every sf), which Spark reads as
@@ -876,7 +877,8 @@ def stream_events_lake_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
 
     if not glob.glob(os.path.join(out, "year=*", "month=*", "*.parquet")):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "year int, month string, event_type string,"
             " n_events bigint, sum_value double",

@@ -644,23 +644,26 @@ PLAN_PINS: dict[str, dict[str, int]] = {
     # -- fourth tier (API_SURFACE, r17): the user-facing curation API
     #    compositions end-to-end.  The dedup APIs share one shape: one
     #    parquet payload scan, a localCheckpointed hash/signature stage
-    #    (scan_rdd x3 across pair generation and member expansion), one
+    #    (scan_rdd x2 across pair generation and member expansion), one
     #    BHJ survivor join, and the audited one-row broadcast report
-    #    attach (bnlj).  search_corpus is the checkpointed-postings BM25
+    #    attach (bnlj) — the report is a driver-built LocalRelation
+    #    (session.local_frame), so it scans as local_scan, not an RDD.  search_corpus is the checkpointed-postings BM25
     #    composition (scan_rdd x4) with the hit-scoped df join + 1-row
     #    corpus-stats attach; profile_table is deliberately a SINGLE
     #    parquet scan — a second scan would mean the one-pass profile
     #    regressed to per-column rescans.
-    "curation_dedup_corpus": {"scan_parquet": 1, "scan_rdd": 3, "bhj": 1, "bnlj": 1},
-    "curation_dedup_media": {"scan_parquet": 1, "scan_rdd": 3, "bhj": 1, "bnlj": 1},
-    "curation_dedup_media_capped": {"scan_parquet": 1, "scan_rdd": 3, "bhj": 1, "bnlj": 1},
+    "curation_dedup_corpus": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
+    "curation_dedup_media": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
+    "curation_dedup_media_capped": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
     "curation_search_corpus": {"scan_rdd": 4, "bhj": 2, "bnlj": 1},
     "curation_profile_table": {"scan_parquet": 1},
-    # r18: the backfill CLI verb's audit report — driver-local results
-    # scan only (the ingest jobs are actions inside pipeline.backfill,
-    # not part of the returned plan); a distributed join against the
-    # lake appearing here would mean the audit's shape regressed.
-    "backfill_audit_table": {"scan_rdd": 1},
+    # the backfill CLI verb's audit report — driver-local results scan
+    # only, a LocalRelation built by session.local_frame (the ingest
+    # jobs are actions inside pipeline.backfill, not part of the
+    # returned plan); a distributed join against the lake, or an RDD
+    # scan of a list-built frame, appearing here means the audit's
+    # shape regressed.
+    "backfill_audit_table": {"local_scan": 1},
     # -- headline bench set + fixed scale-killers
     "corpus_curate_pipeline": {"scan_parquet": 1},
     "dedup_cc_starcontraction": {"scan_rdd": 2},
