@@ -1,5 +1,6 @@
 #!/usr/bin/env python
-"""Executed-plan fingerprints: the machine-checkable plan gate's extractor.
+"""The plan gate's extractor: executed-plan fingerprints for the pinned
+set, and the nested-loop audit for every registered query.
 
 Answers are hash-gated (tests/test_oracle.py) and wall-times are
 ratio-gated (scripts/timing_compare.py), but both catch a Catalyst
@@ -30,6 +31,10 @@ dict of node counts that tests/test_plans.py pins per query:
 * ``cache`` — InMemoryTableScan count; cached-relation plans are walked
   too (once per distinct cache), so nothing hides under a cache().
 
+The pins cover a chosen set; the rest of the registry is covered by the
+nested-loop audit (``ALLOWED`` + ``nested_loop_counts`` below), which
+tests/test_oracle.py runs on every query it builds.
+
 The fingerprint is taken at a FIXED condition (sf dir + the tuned test
 session: local[8], shuffle.partitions=8, AQE on) — AQE's runtime
 broadcast conversions depend on observed sizes, so the pins are
@@ -51,7 +56,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -94,8 +98,8 @@ SCALE_STORY = (
     # width-filter join on the bucket key BEFORE candidate generation —
     # a rewrite that silently drops the filter reverts to uncapped
     # O(width²) pair emission while values stay plausible at fixture
-    # scale, so the shape (and the filter's condition text, via
-    # condition_texts) must redden the plan gate, not just the value gate.
+    # scale, so the shape must redden the plan gate, not just the value
+    # gate.
     "dedup_minhash_capped_pairs",
     "multimodal_phash_capped_pairs",
 )
@@ -156,9 +160,9 @@ API_SURFACE = (
 # adaptive subtree twice (== Final Plan == / == Initial Plan == pairs,
 # nested and indentation-restarting under cached relations), and
 # whole-stage-codegen prefixes defeat line parsers.  The object tree has
-# each node exactly once, exposes conditions as expressions (rendered
-# via .sql() — stable, no expr ids), and lets intent pick the plan per
-# AdaptiveSparkPlanExec: initialPlan (static Catalyst strategy,
+# each node exactly once, exposes a join's condition as an Option (the
+# nested-loop audit asks only whether one is defined), and lets intent
+# pick the plan per AdaptiveSparkPlanExec: initialPlan (static Catalyst strategy,
 # cache-state-immune) or executedPlan (runtime strategy, after an
 # action).
 _CLS_KEYS = {
@@ -178,11 +182,18 @@ def _walk(jplan, executed: bool, visited: set):
     """Yield (simpleClassName, node) for every DISTINCT physical node
     reachable from ``jplan``: through adaptive plans (final if
     ``executed`` else initial), query stages, cached relations
-    (InMemoryTableScan -> cachedPlan), and children.  ``Reused*``
+    (InMemoryTableScan -> cachedPlan), subquery plans held in a node's
+    expressions (``subqueries()`` — a nested loop inside a scalar
+    subquery is still a nested loop), and children.  ``Reused*``
     wrappers are skipped (their target is reached through its owner),
     and a global visited set on SparkPlan.id guarantees a shared
     subtree (one cached plan scanned from several places) counts once —
-    physically it computes once."""
+    physically it computes once.
+
+    Subqueries are read per node, not once from the root: under AQE the
+    root is an AdaptiveSparkPlanExec, a leaf whose ``subqueriesAll()``
+    is empty, so the subquery plans are only reachable from the node
+    whose expression holds them (a FilterExec for a scalar subquery)."""
     cls = jplan.getClass().getSimpleName()
     if cls == "AdaptiveSparkPlanExec":
         child = jplan.executedPlan() if executed else jplan.initialPlan()
@@ -200,27 +211,20 @@ def _walk(jplan, executed: bool, visited: set):
     yield cls, jplan
     if cls == "InMemoryTableScanExec":
         yield from _walk(jplan.relation().cachedPlan(), executed, visited)
-    children = jplan.children()
-    for i in range(children.size()):
-        yield from _walk(children.apply(i), executed, visited)
+    for seq in (jplan.subqueries(), jplan.children()):
+        for i in range(seq.size()):
+            yield from _walk(seq.apply(i), executed, visited)
 
 
 def iter_physical_nodes(df, *, executed: bool):
-    """All distinct physical nodes of ``df``'s prepared plan, INCLUDING
-    subquery plans (``subqueriesAll`` — a nested loop inside a scalar
-    subquery is still a nested loop).  ``executed=True`` runs the
-    DataFrame first so every adaptive plan reports its FINAL tree;
-    ``executed=False`` reads initial plans — the static Catalyst
-    strategy, identical whether or not a builder's internal actions
-    pre-materialized cached stages."""
+    """All distinct physical nodes of ``df``'s prepared plan, subquery
+    plans included.  ``executed=True`` runs the DataFrame first so every
+    adaptive plan reports its FINAL tree; ``executed=False`` reads
+    initial plans — the static Catalyst strategy, identical whether or
+    not a builder's internal actions pre-materialized cached stages."""
     if executed:
         df.collect()
-    root = df._jdf.queryExecution().executedPlan()
-    visited: set = set()
-    yield from _walk(root, executed, visited)
-    subs = root.subqueriesAll()
-    for i in range(subs.size()):
-        yield from _walk(subs.apply(i), executed, visited)
+    yield from _walk(df._jdf.queryExecution().executedPlan(), executed, set())
 
 
 def fingerprint(df, *, executed: bool = True) -> dict[str, int]:
@@ -233,370 +237,120 @@ def fingerprint(df, *, executed: bool = True) -> dict[str, int]:
     return counts
 
 
-def _subtree_identity(jnode) -> tuple[list[str], list[str]]:
-    """``(leaves, shape)`` of the subtree under a physical node — the
-    IDENTITY of a nested-loop node beyond its mere presence (r13
-    review): two condition-less crosses count the same, but a 1-row
-    scalar-aggregate cross over ``range`` and a data-sized pure cross
-    over a parquet table have different leaf sets, so recording them
-    makes a like-for-like count substitution visible round-over-round.
-
-    ``leaves`` — sorted leaf-source descriptors.  Parquet scans name
-    their root paths; other known leaf classes reduce to their kind (an
-    RDD scan's string form carries session expr-ids, so only the class
-    is artifact-stable); a zero-children node of an UNRECOGNIZED class
-    (e.g. a DSv2 BatchScanExec) still contributes ``other:<ClassName>``
-    so unknown sources carry identity instead of silently dropping out
-    of the leaf set (r13 ADVICE — a swap between two unrecognized
-    source kinds must not be invisible).
-
-    ``shape`` — the subtree's node-class MULTISET, rendered as sorted
-    ``"ClassName:count"`` strings over every distinct physical node
-    (wrapper kinds — Adaptive/QueryStage/Reused — excluded; class
-    names only, so the rendering is expr-id-free and artifact-stable),
-    plus ONE trailing ``"tree:<skeleton>"`` entry carrying the ORDERED
-    class-name tree (``Cls(child,child)`` nesting, same wrapper rules).
-    This is the r13 residual's closure (verdict r13 task #2): a
-    condition-less cross substitution that preserves BOTH the count
-    and the exact leaf sets still differs in the operators BETWEEN
-    the leaves and the cross — a scalar aggregate feeding a broadcast
-    is a different class multiset than a projection feeding one.  The
-    skeleton (r14 review) closes the multiset's own blind spot: a
-    rearrangement that PRESERVES the class multiset — an operator
-    moved from the build side to the stream side, or sibling operators
-    exchanged between branches — changes the ordered tree even though
-    every count is identical.  Remaining residual, documented rather
-    than papered over: expression TEXT inside non-nested-loop
-    operators is not compared (a changed filter predicate under an
-    unchanged skeleton is invisible here) — condition text is compared
-    only on the nested-loop nodes themselves, and value regressions
-    from changed expressions are the correctness gate's jurisdiction,
-    not the plan gate's.
-
-    Own traversal, NOT ``_walk``: _walk's ``Reused*`` early-return is
-    correct for a global walk (the target is reached through its
-    owner) but wrong for an ISOLATED subtree walk — a cross whose side
-    is a ReusedExchange would contribute zero leaves, truncating the
-    identity exactly where it matters (second r13 review pass).  Here
-    a ``Reused*`` wrapper is followed into the plan it reuses: the
-    identity question is "what sources feed this node", and a reused
-    exchange is fed by the original's sources."""
-    out: list[str] = []
-    cls_counts: dict[str, int] = {}
-    stack = [jnode]
-    seen: set = set()
-    while stack:
-        n = stack.pop()
-        cls = n.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(n.initialPlan())
-            continue
-        if cls.endswith("QueryStageExec"):
-            stack.append(n.plan())
-            continue
-        if cls.startswith("Reused"):
-            # ReusedExchangeExec / ReusedSubqueryExec are leaf wrappers
-            # whose constructor child is the reused plan.
-            stack.append(n.child())
-            continue
-        node_id = n.id()
-        if node_id in seen:
-            continue
-        seen.add(node_id)
-        cls_counts[cls] = cls_counts.get(cls, 0) + 1
-        children = n.children()
-        if cls == "FileSourceScanExec":
-            paths = n.relation().location().rootPaths()
-            names = sorted(
-                paths.apply(i).getName() for i in range(paths.size())
-            )
-            out.append("parquet:" + ",".join(names))
-        elif cls == "RDDScanExec":
-            out.append("rdd")
-        elif cls == "LocalTableScanExec":
-            out.append("local")
-        elif cls == "RangeExec":
-            out.append("range")
-        elif cls == "InMemoryTableScanExec":
-            stack.append(n.relation().cachedPlan())
-        elif children.size() == 0:
-            out.append(f"other:{cls}")
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    shape = sorted(f"{c}:{k}" for c, k in cls_counts.items())
-    shape.append("tree:" + _skeleton(jnode))
-    return sorted(out), shape
-
-
-def _skeleton(jnode) -> str:
-    """Ordered class-name rendering of a physical subtree —
-    ``Cls(child,child)`` — with the same wrapper rules as the multiset
-    walk (Adaptive → initialPlan, QueryStage → plan, Reused* followed
-    into the reused plan, InMemoryTableScan → cachedPlan).  Child order
-    is constructor order, which is deterministic for a given plan; only
-    class simple names appear, so the string is expr-id-free and
-    artifact-stable (verified byte-identical across fresh sessions,
-    same standard as the rest of the sweep schema).  Unlike the
-    multiset walk there is no node-id dedup: a subtree reached through
-    two Reused wrappers renders at both sites, which is exactly the
-    ordered identity we want, and physical plans are acyclic so the
-    recursion terminates."""
-    n = jnode
-    while True:
-        cls = n.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            n = n.initialPlan()
-        elif cls.endswith("QueryStageExec"):
-            n = n.plan()
-        elif cls.startswith("Reused"):
-            n = n.child()
-        else:
-            break
-    if cls == "InMemoryTableScanExec":
-        return f"{cls}({_skeleton(n.relation().cachedPlan())})"
-    children = n.children()
-    if children.size() == 0:
-        return cls
-    inner = ",".join(_skeleton(children.apply(i)) for i in range(children.size()))
-    return f"{cls}({inner})"
+# The registry-wide nested-loop audit.  A nested-loop join can enter a
+# plan with no crossJoin anywhere in the source: an OR-of-equalities
+# join condition (the recsys_holdout_hitrate bug, 111 s at sf0.1 until
+# rewritten as a union of two hash equi-joins), a non-equi band
+# predicate, any condition Catalyst cannot decompose into hash-join
+# keys.  tests/test_oracle.py counts, on every registered query it
+# builds, the BroadcastNestedLoopJoin / CartesianProduct nodes that
+# carry a join condition, and asserts the count EQUALS the query's
+# allowance below (0 if unlisted) — so a new unaudited loop and a stale
+# allowance both fail on the query they belong to — and that the plan
+# holds no CartesianProductExec at all.  The fix for a failure is a
+# plan rewrite (decompose the OR into a union of equi-joins, block or
+# bucket the band join); an entry here is only for a build side with a
+# written O(1)/tiny bound, and "it was green" is not a reason.
+#
+# Condition-less nested loops (``Join condition: None``) are the
+# deliberate broadcast-hinted scalar-aggregate crossJoin pattern and
+# are not counted here.  Dropping their per-query count from the gate
+# is deliberate: every such cross is hint-checked at source level
+# (tests/test_plans.py::test_every_crossjoin_is_broadcast_hinted), and
+# the pinned plans (PLAN_PINS) still pin ``bnlj``.
+#
+# name -> (exact conditioned count, why the build side is bounded).
+# Audit basis: source inspection of every join below plus its sf0.1
+# wall; four bound classes appear —
+#   scalar:    the broadcast side is a 1-row/tiny aggregate (a threshold,
+#              a max date, bin edges) and the "condition" is a filter
+#              Catalyst folded into the join
+#   fixed:     the broadcast side is a fixed-size slice (anchor set,
+#              query set) independent of corpus size
+#   calendar:  a self-join over a day/week rollup bounded by the time
+#              span, not the corpus (pairs grow with years^2, not rows)
+#   baseline:  the two DOCUMENTED all-pairs exactness baselines
+#              (timing_compare.BASELINE_TAIL; weak_count=2)
+ALLOWED: dict[str, tuple[int, str]] = {
+    "join_range_band_pricing": (
+        1,
+        "DOCUMENTED non-equi band lookup: broadcast side is the 4-row "
+        "price-band table (test_range_band_pricing_is_deliberate_bnlj "
+        "pins exactly this shape)",
+    ),
+    "contrastive_pair_mining": (1, "fixed: broadcast mini-batch anchor set"),
+    "dedup_embedding_cosine": (
+        1,
+        "baseline: the deliberate all-pairs exact-cosine ground truth "
+        "(BASELINE_TAIL; bucketed twin dedup_embedding_bucketed is the "
+        "production path)",
+    ),
+    "embedding_triplet_check": (
+        1,
+        "fixed: positive/negative selection joins against a fixed anchor "
+        "slice (0.6 s at sf0.1)",
+    ),
+    "q11_important_stock": (1, "scalar: 1-row value-share threshold"),
+    "q22_global_sales_opportunity": (1, "scalar: 1-row avg-acctbal threshold"),
+    "sample_balance_classes": (1, "scalar: 1-row min-class-size m"),
+    "similarity_ann_multiprobe_recall": (
+        1,
+        "fixed: broadcast query set, self-exclusion filter in-condition",
+    ),
+    "similarity_ann_recall": (1, "fixed: broadcast query set, self-exclusion"),
+    "similarity_int8_recall": (2, "fixed: broadcast query set, self-exclusion"),
+    "similarity_ivf_topk": (1, "fixed: broadcast query set, self-exclusion"),
+    "similarity_matryoshka_recall": (
+        2,
+        "fixed: broadcast query set, self-exclusion",
+    ),
+    "similarity_topk_bruteforce": (
+        1,
+        "fixed: broadcast query set, self-exclusion",
+    ),
+    "stats_psi_value_drift": (2, "scalar: broadcast decile-edge table, once per compared side"),
+    "stats_survival_km_repurchase": (
+        1,
+        "scalar: broadcast 1-row censoring max-date; the condition is the "
+        "folded event/censor CASE filter",
+    ),
+    "stats_theil_sen_trend": (
+        1,
+        "calendar: pairwise slopes over the per-user DAILY rollup — pair "
+        "count grows with span^2, not corpus rows (the Theil-Sen "
+        "estimator is pairwise by definition)",
+    ),
+    "text_search_bm25_pruned_recall": (
+        2,
+        "scalar: broadcast 1-row median document frequency",
+    ),
+    "text_search_bm25_pruned_topk": (
+        2,
+        "scalar: broadcast 1-row median document frequency (index build "
+        "and query-side reuse)",
+    ),
+    "users_activity_bitmask": (1, "scalar: broadcast 1-row epoch day d0"),
+    "whale_retention_jaccard": (
+        1,
+        "calendar: week x later-week pairs over the weekly whale rollup — "
+        "bounded by span^2 weeks",
+    ),
+}
 
 
-def nested_loop_nodes(df) -> list[dict]:
-    """Every BroadcastNestedLoopJoin / CartesianProduct node in the
-    STATIC physical plan, as ``{"cond": <Expression.sql() or "None">,
-    "leaves": [<leaf descriptor>, ...], "shape": ["Cls:count", ...]}``.
-
-    The discriminator the full-registry sweep keys on: a condition-less
-    Cross nested loop is the deliberate broadcast-hinted scalar
-    crossJoin pattern (every source-level crossJoin is hint-checked by
-    test_every_crossjoin_is_broadcast_hinted), while a nested loop WITH
-    a condition is a real join Catalyst could not plan as a hash join —
-    the r10 recsys_holdout_hitrate bug class (an OR-of-equalities
-    condition nested-looping), unless it is a documented non-equi band
-    join.  ``leaves`` gives the condition-less class an identity the
-    bare count lacks; ``shape`` (the subtree node-class multiset plus
-    a trailing ordered-skeleton entry) makes even a same-count
-    same-leaves substitution or a multiset-preserving rearrangement
-    visible."""
-    out = []
+def nested_loop_counts(df) -> tuple[int, int]:
+    """``(conditioned, cartesian)`` over ``df``'s STATIC plan:
+    BroadcastNestedLoopJoin / CartesianProduct nodes that carry a join
+    condition, and CartesianProductExec nodes of any kind.  Initial
+    (pre-AQE) plans: nested-loop selection is a static Catalyst
+    decision, visible without executing the DataFrame."""
+    conditioned = cartesian = 0
     for cls, node in iter_physical_nodes(df, executed=False):
         if cls not in ("BroadcastNestedLoopJoinExec", "CartesianProductExec"):
             continue
-        cond = node.condition()
-        leaves, shape = _subtree_identity(node)
-        out.append(
-            {
-                "cond": _norm_sql(cond.get().sql()) if cond.isDefined() else "None",
-                "leaves": leaves,
-                "shape": shape,
-            }
-        )
-    return out
-
-
-def _norm_sql(text: str) -> str:
-    """Normalize session-dependent generated aliases in a rendered
-    expression.  CommonExpressionRef aliases (``_common_expr_N``) number
-    from a SESSION-global counter, so the same plan renders different N
-    across builds; the regex collapses the counter wherever it appears —
-    filters, aggregates, windows, generators — not just project lists
-    (r17 ADVICE: a CSE ref surfacing inside any other captured text
-    would otherwise make that capture session-dependent)."""
-    return re.sub(r"_common_expr_\d+", "_common_expr_#", text)
-
-
-def _seq_sql(jseq) -> list[str]:
-    """Render a Scala Seq[Expression] via .sql() (stable, no expr ids;
-    session-global generated aliases normalized by _norm_sql)."""
-    return [_norm_sql(jseq.apply(i).sql()) for i in range(jseq.size())]
-
-
-def condition_texts(df) -> list[str]:
-    """Sorted descriptors of every Filter condition and every hash-join
-    key set (+ residual condition) in the STATIC plan — the expression
-    surface plansweep_compare was blind to on non-nested-loop operators
-    (r14 verdict residual / r15 task #5).  Nested-loop nodes are
-    EXCLUDED here: their condition text already has its own identity,
-    diff, and ack kinds.
-
-    Captured only for the PLAN_PINS gate set (the sweep calls this for
-    ``pinned_names()`` queries), so the cost is bounded and the gate
-    covers exactly the plans whose shape is already pinned: a predicate
-    rewrite there (a loosened filter, a dropped join key, a changed
-    residual) flags round-over-round even though the node counts and
-    join strategies are identical.
-
-    Join keys are captured as jointly-sorted ``left=right`` PAIRS, not
-    independently-sorted key lists (r15 ADVICE #2): sorting leftKeys
-    and rightKeys separately destroys positional pairing, so a rewrite
-    that re-pairs the equi-join (left key i now equated to a DIFFERENT
-    right key) yielded an identical descriptor — the exact
-    dropped/changed-join-key class this capture exists to catch."""
-    return pinned_captures(df)[0]
-
-
-def aggregate_texts(df) -> list[str]:
-    """Sorted descriptors of every aggregate node's grouping keys and
-    aggregate expressions in the STATIC plan — closes the remaining
-    pinned-expression blindness (r16 verdict residual #5: expression
-    text outside Filter/hash-join nodes was uncompared): a pinned query
-    whose node counts, filter conditions, and join keys are all
-    identical can still silently change WHAT it aggregates (sum -> avg,
-    a lost count-distinct, a regrouped key).  Captured only for the
-    PLAN_PINS gate set, like ``condition_texts``, and diffed
-    round-over-round by plansweep_compare under the ``pinned_agg`` ack
-    kind.
-
-    Rendering notes (probed on Spark 4.1): ``.sql()`` on grouping and
-    aggregate expressions is expr-id-free and deterministic across plan
-    builds; partial and final stages of one logical aggregate render
-    IDENTICAL texts (mode is not part of ``.sql()``), so a lost
-    map-side partial aggregation shows as a multiset-count change, not
-    a text change — both redden."""
-    return pinned_captures(df)[1]
-
-
-def window_sort_texts(df) -> list[str]:
-    """Sorted descriptors of every Window / WindowGroupLimit / Sort /
-    TakeOrderedAndProject node in the STATIC plan — the last slice of
-    the r16 pinned-expression blindness (residual #5): with filters,
-    join keys, and aggregates captured, a pinned plan could still
-    silently change its window functions (rank -> row_number, a
-    re-partitioned OVER clause, a dropped frame bound), its sort keys
-    or direction/null ordering, or a top-k limit.  Captured only for
-    the PLAN_PINS gate set, like ``condition_texts``, and diffed
-    round-over-round by plansweep_compare under the ``pinned_window``
-    ack kind.
-
-    Descriptor shapes (order spec kept in ORDER — it is positional
-    semantics; partition spec and window expressions sorted — they are
-    sets):
-
-    - ``win:[partition]:[order]:[window exprs]``
-    - ``wgl:[partition]:[order]:[rank fn]:limit`` — the rank-based
-      group-limit pushdown; losing it reverts a top-k-per-group to a
-      full window sort.
-    - ``sort:[order]:global`` — ``global=False`` is a per-partition
-      sort (e.g. SMJ input); a global becoming local changes result
-      order semantics.
-    - ``topk:[order]:limit``
-
-    Rendering notes (probed on Spark 4.1 across the full pin set, two
-    independent plan builds each): ``.sql()`` on SortOrder renders
-    ``key ASC NULLS FIRST``-style text with no expr ids; window
-    expressions render the full OVER clause including frame bounds;
-    generated intermediate names (``_w0``) number deterministically
-    per-query."""
-    return pinned_captures(df)[2]
-
-
-def projection_texts(df) -> list[str]:
-    """Sorted descriptors of every Project / Generate / Expand / bare
-    Limit node in the STATIC plan — the LAST uncompared
-    expression-bearing classes in a pinned plan (the precisely-stated
-    residual after the r17 aggregate and window/sort captures): a
-    changed projection arithmetic, a swapped generator, a regrouped
-    Expand, or a changed bare ``.limit(n)`` under identical node counts
-    was still invisible to the plan gate.  Captured only for the
-    PLAN_PINS gate set and diffed under the ``pinned_proj`` ack kind.
-
-    Descriptor shapes (project lists kept in ORDER — output column
-    order is semantics):
-
-    - ``proj:[expr AS name, ...]``
-    - ``gen:[generator sql]:outer`` (outer=True keeps empty-generator
-      rows — losing it silently drops rows)
-    - ``expand:n:[proj0; proj1; ...]`` (grouping-set/cube lattices)
-    - ``limit:Class:n`` for CollectLimit / GlobalLimit / LocalLimit
-      (TakeOrderedAndProject limits live in the window/sort capture)
-
-    Rendering probed on this Spark build: ``.sql()`` on project-list
-    expressions (including generated ``_groupingexpression`` aliases
-    and CASE chains) is expr-id-free and deterministic across plan
-    builds and JVM sessions."""
-    return pinned_captures(df)[3]
-
-
-def pinned_captures(
-    df,
-) -> tuple[list[str], list[str], list[str], list[str]]:
-    """One STATIC-plan walk producing all four pinned capture lists
-    ``(condition_texts, aggregate_texts, window_sort_texts,
-    projection_texts)`` — ``iter_physical_nodes`` is
-    py4j-roundtrip-heavy, so the sweep calls this once per pinned query
-    instead of four separate traversals."""
-    conds: list[str] = []
-    aggs: list[str] = []
-    wins: list[str] = []
-    projs: list[str] = []
-    for cls, node in iter_physical_nodes(df, executed=False):
-        if cls == "FilterExec":
-            conds.append(f"filter:{_norm_sql(node.condition().sql())}")
-        elif cls in (
-            "BroadcastHashJoinExec",
-            "SortMergeJoinExec",
-            "ShuffledHashJoinExec",
-        ):
-            pairs = ",".join(
-                sorted(
-                    f"{l}={r}"
-                    for l, r in zip(
-                        _seq_sql(node.leftKeys()), _seq_sql(node.rightKeys())
-                    )
-                )
-            )
-            cond = node.condition()
-            residual = _norm_sql(cond.get().sql()) if cond.isDefined() else ""
-            conds.append(f"join:[{pairs}]:{residual}")
-        elif cls in (
-            "HashAggregateExec",
-            "SortAggregateExec",
-            "ObjectHashAggregateExec",
-        ):
-            keys = ",".join(sorted(_seq_sql(node.groupingExpressions())))
-            exprs = ",".join(sorted(_seq_sql(node.aggregateExpressions())))
-            aggs.append(f"agg:[{keys}]:[{exprs}]")
-        elif cls == "WindowExec":
-            part = ",".join(sorted(_seq_sql(node.partitionSpec())))
-            order = ",".join(_seq_sql(node.orderSpec()))
-            exprs = ",".join(sorted(_seq_sql(node.windowExpression())))
-            wins.append(f"win:[{part}]:[{order}]:[{exprs}]")
-        elif cls == "WindowGroupLimitExec":
-            part = ",".join(sorted(_seq_sql(node.partitionSpec())))
-            order = ",".join(_seq_sql(node.orderSpec()))
-            rank = _norm_sql(node.rankLikeFunction().sql())
-            wins.append(f"wgl:[{part}]:[{order}]:[{rank}]:{node.limit()}")
-        elif cls == "SortExec":
-            order = ",".join(_seq_sql(node.sortOrder()))
-            # `global` is a Python keyword — getattr for the accessor.
-            wins.append(f"sort:[{order}]:{getattr(node, 'global')()}")
-        elif cls == "TakeOrderedAndProjectExec":
-            order = ",".join(_seq_sql(node.sortOrder()))
-            wins.append(f"topk:[{order}]:{node.limit()}")
-        elif cls == "ProjectExec":
-            # _common_expr_N normalization happens inside _seq_sql
-            # (probed: dedup_minhash_eval flipped _common_expr_0 ->
-            # _common_expr_2 on rebuild); the CSE STRUCTURE still shows
-            # as text shape.
-            text = ",".join(_seq_sql(node.projectList()))
-            projs.append(f"proj:[{text}]")
-        elif cls == "GenerateExec":
-            projs.append(
-                f"gen:[{_norm_sql(node.generator().sql())}]:{node.outer()}"
-            )
-        elif cls == "ExpandExec":
-            ps = node.projections()
-            rows = "; ".join(
-                ",".join(_seq_sql(ps.apply(i))) for i in range(ps.size())
-            )
-            projs.append(f"expand:{ps.size()}:[{rows}]")
-        elif cls in (
-            "CollectLimitExec",
-            "GlobalLimitExec",
-            "LocalLimitExec",
-        ):
-            projs.append(f"limit:{cls[:-4]}:{node.limit()}")
-    return sorted(conds), sorted(aggs), sorted(wins), sorted(projs)
+        conditioned += node.condition().isDefined()
+        cartesian += cls == "CartesianProductExec"
+    return conditioned, cartesian
 
 
 def pinned_names() -> list[str]:

@@ -31,15 +31,16 @@ name appears in ``_verified_min`` round after round, audit its plan by
 hand — recurring flag-and-clear is itself a signal.
 
 Instrument discipline (r11, learned the hard way): queries run in
-SORTED-NAME order, not registry order.  The registry leads with the
-round's rotating evidence window, so under registry order each round
-puts DIFFERENT queries in the cold early positions — first parquet
-scan, first shuffle, first python-worker spinup, C2-compiling codegen
-— and the round-over-round compare (scripts/timing_compare.py) then
-flags position artifacts as 2-30x "regressions" (measured: the same
-query 22.7 s at window position 29, 0.91 s mid-sweep, 3.4 s isolated).
-Sorted order pins every query to a stable position; the warmup below
-drains the biggest cold-start costs before the first timed query.
+SORTED-NAME order, not registry order.  The early positions in a sweep
+are cold — first parquet scan, first shuffle, first python-worker
+spinup, C2-compiling codegen — and whichever query lands there pays
+for them, so the round-over-round compare (scripts/timing_compare.py)
+flags position artifacts as 2-30x "regressions" whenever a query's
+position moves (measured: the same query 22.7 s at sweep position 29,
+0.91 s mid-sweep, 3.4 s isolated).  Sorted order pins every query to a
+position that registering or reordering other queries barely moves;
+the warmup below drains the biggest cold-start costs before the first
+timed query.
 """
 
 from __future__ import annotations

@@ -153,23 +153,20 @@ def compare(
     return problems
 
 
-def artifact_round(path: Path, prefix: str = "TIMINGS") -> int | None:
-    """Round number of a per-round artifact filename, or None if the
-    name is not of the ``{prefix}_r{N}.json`` form.  The ONE parser for
-    both discovery-sort and round-keyed lookups (plansweep_compare's
-    ADJUDICATED dict) — two regexes over the same filename is how a
-    sort key and a lookup key drift apart."""
-    m = re.fullmatch(rf"{re.escape(prefix)}_r(\d+)\.json", path.name)
+def artifact_round(path: Path) -> int | None:
+    """Round number of a ``TIMINGS_r{N}.json`` filename, or None if the
+    name is not of that form."""
+    m = re.fullmatch(r"TIMINGS_r(\d+)\.json", path.name)
     return int(m.group(1)) if m else None
 
 
-def newest_artifacts(root: Path, prefix: str = "TIMINGS") -> list[Path]:
-    """Per-round artifacts under ``root``, oldest first.  Shared by the
-    plansweep gate (prefix="PLANSWEEP") — import it, don't mirror it."""
+def newest_artifacts(root: Path) -> list[Path]:
+    """``TIMINGS_r{N}.json`` artifacts under ``root``, oldest first —
+    sorted by parsed round number, not lexicographically (r99 < r100)."""
     paths = [
         (r, p)
-        for p in root.glob(f"{prefix}_r*.json")
-        if (r := artifact_round(p, prefix)) is not None
+        for p in root.glob("TIMINGS_r*.json")
+        if (r := artifact_round(p)) is not None
     ]
     return [p for _, p in sorted(paths)]
 

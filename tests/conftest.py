@@ -1,15 +1,30 @@
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
 TESTDATA = "/root/testdata"
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
+
+
+def load_script(name: str):
+    """Import ``scripts/{name}.py`` (or the repo-root ``{name}.py``, e.g.
+    ``bench``) as a module — neither directory is a package."""
+    path = REPO / "scripts" / f"{name}.py"
+    if not path.exists():
+        path = REPO / f"{name}.py"
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")

@@ -11,17 +11,11 @@ running the actual bench belongs to the driver, not the suite.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
-REPO = Path(__file__).resolve().parent.parent
+from tests.conftest import load_script
 
 
 def _bench():
-    spec = importlib.util.spec_from_file_location("bench", REPO / "bench.py")
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return load_script("bench")
 
 
 def test_contamination_threshold_boundary():
@@ -63,14 +57,9 @@ def test_host_fingerprint_shape():
 def test_timing_compare_host_warning_is_not_a_gate(tmp_path, capsys):
     # The host-changed message is informational: two sweeps with
     # different _host stamps but identical timings must still PASS.
-    import importlib.util as iu
     import json
 
-    spec = iu.spec_from_file_location(
-        "timing_compare", REPO / "scripts" / "timing_compare.py"
-    )
-    tc = iu.module_from_spec(spec)
-    spec.loader.exec_module(tc)
+    tc = load_script("timing_compare")
     prev = {"q": 1.0, "_host": {"cpu_count": 32, "cpu_model": "A"}}
     cur = {"q": 1.0, "_host": {"cpu_count": 80, "cpu_model": "B"}}
     p, c = tmp_path / "TIMINGS_r98.json", tmp_path / "TIMINGS_r99.json"

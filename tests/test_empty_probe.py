@@ -20,12 +20,9 @@ disagree on e.g. ROLLUP over an empty table.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
 import pytest
 
-REPO = Path(__file__).resolve().parent.parent
+from tests.conftest import load_script
 
 # The r11 empty-input hardening wave — every query the r10 boundary map
 # recorded as erroring on zero-row inputs.  Queries whose empty path is
@@ -50,12 +47,7 @@ HARDENED = (
 
 
 def _probe_mod():
-    spec = importlib.util.spec_from_file_location(
-        "empty_probe", REPO / "scripts" / "empty_probe.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return load_script("empty_probe")
 
 
 @pytest.fixture(scope="module")

@@ -5,6 +5,11 @@ DuckDB SQL at sf0.01, then compare row count, column names, and an
 order-insensitive canonical value multiset (the moral equivalent of the
 driver's value hash).  Exact equality — no tolerances — because the query
 builders are written to be bit-deterministic (see registry.py).
+
+The same built DataFrame also feeds the registry-wide nested-loop audit
+(scripts/plan_fingerprint.py: ALLOWED, nested_loop_counts), so every
+registered query's static plan is checked on every run, at no extra
+build cost.
 """
 
 from __future__ import annotations
@@ -12,9 +17,12 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from discogs_etl_spark.registry import all_specs
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, load_script
+
+_PF = load_script("plan_fingerprint")
 
 
 class DriverHasherHazard(AssertionError):
@@ -79,6 +87,35 @@ def canon_rows(cols, rows):
     return [c for c in sorted(cols)], out
 
 
+def assert_nested_loops_audited(name, df):
+    """The plan's conditioned nested loops must EQUAL the query's audited
+    allowance (0 if unlisted) — a new unaudited loop and a stale
+    allowance both fail here — and it must hold no CartesianProduct."""
+    conditioned, cartesian = _PF.nested_loop_counts(df)
+    cap = _PF.ALLOWED.get(name, (0, ""))[0]
+    assert conditioned == cap, (
+        f"{name}: {conditioned} conditioned nested loop(s), audited "
+        f"allowance {cap} — rewrite the join onto hash keys, or (only for "
+        "a build side with a written size bound) edit plan_fingerprint.ALLOWED"
+    )
+    assert cartesian == 0, f"{name}: {cartesian} CartesianProduct node(s)"
+
+
+def test_nested_loop_audit_is_exact(spark):
+    """The allowance is an exact count, not a cap: a conditioned nested
+    loop in an unlisted query fails, and so does an ALLOWED query whose
+    loop has been rewritten away (the stale allowance would otherwise
+    let a future reintroduction pass silently)."""
+    a = spark.range(8).select(F.col("id").alias("x"))
+    b = spark.range(8).select(F.col("id").alias("u"))
+    looped = a.join(b, (a.x == b.u) | (a.x + 1 == b.u))
+    assert_nested_loops_audited("join_range_band_pricing", looped)
+    with pytest.raises(AssertionError, match="allowance 0"):
+        assert_nested_loops_audited("q1_pricing_summary", looped)
+    with pytest.raises(AssertionError, match="allowance 1"):
+        assert_nested_loops_audited("join_range_band_pricing", a.join(b, a.x == b.u))
+
+
 ORACLE_SPECS = {n: s for n, s in all_specs().items() if s.oracle is not None}
 ROWS_ONLY_SPECS = {n: s for n, s in all_specs().items() if s.oracle is None}
 
@@ -87,6 +124,7 @@ ROWS_ONLY_SPECS = {n: s for n, s in all_specs().items() if s.oracle is None}
 def test_query_matches_oracle(spark, duck, name):
     spec = ORACLE_SPECS[name]
     sdf = spec.fn(spark, SF_ORACLE)
+    assert_nested_loops_audited(name, sdf)
     scols = sdf.columns
     srows = [tuple(r) for r in sdf.collect()]
 
@@ -109,6 +147,7 @@ def test_query_matches_oracle(spark, duck, name):
 def test_rows_only_query_runs(spark, name):
     spec = ROWS_ONLY_SPECS[name]
     df = spec.fn(spark, SF_ORACLE)
+    assert_nested_loops_audited(name, df)
     assert df.count() >= 0
     assert len(df.columns) > 0
 

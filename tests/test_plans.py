@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from discogs_etl_spark.registry import queries
+from tests.conftest import load_script
 
 SF = "/root/testdata/sf0.001"
 
@@ -711,43 +712,12 @@ PLAN_PINS: dict[str, dict[str, int]] = {
 }
 
 
-def _plan_fingerprint_mod():
-    import importlib.util
-    from pathlib import Path
-
-    path = Path(__file__).resolve().parent.parent / "scripts" / "plan_fingerprint.py"
-    spec = importlib.util.spec_from_file_location("plan_fingerprint", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_condition_texts_capture_join_key_pairing(spark):
-    """r15 ADVICE #2: sorting a hash join's leftKeys and rightKeys
-    INDEPENDENTLY destroys positional pairing, so a rewrite that
-    re-pairs the equi-join (x=u,y=v -> x=v,y=u — same key SETS, a
-    different join) produced an identical descriptor and the pinned
-    expression gate missed exactly the dropped/changed-join-key class
-    it exists to catch.  Keys are now captured as jointly-sorted
-    left=right pairs: a re-pairing differs, while the same pairing
-    written in either conjunct order is byte-identical."""
-    mod = _plan_fingerprint_mod()
-    a = spark.range(8).select(F.col("id").alias("x"), (F.col("id") + 1).alias("y"))
-    b = spark.range(8).select(F.col("id").alias("u"), (F.col("id") + 1).alias("v"))
-    paired = mod.condition_texts(a.join(b, (a.x == b.u) & (a.y == b.v)))
-    repaired = mod.condition_texts(a.join(b, (a.x == b.v) & (a.y == b.u)))
-    reordered = mod.condition_texts(a.join(b, (a.y == b.v) & (a.x == b.u)))
-    assert any(t.startswith("join:") for t in paired)  # hash join captured
-    assert paired != repaired
-    assert paired == reordered
-
-
 def test_plan_pins_cover_the_whole_gate_set():
     """The pinned set is DERIVED (bench set + scale-killers), not
     hand-typed: registering a new bench=True headline query without
     pinning its plan fails here, so the gate's coverage cannot silently
     rot as the headline set evolves."""
-    expected = set(_plan_fingerprint_mod().pinned_names())
+    expected = set(load_script("plan_fingerprint").pinned_names())
     assert set(PLAN_PINS) == expected, (
         f"PLAN_PINS out of sync with the gate set: missing "
         f"{sorted(expected - set(PLAN_PINS))}, stale "
@@ -773,7 +743,7 @@ def test_executed_plan_fingerprint(spark, q, name):
     assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == str(
         64 * 1024 * 1024
     )
-    mod = _plan_fingerprint_mod()
+    mod = load_script("plan_fingerprint")
     fp = mod.fingerprint(q[name](spark, SF))
     got = {k: v for k, v in fp.items() if v}
     assert got == PLAN_PINS[name], (
@@ -787,101 +757,234 @@ def test_executed_plan_fingerprint(spark, q, name):
 
 
 def test_plan_sweep_allowed_names_are_registered():
-    """scripts/plan_sweep.py's audited nested-loop allowance must not go
-    stale: every ALLOWED name exists in the registry (a renamed/removed
-    query would otherwise keep a dead allowance a future query could
-    inherit by taking the name)."""
-    import importlib.util
-    from pathlib import Path
-
+    """The audited nested-loop allowance must not go stale: every
+    ALLOWED name exists in the registry (a renamed/removed query would
+    otherwise keep a dead allowance a future query could inherit by
+    taking the name)."""
     from discogs_etl_spark.registry import all_specs
 
-    path = Path(__file__).resolve().parent.parent / "scripts" / "plan_sweep.py"
-    spec = importlib.util.spec_from_file_location("plan_sweep", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    registered = set(all_specs())
-    stale = sorted(set(mod.ALLOWED) - registered)
-    assert not stale, f"plan_sweep.ALLOWED names not in registry: {stale}"
-    for name, (cap, why) in mod.ALLOWED.items():
+    allowed = load_script("plan_fingerprint").ALLOWED
+    stale = sorted(set(allowed) - set(all_specs()))
+    assert not stale, f"ALLOWED names not in registry: {stale}"
+    for name, (cap, why) in allowed.items():
         assert cap >= 1 and why.strip(), f"{name}: empty allowance rationale"
 
 
-def test_subtree_skeleton_sees_multiset_preserving_rearrangement(spark):
-    """The ordered-skeleton entry in a nested-loop node's shape closes
-    the class-multiset blind spot (r14 review): a filter moved from one
-    side of a cross to the other preserves every ``Cls:count`` entry
-    AND the leaf sets, so only the ordered tree distinguishes the two
-    plans — a substitution the compare gate must see."""
-    from pyspark.sql import functions as F
-
-    pf = _plan_fingerprint_mod()
-    a = spark.range(10).select(F.col("id").alias("a"))
-    b = spark.range(10).select(F.col("id").alias("b"))
-    left_filtered = a.filter("a > 3").hint("broadcast").crossJoin(b)
-    right_filtered = a.hint("broadcast").crossJoin(b.filter("b > 3"))
-    n1 = pf.nested_loop_nodes(left_filtered)
-    n2 = pf.nested_loop_nodes(right_filtered)
-    assert len(n1) == len(n2) == 1
-    s1, s2 = n1[0]["shape"], n2[0]["shape"]
-    tree1 = [e for e in s1 if e.startswith("tree:")]
-    tree2 = [e for e in s2 if e.startswith("tree:")]
-    assert len(tree1) == len(tree2) == 1, "exactly one skeleton entry"
-    # identical multisets (same classes, same counts, same leaves) ...
-    assert [e for e in s1 if not e.startswith("tree:")] == [
-        e for e in s2 if not e.startswith("tree:")
-    ]
-    assert n1[0]["leaves"] == n2[0]["leaves"]
-    # ... but the ordered tree tells them apart
-    assert tree1 != tree2
+def _pair(spark, n):
+    a = spark.range(n).select(F.col("id").alias("x"), (F.col("id") + 1).alias("y"))
+    return a, spark.range(n).select(F.col("id").alias("u"))
 
 
-def test_pinned_expression_captures_stable_across_sessions(spark, q):
-    """Cross-SESSION determinism of the three pinned expression
-    captures (conditions, aggregates, window/sort): recompute them
-    live in THIS JVM session for three representative pins and compare
-    byte-for-byte against the committed PLANSWEEP artifact, which a
-    PRIOR session generated.  ``.sql()`` rendering was probed
-    deterministic across plan builds within one session; this is the
-    stronger property the round-over-round plansweep_compare diff
-    actually relies on — a session-dependent fragment (an expr-id leak,
-    a nondeterministically numbered ``_groupingexpression``/``_w0``)
-    would flag every pin in the NEXT round's compare, and should fail
-    here instead.  Full-pin-set version executed at r17 close: 48/48
-    byte-identical.  Skips cleanly on artifacts predating the capture
-    fields (the compare gate's bootstrap rule)."""
-    import importlib.util
-    import json
-    from pathlib import Path
+def _equijoin(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, a.x == b.u)
 
-    # the shared round-number-parsing discovery, NOT a lexicographic
-    # glob sort (which would pick r99 over r100 across a digit boundary)
-    repo = Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "plansweep_compare", repo / "scripts" / "plansweep_compare.py"
+
+def _or_equijoin(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, (a.x == b.u) | (a.y == b.u))
+
+
+def _band_join(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, (a.x < b.u) & (b.u < a.y + 3))
+
+
+def _hinted_cross(spark):
+    return spark.range(8).crossJoin(F.broadcast(spark.range(1).select(F.col("id").alias("k"))))
+
+
+# Ranges far over the broadcast threshold: Catalyst cannot broadcast
+# either side, so a keyless join plans as a CartesianProduct.  Only the
+# static plan is read — nothing executes.
+def _unhinted_big_cross(spark):
+    a, b = _pair(spark, 10**10)
+    return a.crossJoin(b)
+
+
+def _big_theta_join(spark):
+    a, b = _pair(spark, 10**10)
+    return a.join(b, a.x < b.u)
+
+
+def _subquery_loop(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE t.id > (SELECT max(a.id) FROM "
+        "range(5) a JOIN range(3) b ON a.id > b.id)"
     )
-    pc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pc)
-    arts = pc.newest_artifacts(repo)
-    assert arts, "no PLANSWEEP_r*.json committed"
-    art = json.loads(arts[-1].read_text())
-    if "_pinned_windows" not in art:
-        pytest.skip("newest artifact predates the expression captures")
-    mod = _plan_fingerprint_mod()
-    # one join/filter-heavy, one aggregate-heavy, one window/sort-heavy,
-    # and the CSE-heavy pin whose _common_expr_N aliases exposed the one
-    # session-counter nondeterminism the projection capture normalizes
-    for name in (
-        "dedup_minhash_capped_pairs",
-        "q1_pricing_summary",
-        "sessions_max_concurrency",
-        "dedup_minhash_eval",
-    ):
-        df = q[name](spark, SF)
-        assert mod.condition_texts(df) == art["_pinned_conditions"][name], name
-        assert mod.aggregate_texts(df) == art["_pinned_aggregates"][name], name
-        assert mod.window_sort_texts(df) == art["_pinned_windows"][name], name
-        if "_pinned_projections" in art:
-            assert (
-                mod.projection_texts(df) == art["_pinned_projections"][name]
-            ), name
+
+
+def _correlated_exists(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE EXISTS "
+        "(SELECT 1 FROM range(3) b WHERE t.id > b.id)"
+    )
+
+
+def _not_exists_theta(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE NOT EXISTS "
+        "(SELECT 1 FROM range(3) b WHERE t.id < b.id)"
+    )
+
+
+def _small_unhinted_cross(spark):
+    return spark.sql("SELECT * FROM range(10) t CROSS JOIN range(3) b")
+
+
+def _left_outer_theta(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, a.x < b.u, "left")
+
+
+def _two_band_joins(spark):
+    a, b = _pair(spark, 8)
+    c = spark.range(8).select(F.col("id").alias("v"))
+    return a.join(b, a.x < b.u).join(c, b.u > c.v)
+
+
+def _equijoin_with_residual(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, (a.x == b.u) & (a.y > b.u))
+
+
+def _hinted_cross_then_theta_filter(spark):
+    k = F.broadcast(spark.range(4).select(F.col("id").alias("k")))
+    return spark.range(8).crossJoin(k).where(F.col("id") > F.col("k"))
+
+
+def _union_branch_loop(spark):
+    a, b = _pair(spark, 8)
+    return a.join(b, a.x < b.u).select("x").union(spark.range(3).select(F.col("id").alias("x")))
+
+
+_SUBQUERY_LOOP = "(SELECT max(a.id) FROM range(5) a JOIN range(3) b ON a.id > b.id)"
+
+
+def _select_list_subquery(spark):
+    return spark.sql(f"SELECT t.id, {_SUBQUERY_LOOP} AS m FROM range(10) t")
+
+
+def _nested_subquery(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE t.id > (SELECT max(s.id) FROM "
+        f"range(6) s WHERE s.id < {_SUBQUERY_LOOP})"
+    )
+
+
+def _in_subquery_loop(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE t.id IN "
+        "(SELECT a.id FROM range(5) a JOIN range(3) b ON a.id > b.id)"
+    )
+
+
+def _multi_column_not_in(spark):
+    return spark.sql(
+        "SELECT * FROM range(10) t WHERE (t.id, t.id + 1) NOT IN "
+        "(SELECT a.id, a.id FROM range(5) a)"
+    )
+
+
+# Frames cached by the builders below; the test unpersists them once it
+# has read the plan, so the shared session keeps no stray cache.
+_CACHED: list = []
+
+
+def _cached_band_join(spark):
+    a, b = _pair(spark, 8)
+    looped = a.join(b, a.x < b.u).cache()
+    _CACHED.append(looped)
+    return looped
+
+
+def _cached_loop(spark):
+    return _cached_band_join(spark).where(F.col("x") > 1)
+
+
+def _cached_loop_scanned_twice(spark):
+    looped = _cached_band_join(spark)
+    return looped.select("x").union(looped.select("u"))
+
+
+@pytest.mark.parametrize(
+    "build, expected",
+    [
+        (_equijoin, (0, 0)),
+        (_or_equijoin, (1, 0)),
+        (_band_join, (1, 0)),
+        (_hinted_cross, (0, 0)),
+        (_unhinted_big_cross, (0, 1)),
+        (_big_theta_join, (1, 1)),
+        (_subquery_loop, (1, 0)),
+        (_correlated_exists, (1, 0)),
+        (_not_exists_theta, (1, 0)),
+        (_small_unhinted_cross, (0, 0)),
+        (_left_outer_theta, (1, 0)),
+        (_two_band_joins, (2, 0)),
+        (_equijoin_with_residual, (0, 0)),
+        (_hinted_cross_then_theta_filter, (1, 0)),
+        (_union_branch_loop, (1, 0)),
+        (_select_list_subquery, (1, 0)),
+        (_nested_subquery, (1, 0)),
+        (_in_subquery_loop, (1, 0)),
+        (_multi_column_not_in, (1, 0)),
+        (_cached_loop, (1, 0)),
+        (_cached_loop_scanned_twice, (1, 0)),
+    ],
+    ids=[
+        "equijoin",
+        "or_of_equalities",
+        "band_join",
+        "hinted_cross",
+        "unhinted_big_cross",
+        "big_theta_join",
+        "scalar_subquery",
+        "correlated_exists",
+        "not_exists_theta",
+        "small_unhinted_cross",
+        "left_outer_theta",
+        "two_band_joins",
+        "equijoin_with_residual",
+        "hinted_cross_then_theta_filter",
+        "union_branch",
+        "select_list_subquery",
+        "nested_subquery",
+        "in_subquery",
+        "multi_column_not_in",
+        "cached_loop",
+        "cached_loop_scanned_twice",
+    ],
+)
+def test_nested_loop_counts(spark, build, expected):
+    """The live audit's counter, ``(conditioned, cartesian)``, on small
+    synthetic plans: a keyed equi-join is no nested loop; the
+    OR-of-equalities join (the recsys_holdout_hitrate bug class) and a
+    non-equi band join each count one conditioned loop; a
+    broadcast-hinted crossJoin counts nothing, while an unhintable one
+    is a CartesianProduct (conditioned too if it carries a theta
+    condition); and a conditioned loop inside a scalar subquery, or
+    from a decorrelated EXISTS, is still counted — the walker descends
+    into each node's subquery plans, because under AQE the root is a
+    leaf.  The remaining cases pin the count's edges: loops add up
+    (ALLOWED caps of 2 exist); a hash join's residual theta is no loop;
+    a small unhinted cross auto-broadcasts (unconditioned, so 0); a
+    filter over a hinted cross is pushed into the join and makes it a
+    conditioned loop; a loop is found in a union branch, in a
+    select-list or doubly nested scalar subquery, under an IN / NOT IN
+    rewrite, and inside a cached plan — once, however often the cache
+    is scanned."""
+    pf = load_script("plan_fingerprint")
+    try:
+        assert pf.nested_loop_counts(build(spark)) == expected
+    finally:
+        while _CACHED:
+            _CACHED.pop().unpersist()
+
+
+def test_fingerprint_sees_nested_loop_inside_subquery(spark):
+    """The executed-plan fingerprint descends into subquery plans too:
+    the scalar subquery's nested loop shows up in the final adaptive
+    plan's ``bnlj`` count."""
+    fp = load_script("plan_fingerprint").fingerprint(_subquery_loop(spark))
+    assert fp["bnlj"] == 1 and fp["cartesian"] == 0

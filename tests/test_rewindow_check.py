@@ -13,19 +13,11 @@ and import position can never cost a slot.
 
 from __future__ import annotations
 
-import importlib.util
-from pathlib import Path
-
-REPO = Path(__file__).resolve().parent.parent
+from tests.conftest import REPO, load_script
 
 
 def _mod():
-    spec = importlib.util.spec_from_file_location(
-        "rewindow_check", REPO / "scripts" / "rewindow_check.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return load_script("rewindow_check")
 
 
 BASE = '''

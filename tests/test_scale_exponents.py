@@ -30,28 +30,17 @@ SCALE_EXPONENTS.json is gated here:
 
 from __future__ import annotations
 
-import importlib.util
 import json
-from pathlib import Path
 
 from discogs_etl_spark import registry
 from discogs_etl_spark.tables import TABLE_NAMES
+from tests.conftest import REPO, load_script
 
-REPO = Path(__file__).resolve().parent.parent
 ARTIFACT = REPO / "SCALE_EXPONENTS.json"
 
 
-def _load(name: str):
-    spec = importlib.util.spec_from_file_location(
-        name, REPO / "scripts" / f"{name}.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def _mod():
-    return _load("scale_exponents")
+    return load_script("scale_exponents")
 
 
 def _artifact() -> dict:

@@ -12,20 +12,13 @@ for a given pair of files.
 
 from __future__ import annotations
 
-import importlib.util
 import json
-from pathlib import Path
 
-REPO = Path(__file__).resolve().parent.parent
+from tests.conftest import REPO, load_script
 
 
 def _load_compare():
-    spec = importlib.util.spec_from_file_location(
-        "timing_compare", REPO / "scripts" / "timing_compare.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+    return load_script("timing_compare")
 
 
 def test_no_timing_regressions_between_committed_sweeps():
@@ -67,6 +60,19 @@ def test_current_sweep_has_no_errors_and_covers_registry():
         f"{arts[-1].name} missing {len(missing)} registered queries — "
         f"re-run scripts/time_registry.py on current code: {missing[:10]}"
     )
+
+
+def test_artifact_discovery_sorts_rounds_numerically(tmp_path):
+    """Discovery orders by the parsed round (r99 before r100, which a
+    lexicographic sort inverts) and skips names the glob matches but
+    the ``TIMINGS_r{N}.json`` form does not."""
+    tc = _load_compare()
+    for name in ("TIMINGS_r100.json", "TIMINGS_r99.json", "TIMINGS_r19_local.json"):
+        (tmp_path / name).write_text("{}")
+    assert [p.name for p in tc.newest_artifacts(tmp_path)] == [
+        "TIMINGS_r99.json",
+        "TIMINGS_r100.json",
+    ]
 
 
 def test_compare_flags_a_synthetic_regression():
