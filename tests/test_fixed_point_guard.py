@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from discogs_etl_spark.queries._util import FIXED_GUARD_CONF, dsum, fixed
+from discogs_etl_spark.queries._util import FIXED_GUARD_CONF, davg, dsum, fixed
 
 
 @pytest.fixture
@@ -88,3 +88,45 @@ def test_half_up_long_null_propagates(spark):
     df = spark.createDataFrame([(None,), (1.25,)], "x double")
     rows = {r[0]: r[1] for r in df.select("x", half_up_long(F.col("x"))).collect()}
     assert rows[1.25] == 1 and rows[None] is None
+
+
+def test_columns_are_built_once_per_name_scale_guard(spark):
+    assert fixed("x", 2) is fixed("x", 2)
+    assert dsum("x", 2) is dsum("x", 2)
+    assert davg("x", 6) is davg("x", 6)
+    assert fixed("x", 2) is not fixed("x", 6)
+    assert fixed("x", 2) is not fixed("y", 2)
+
+
+def test_guard_takes_effect_on_the_next_call(spark):
+    df = spark.createDataFrame([(1.25,)], "x double")
+    off = fixed("x", 2)
+    spark.conf.set(FIXED_GUARD_CONF, "true")
+    try:
+        on = fixed("x", 2)
+        plan = df.select(on.alias("f"))._jdf.queryExecution().toString()
+    finally:
+        spark.conf.unset(FIXED_GUARD_CONF)
+    assert on is not off
+    assert "assert_true" in plan
+    assert fixed("x", 2) is off
+
+
+def test_memoized_column_follows_the_current_ansi_setting(spark):
+    """A Column carries no conf: one built under ANSI on and reused under
+    ANSI off casts a malformed value to NULL, and raises again once ANSI
+    is back on."""
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([("abc",)], "x string")
+    try:
+        spark.conf.set(key, "true")
+        col = fixed("x", 2)
+        spark.conf.set(key, "false")
+        assert fixed("x", 2) is col
+        assert df.select(col.alias("f")).first()["f"] is None
+        spark.conf.set(key, "true")
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            df.select(col.alias("f")).collect()
+    finally:
+        spark.conf.set(key, before)
