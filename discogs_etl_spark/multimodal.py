@@ -879,7 +879,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one band (pigeonhole) — zero false negatives, no all-pairs compare.
 
     This is the r14-staged rewrite of the banding quadratic
-    (VERDICT r14 task #1 / ANALYTIC_SUPERLINEAR): the old 4-bit bands
+    (VERDICT r14 task #1): the old 4-bit bands
     over a 32-bit hash pigeonholed to a FIXED 16 buckets per band, so
     the candidate set was Θ(n²/16) no matter how the data grew (7 k
     pairs at sf0.01 → 695 k at sf0.1).  8-bit bands give 256 buckets

@@ -109,14 +109,20 @@ def half_up_long(x: Column) -> Column:
     column (600k rows x 4 cols, both signs), every BM25 contribution
     (3.66M rows), every lm-bigram contribution (308k), and the
     boundary grid in tests/test_fixed_point_guard.py.  NULL
-    propagates; NaN/±Inf raise under ANSI exactly as the Round+cast
-    path did.  2^51 sits above the fixed-point exactness envelope
-    (2^52 is the ROUND-TRIP bound; sums beyond 2^51 per VALUE were
-    never exact), so callers inside that envelope lose nothing."""
+    propagates.  NaN/±Inf skip the floor (``FLOOR(double)`` returns a
+    saturating BIGINT: NaN -> 0, ±Inf -> ±Long.MAX under either ANSI
+    setting) and reach the final ``.cast("long")`` unchanged, so they
+    raise under ANSI exactly as the Round+cast path did (and cast to
+    0 / ±Long.MAX with ANSI off).  2^51 sits above the fixed-point
+    exactness envelope (2^52 is the ROUND-TRIP bound; sums beyond 2^51
+    per VALUE were never exact), so callers inside that envelope lose
+    nothing."""
     ax = F.abs(x)
     r = F.floor(ax + F.lit(0.5)).cast("double")
     r = F.when(ax < r - F.lit(0.5), r - F.lit(1.0)).otherwise(r)
-    return F.when(x >= 0, r).otherwise(-r).cast("long")
+    signed = F.when(x >= 0, r).otherwise(-r)
+    # ax < inf is false for NaN and ±Inf (and NULL for NULL).
+    return F.when(ax < F.lit(float("inf")), signed).otherwise(x).cast("long")
 
 
 def fixed(name: str, scale: int = 2) -> Column:
@@ -205,6 +211,27 @@ def sql_dsum(expr: str, scale: int = 2, prec: int = 18) -> str:
 
 def sql_davg(expr: str, scale: int = 2, prec: int = 18) -> str:
     return f"(CAST(SUM(CAST({expr} AS DECIMAL({prec},{scale}))) AS DOUBLE) / COUNT(*))"
+
+
+# Every per-(application, sf_dir) memo dict in the package, so that
+# clear_session_memos can empty them all at once.
+_SESSION_MEMOS: list[dict] = []
+
+
+def memo_cache() -> dict:
+    """A new, registered per-(application, sf_dir) memo dict."""
+    cache: dict = {}
+    _SESSION_MEMOS.append(cache)
+    return cache
+
+
+def clear_session_memos() -> None:
+    """Forget every memoized frame and check in every ``memo_cache``:
+    the next consumer rebuilds (and pays for) what it reads.  The
+    work-growth gate measures each query from this state, so a query's
+    count does not depend on which sibling ran before it."""
+    for cache in _SESSION_MEMOS:
+        cache.clear()
 
 
 def session_memo(cache, spark, sf_dir, build):

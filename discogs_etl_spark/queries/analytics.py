@@ -23,6 +23,7 @@ from discogs_etl_spark.queries._util import (
     dsum,
     epoch,
     fixed,
+    memo_cache,
     sql_davg,
     sql_dsum,
 )
@@ -3280,7 +3281,7 @@ _COORDER_PAIR_EXPR = (
 )
 
 
-_COORDER_EDGE_CACHE: dict[tuple[str, str], DataFrame] = {}
+_COORDER_EDGE_CACHE: dict[tuple[str, str], DataFrame] = memo_cache()
 
 
 def _coorder_oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

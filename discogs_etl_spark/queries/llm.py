@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from discogs_etl_spark.queries._util import half_up_long
+from discogs_etl_spark.queries._util import half_up_long, memo_cache
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.session import local_frame
 from discogs_etl_spark.tables import load
@@ -131,7 +131,7 @@ _SQL_TRIGRAMS = (
 # must fail loudly instead (r18 ADVICE).
 _EMB_DIM = 64
 
-_EMB_DIM_CHECKED: dict[tuple[str, str], int] = {}
+_EMB_DIM_CHECKED: dict[tuple[str, str], int] = memo_cache()
 
 
 def _checked_emb_dim(spark: SparkSession, sf_dir: str) -> int:
@@ -407,11 +407,9 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.where(F.col("jaccard") >= t)
 
 
-# Per-pair md5 chain depth for the exponent gate's positive control
-# below.  8 rounds puts the LO-sf reading well above the gate's 0.15 s
-# overhead-floor clamp and the measured alpha at ~1.55 (ratio ~8.5 over
-# the embeddings plane's 4x growth) — comfortably past the 1.35 flag
-# with margin, per the calibration measurements in OPTIMIZATION_r19.md.
+# Per-pair md5 chain depth for the work-growth gate's positive control
+# below: real per-pair CPU behind a result no marginal sum can shortcut.
+# The oracle spells the same 8 rounds.
 _GATE_CONTROL_MD5_ROUNDS = 8
 
 
@@ -435,34 +433,30 @@ _GATE_CONTROL_MD5_ROUNDS = 8
     tags=("gate", "control", "quadratic", "instrument"),
 )
 def gate_control_quadratic_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE EXPONENT GATE'S QUADRATIC POSITIVE CONTROL — deliberately
-    super-linear; DO NOT OPTIMIZE.  scripts/scale_exponents.py's flag
-    threshold is only trustworthy while at least one registered query
-    provably trips it; this query exists to be that proof, replacing
-    dedup_jaccard_prefix_filter whose r19 rewrite (182.8 -> ~8 s)
-    dropped its measured alpha below the flag, exactly as the r18
-    cosine rewrite had de-flagged the previous control.
+    """THE WORK-GROWTH GATE'S QUADRATIC POSITIVE CONTROL — deliberately
+    super-linear; DO NOT OPTIMIZE.  The gate's flag threshold
+    (scripts/plan_fingerprint.py: ALPHA_FLAG) is only trustworthy while
+    at least one registered query provably trips it; this query exists
+    to be that proof.
 
-    Shape: the gate's own documented blind-spot class — an EQUI-join
-    with an innocent plan whose MATCH cardinality grows as n² because
-    the key space is fixed (here the degenerate 1-bucket key
-    vec_id % 1; production spellings are status codes, tenant ids,
-    truncated hash buckets).  No nested loop, no cartesian — the plan
-    gates cannot see it; only measured growth can.  Per-pair work is a
-    fixture-pinned 8-round md5 chain over the pair ids, reduced to
-    three order-independent integer aggregates, so the result is
-    non-factorable (no marginal-sum shortcut exists) and every pair
-    must actually be enumerated and hashed.
+    Shape: the gate's own target class — an EQUI-join with an innocent
+    plan whose MATCH cardinality grows as n² because the key space is
+    fixed (here the degenerate 1-bucket key vec_id % 1; production
+    spellings are status codes, tenant ids, truncated hash buckets).
+    No nested loop, no cartesian — the plan audit cannot see it; only
+    measured growth can.  Per-pair work is a fixture-pinned 8-round md5
+    chain over the pair ids, reduced to three order-independent integer
+    aggregates, so the result is non-factorable (no marginal-sum
+    shortcut exists) and every pair must actually be enumerated and
+    hashed.
 
-    Calibration (r19, one-off min-of-5 quiet, local[32]; each sweep
-    records min-of-3): 0.76 s at sf0.01
-    (125k pairs) -> 6.5 s at sf0.1 (2M pairs), alpha ~1.55 against the
-    embeddings plane's 4x growth — above ALPHA_FLAG = 1.35 with ~0.2
-    margin, material at the high sf, above the overhead floor at the
-    low sf.  Any rewrite that accelerates this query defeats the
-    gate's calibration and reddens tests/test_scale_exponents.py's
-    stale-allowance check; the correct response to that red is a NEW
-    measured control, never a silent allowance edit."""
+    Calibration (operator rows, exact): 1,527 rows at the gate's lo
+    fixture (50 embeddings, 1,225 pairs) -> 127,752 at sf0.01 (500
+    embeddings, 124,750 pairs), work alpha ~1.9 over the 10x data step
+    against ALPHA_FLAG = 1.35.  It is listed in WORK_ALLOWED; any
+    rewrite that removes the quadratic turns that entry into a stale
+    allowance and fails the suite.  The correct response to that red
+    is a NEW control, never an allowance edit."""
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", (F.col("vec_id") % F.lit(1)).alias("bkt")
     )
@@ -1802,7 +1796,7 @@ _CC_ORACLE = f"""
 # of pairs from 60k docs), so pinning it is free, and every consumer sees
 # the identical edge set.  dedup_minhash_lsh itself stays uncached so its
 # bench number keeps measuring the real signature pipeline.
-_PAIR_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = {}
+_PAIR_GRAPH_CACHE: dict[tuple[str, str], DataFrame] = memo_cache()
 
 
 def minhash_scored_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3279,7 +3273,7 @@ def text_search_inverted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = {}
+_POSTINGS_CACHE: dict[tuple[str, str], DataFrame] = memo_cache()
 
 
 def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:

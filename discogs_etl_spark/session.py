@@ -38,13 +38,10 @@ __all__ = ["get_spark", "host_fingerprint", "local_frame", "tune_for_correctness
 
 def host_fingerprint() -> dict:
     """Hardware identity of the box a perf reading was taken on —
-    stamped into bench.py and scripts/time_registry.py artifacts
-    (r16 verdict task #3).  Round 16's quiet bench sat 15-50% above
-    the documented band purely because the host changed under the
-    artifacts (80 reported CPUs where prior sessions saw 32), and
-    nothing on record could PROVE drift vs regression; with the
-    fingerprint stamped, timing_compare prints a host-changed warning
-    (informational, never a gate) and the round notes can cite it."""
+    stamped into bench.py, scripts/time_registry.py and the benchmark's
+    records, so that a reading from a different host (say, 80 reported
+    CPUs where earlier readings saw 32) is visible as host drift rather
+    than mistaken for a regression."""
     model = None
     try:
         with open("/proc/cpuinfo") as fh:

@@ -1,12 +1,13 @@
 #!/usr/bin/env python
-"""The plan gate's extractor: executed-plan fingerprints for the pinned
-set, and the nested-loop audit for every registered query.
+"""The plan and work gates: executed-plan fingerprints for the pinned
+set, the nested-loop audit for every registered query, and the
+work-growth gate (operator row counts at two scales) for every
+registered query.
 
-Answers are hash-gated (tests/test_oracle.py) and wall-times are
-ratio-gated (scripts/timing_compare.py), but both catch a Catalyst
-strategy flip only noisily and after the fact — the r10
-recsys_holdout_hitrate nested-loop ran green for nine rounds because
-nothing machine-checked the PHYSICAL plan.  This module normalizes an
+Answers are hash-gated (tests/test_oracle.py), but a value hash cannot
+see a Catalyst strategy flip — the recsys_holdout_hitrate nested loop
+(111 s at sf0.1) ran green for nine rounds because nothing
+machine-checked the PHYSICAL plan.  This module normalizes an
 EXECUTED plan (the AQE final plan, not the initial one — runtime
 broadcast conversions are part of the strategy under test) into a small
 dict of node counts that tests/test_plans.py pins per query:
@@ -33,7 +34,10 @@ dict of node counts that tests/test_plans.py pins per query:
 
 The pins cover a chosen set; the rest of the registry is covered by the
 nested-loop audit (``ALLOWED`` + ``nested_loop_counts`` below), which
-tests/test_oracle.py runs on every query it builds.
+tests/test_oracle.py runs on every query it builds, and by the
+work-growth gate (``measure_work`` + ``WORK_ALLOWED`` below), which
+tests/test_work_growth.py runs on every query at sf0.01 and at a 10x
+smaller fixture.
 
 The fingerprint is taken at a FIXED condition (sf dir + the tuned test
 session: local[8], shuffle.partitions=8, AQE on) — AQE's runtime
@@ -55,8 +59,10 @@ pinned set (bench headline set + the previously-fixed scale-killers).
 from __future__ import annotations
 
 import argparse
+import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -104,16 +110,15 @@ SCALE_STORY = (
     "multimodal_phash_capped_pairs",
 )
 
-# Third tier (VERDICT r12 task #4): the expensive non-headline tail —
-# the registry's costliest sf0.1 walls outside the bench set and the
-# documented all-pairs baselines (TIMINGS_r12: phash 20.9 s, theil_sen
-# 11.4 s, semdedup 9.7 s, doc_duplication 8.1 s, pricing_audit 7.8 s,
-# levenshtein 6.5 s).  These are where a silent Catalyst strategy flip
-# costs the most wall-time per round: each one's cost is ACCEPTABLE
-# only under its current shape (banded equi-join, cluster-scoped
-# pairs, blocked compare), and a flip to a broader join multiplies a
-# double-digit wall, so they get the same deterministic pin as the
-# headline set.
+# Third tier: the expensive non-headline tail — the registry's
+# costliest sf0.1 walls outside the bench set when the tier was chosen
+# (phash 20.9 s, theil_sen 11.4 s, semdedup 9.7 s, doc_duplication
+# 8.1 s, pricing_audit 7.8 s, levenshtein 6.5 s).  These are where a
+# silent Catalyst strategy flip costs the most wall time: each one's
+# cost is ACCEPTABLE only under its current shape (banded equi-join,
+# cluster-scoped pairs, blocked compare), and a flip to a broader join
+# multiplies a double-digit wall, so they get the same deterministic
+# pin as the headline set.
 EXPENSIVE_TAIL = (
     # phash's r15 rewrite cut its wall from 15.4 s to ~2 s, but the pin
     # stays: the new shape (4 BHJ over a localCheckpointed hash stage)
@@ -269,8 +274,8 @@ def fingerprint(df, *, executed: bool = True) -> dict[str, int]:
 #              query set) independent of corpus size
 #   calendar:  a self-join over a day/week rollup bounded by the time
 #              span, not the corpus (pairs grow with years^2, not rows)
-#   baseline:  the two DOCUMENTED all-pairs exactness baselines
-#              (timing_compare.BASELINE_TAIL; weak_count=2)
+#   baseline:  the DOCUMENTED all-pairs exactness baseline (also in
+#              WORK_ALLOWED below)
 ALLOWED: dict[str, tuple[int, str]] = {
     "join_range_band_pricing": (
         1,
@@ -282,7 +287,7 @@ ALLOWED: dict[str, tuple[int, str]] = {
     "dedup_embedding_cosine": (
         1,
         "baseline: the deliberate all-pairs exact-cosine ground truth "
-        "(BASELINE_TAIL; bucketed twin dedup_embedding_bucketed is the "
+        "(WORK_ALLOWED; bucketed twin dedup_embedding_bucketed is the "
         "production path)",
     ),
     "embedding_triplet_check": (
@@ -351,6 +356,289 @@ def nested_loop_counts(df) -> tuple[int, int]:
         conditioned += node.condition().isDefined()
         cartesian += cls == "CartesianProductExec"
     return conditioned, cartesian
+
+
+# ---------------------------------------------------------------------------
+# The work-growth gate
+# ---------------------------------------------------------------------------
+#
+# The growth check for the "innocent-plan quadratic": an equi-join whose
+# MATCH cardinality grows as n² over a fixed key space, an explode whose
+# fan-out scales with the data, a hot key that concentrates — plans with
+# no nested loop, which the audit above cannot see and which read
+# seconds at fixture scale and hours at 100 TB.  The gate grades WORK,
+# not wall time:
+#
+#   W = the sum of "number of output rows" over every physical node of
+#       every SQL execution the query's build AND its action ran (read
+#       from the SQL status store after the listener bus drains), so
+#       the eager localCheckpoint/first() jobs inside builders and the
+#       subquery plans count with no special case; each
+#       BroadcastNestedLoopJoin counts |build|·|stream| from its
+#       children's rows, because its own output counts matches, not
+#       comparisons.
+#
+# W is an exact, machine-independent count (no noise, nothing to commit,
+# nothing to re-measure on a slow host).  tests/test_work_growth.py takes
+# it for every registered query at sf0.01 (hi) and at a fixture whose every
+# scaling table is exactly GROWTH times smaller (lo, ``build_lo_fixture``),
+# so the growth exponent is alpha = log_GROWTH(W_hi / W_lo): ~0 for a
+# fixed-size input, ~1 linear, ~2 quadratic.  alpha > ALPHA_FLAG fails
+# the query's own test unless WORK_ALLOWED lists it, and an allowance
+# whose query no longer flags fails too (ALLOWED's exact-count rule).
+#
+# DETERMINISM: ``measure_work`` empties the session memos
+# (``_util.clear_session_memos``) and Spark's cache manager before the
+# build, so a memo consumer pays for the memo build it reads — its W does
+# not depend on whether a sibling ran first.  It also runs the build
+# and action with adaptive execution off (_STATIC_PLANS below): AQE's
+# run-time choices race between concurrent stages and change which
+# operators run.  tests/test_work_growth.py pins both.  One status-store
+# race is left (ALPHA_MARGIN below).
+
+# Every scaling table of the lo fixture is this many times smaller than
+# at sf0.01; region/nation are static at both.
+GROWTH = 10
+
+# Flag threshold on the work exponent: linear work reads 1.0 (partial
+# aggregates and per-partition constants pull small queries a little
+# below or above), quadratic work reads ~2.0; 1.35 means "much closer to
+# quadratic than to linear".
+ALPHA_FLAG = 1.35
+# W is exact up to one residual status-store race: in some runs a stage
+# of a broadcast's subtree (its rows and the broadcast's) is missing
+# from the execution's final metrics, which only LOWERS W (measured:
+# q17_small_quantity_revenue 36,602 or 37,002 rows at the lo fixture,
+# dedup_pair_evidence 9,251 or 9,401 — at most 1.6% of W, 0.007 of
+# alpha; 3 of 380 queries differed across runs).  The gate therefore does
+# not judge a reading within ALPHA_MARGIN of the flag: an unlisted query
+# fails above ALPHA_FLAG + ALPHA_MARGIN, an allowance is stale at or
+# below ALPHA_FLAG - ALPHA_MARGIN.
+ALPHA_MARGIN = 0.02
+
+# The lo fixture samples these sf0.01 tables by key (id % GROWTH == 0);
+# the generator's own sf0.001 holds the same 500 rows as sf0.01 for
+# them, so it cannot supply their lo side.  The rows are i.i.d. draws,
+# so a key-residue sample is what a GROWTH-times smaller generation
+# would produce — once the kept keys are renumbered densely (id //
+# GROWTH, the generator's 0..n-1 ids).  Without the renumbering an
+# id-range slice that is fixed by design (the `vec_id < 20` query sets
+# of the recall evals, the `vec_id < 50` triplet anchors) shrinks
+# GROWTH-fold at lo and fabricates quadratic growth: measured,
+# similarity_ann_recall read alpha 1.62 on the residue ids.
+LO_SAMPLED = {"documents": "doc_id", "embeddings": "vec_id"}
+
+# name -> why its super-linear work is deliberate.  Exact rule: an entry
+# whose query no longer flags fails too, so the list only shrinks
+# honestly.  Reasons state the measured work (W_lo -> W_hi rows).
+WORK_ALLOWED: dict[str, str] = {
+    "gate_control_quadratic_join": (
+        "control: the gate's quadratic positive control, a 1-bucket "
+        "equi-join with n(n-1)/2 matches (1,527 -> 127,752, alpha 1.92). "
+        "Never edit this entry to pass the suite: a de-flagged control "
+        "needs a new control"
+    ),
+    "dedup_embedding_cosine": (
+        "baseline: the all-pairs exact-cosine ground truth that calibrates "
+        "the LSH/IVF/bucketed recall evals, O(n^2) by design: a nested loop "
+        "over 2,500 -> 250,000 vector pairs (2,902 -> 254,002, alpha 1.94). "
+        "Frozen at this operating point; dedup_embedding_bucketed is the "
+        "production path"
+    ),
+}
+
+# Known super-linear by analysis but NOT a flag, kept on the record:
+#   dedup_jaccard_prefix_filter — exact Jaccard via PPJoin prefix
+#   filtering.  Candidate growth is super-quadratic on the fixtures at
+#   sf0.01 -> sf0.1 (3.3k -> 325k candidate pairs: the low-vocabulary
+#   synthetic corpus is adversarial for prefix pruning), but at the
+#   gate's pair the candidate set stays output-sized and its work reads
+#   linear (24,209 -> 248,157 rows, alpha 1.01).  Pair emission remains
+#   candidate-bound by construction; the gate's positive control is
+#   gate_control_quadratic_join, not this query.
+
+_WORK_METRIC = "number of output rows"
+_SEP = "\x01"
+# While measuring, every plan is the static one.  With adaptive
+# execution on, three run-time choices depend on which concurrent stage
+# finishes first, and each changed W between runs of the same query:
+# replacing a join over an empty stage by an empty relation
+# (q2_min_cost_supplier, whose part filter keeps no rows at the lo
+# fixture, read 516 or 20,421 rows), turning a sort-merge join into a
+# broadcast join (retention_halflife_fit read 6,316 or 6,361 rows), and
+# re-picking the build side of a join hinted on both sides
+# (stats_chi_square_lang_source read 8,701 or 8,778 rows).
+_STATIC_PLANS = {"spark.sql.adaptive.enabled": "false"}
+# A BroadcastExchange's rows are its child's rows, already counted, and
+# its row metric is the one the driver posts (from the broadcast thread)
+# rather than a task metric; the status store's final aggregate misses
+# it in some runs (measured: q17_small_quantity_revenue read 37,002 or
+# 37,202 rows at the lo fixture, its 200-row broadcast counted or not).
+# Its rows are read through to the child.
+_UNCOUNTED = frozenset({"BroadcastExchange"})
+
+
+def execution_work(store, execution_id: int) -> int:
+    """W of one finished SQL execution: its nodes' output rows, with
+    each BroadcastNestedLoopJoin replaced by the product of its
+    children's rows and each _UNCOUNTED node left out.  A child without
+    a counted row metric (Project, InputAdapter, BroadcastExchange)
+    reads as the rows of its nearest counted descendants.  Scala collections are flattened with one ``mkString``
+    call each (node metrics, accumulator values, edges), so a plan costs
+    a few py4j calls per node."""
+    values = {}
+    for entry in _final_metrics(store, execution_id).mkString(_SEP).split(_SEP):
+        acc, sep, value = entry.partition(" -> ")
+        if sep:
+            values[int(acc)] = value
+    graph = store.planGraph(execution_id)
+    children: dict[int, list[int]] = {}
+    for edge in graph.edges().mkString(_SEP).split(_SEP):
+        if edge:  # SparkPlanGraphEdge(fromId,toId): from is the child
+            child, parent = edge[edge.index("(") + 1 : -1].split(",")
+            children.setdefault(int(parent), []).append(int(child))
+    rows: dict[int, int] = {}
+    loops: list[int] = []
+    nodes = graph.allNodes()
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        name = node.name()
+        if name in _UNCOUNTED:
+            continue
+        if name == "BroadcastNestedLoopJoin":
+            loops.append(node.id())
+        for metric in node.metrics().mkString(_SEP).split(_SEP):
+            # SQLPlanMetric(name,accumulatorId,metricType)
+            if metric.startswith(f"SQLPlanMetric({_WORK_METRIC},"):
+                acc = int(metric.rsplit(",", 2)[1])
+                rows[node.id()] = int(values.get(acc, "0").replace(",", ""))
+
+    def out(node_id: int) -> int:
+        if node_id in rows:
+            return rows[node_id]
+        return sum(out(c) for c in children.get(node_id, ()))
+
+    for node_id in loops:
+        rows[node_id] = math.prod(out(c) for c in children.get(node_id, ()))
+    return sum(rows.values())
+
+
+def _final_metrics(store, execution_id: int):
+    """The finished execution's aggregated metric values (a Scala
+    ``Map[accumulatorId, String]``).  The status store aggregates them
+    on its own thread after the execution-end event, so a drained
+    listener bus does not mean they are written; ``executionMetrics``
+    then serves a live reading that can miss a whole stage (measured:
+    q17_small_quantity_revenue read 400 rows fewer at the lo fixture in
+    2 of 8 runs, one stage's Filter and HashAggregate rows missing).
+    Polls until the aggregate is stored."""
+    deadline = time.monotonic() + 60
+    while True:
+        data = store.execution(execution_id)
+        if data.isDefined() and data.get().metricValues() is not None:
+            return data.get().metricValues()
+        if time.monotonic() > deadline:
+            raise TimeoutError(f"SQL execution {execution_id}: no final metrics after 60 s")
+        time.sleep(0.01)
+
+
+def _execution_ids_after(store, mark: int) -> list[int]:
+    """Ids of the status store's executions newer than ``mark``, read
+    from the newest end (the store lists executions by id)."""
+    ids: list[int] = []
+    end = store.executionsCount()
+    while end > 0:
+        start = max(0, end - 32)
+        chunk = store.executionsList(start, end - start)
+        got = [chunk.apply(i).executionId() for i in range(chunk.size())]
+        ids += [i for i in got if i > mark]
+        if not got or min(got) <= mark:
+            break
+        end = start
+    return sorted(ids)
+
+
+def measure_work(spark, run):
+    """``(W, run())``: the work of every SQL execution ``run`` starts —
+    pass a callable that builds the query AND runs its action.  Session
+    memos and cached tables are emptied first and _STATIC_PLANS holds
+    while ``run`` runs (see the section comment: determinism)."""
+    from discogs_etl_spark.queries._util import clear_session_memos
+
+    clear_session_memos()
+    spark.catalog.clearCache()
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    n = store.executionsCount()
+    mark = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+    saved = {key: spark.conf.get(key, None) for key in _STATIC_PLANS}
+    for key, value in _STATIC_PLANS.items():
+        spark.conf.set(key, value)
+    try:
+        out = run()
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+    bus.waitUntilEmpty()
+    work = sum(execution_work(store, i) for i in _execution_ids_after(store, mark))
+    return work, out
+
+
+def work_alpha(w_lo: int, w_hi: int) -> float:
+    """Growth exponent of W over the GROWTH-times data step."""
+    return math.log(max(w_hi, 1) / max(w_lo, 1), GROWTH)
+
+
+def assert_work_growth(name: str, w_lo: int, w_hi: int) -> None:
+    """Fail a super-linear query that WORK_ALLOWED does not list, and a
+    listed query that no longer flags (both outside ALPHA_MARGIN)."""
+    alpha = work_alpha(w_lo, w_hi)
+    reading = f"work {w_lo:,} -> {w_hi:,} rows over {GROWTH}x data, alpha {alpha:.3f}"
+    if name in WORK_ALLOWED:
+        assert alpha > ALPHA_FLAG - ALPHA_MARGIN, (
+            f"{name}: stale allowance — {reading} no longer exceeds "
+            f"{ALPHA_FLAG}; delete its WORK_ALLOWED entry"
+        )
+    else:
+        assert alpha <= ALPHA_FLAG + ALPHA_MARGIN, (
+            f"{name}: super-linear work — {reading} > {ALPHA_FLAG}; audit "
+            "the join keys' match cardinality, explode fan-out and hot "
+            "keys (a WORK_ALLOWED entry is only for a deliberate baseline "
+            "with a written reason)"
+        )
+
+
+def build_lo_fixture(small_dir: str, hi_dir: str, out_dir: str) -> str:
+    """Write the gate's lo fixture to ``out_dir``: every table of
+    ``small_dir`` (the generator's GROWTH-times smaller step) except
+    LO_SAMPLED, which come from ``hi_dir`` filtered to
+    ``key % GROWTH == 0`` with ``key // GROWTH`` as the new key.
+    Returns ``out_dir``."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from discogs_etl_spark.tables import TABLE_NAMES
+
+    os.makedirs(out_dir, exist_ok=True)
+    for t in TABLE_NAMES:
+        dst = os.path.join(out_dir, f"{t}.parquet")
+        if t not in LO_SAMPLED:
+            shutil.copyfile(os.path.join(small_dir, f"{t}.parquet"), dst)
+            continue
+        table = pq.read_table(os.path.join(hi_dir, f"{t}.parquet"))
+        key = LO_SAMPLED[t]
+        ids = table[key].to_numpy()
+        table = table.filter(pa.array(ids % GROWTH == 0))
+        i = table.schema.get_field_index(key)
+        renumbered = pa.array(ids[ids % GROWTH == 0] // GROWTH, type=table.schema.field(i).type)
+        pq.write_table(table.set_column(i, table.schema.field(i), renumbered), dst)
+    return out_dir
 
 
 def pinned_names() -> list[str]:

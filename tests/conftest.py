@@ -38,6 +38,15 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def sf_lo(tmp_path_factory):
+    """The work-growth gate's lo fixture: every scaling table 10x
+    smaller than SF_ORACLE (scripts/plan_fingerprint.py::build_lo_fixture)."""
+    return load_script("plan_fingerprint").build_lo_fixture(
+        SF_SMOKE, SF_ORACLE, str(tmp_path_factory.mktemp("sf_lo"))
+    )
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 

@@ -54,39 +54,6 @@ def test_host_fingerprint_shape():
     assert fp == host_fingerprint()
 
 
-def test_timing_compare_host_warning_is_not_a_gate(tmp_path, capsys):
-    # The host-changed message is informational: two sweeps with
-    # different _host stamps but identical timings must still PASS.
-    import json
-
-    tc = load_script("timing_compare")
-    prev = {"q": 1.0, "_host": {"cpu_count": 32, "cpu_model": "A"}}
-    cur = {"q": 1.0, "_host": {"cpu_count": 80, "cpu_model": "B"}}
-    p, c = tmp_path / "TIMINGS_r98.json", tmp_path / "TIMINGS_r99.json"
-    p.write_text(json.dumps(prev))
-    c.write_text(json.dumps(cur))
-    import sys
-
-    argv = sys.argv
-    sys.argv = ["timing_compare.py", "--prev", str(p), "--cur", str(c)]
-    try:
-        rc = tc.main()
-    finally:
-        sys.argv = argv
-    out = capsys.readouterr().out
-    assert rc == 0
-    assert "WARNING host changed" in out
-    # same-host pair: no warning
-    c.write_text(json.dumps({"q": 1.0, "_host": prev["_host"]}))
-    sys.argv = ["timing_compare.py", "--prev", str(p), "--cur", str(c)]
-    try:
-        rc = tc.main()
-    finally:
-        sys.argv = argv
-    assert rc == 0
-    assert "WARNING host changed" not in capsys.readouterr().out
-
-
 def test_mid_run_contention_flags_via_after_loadavg():
     # r14 review: a clean start plus foreign work arriving mid-run
     # shipped load_contaminated: false — the BENCH_r13 failure mode for

@@ -61,8 +61,7 @@ def test_file_dependent_oracle_allowlist_names_are_registered():
     """The probe's FILE_DEPENDENT_ORACLES allowlist (r12 ADVICE) must
     track the registry: a renamed query would silently demote its probe
     result from row-set match to an informational DIVERGE while the
-    dead allowlist entry lingered — same guard the timing gate's
-    COLD_START_MAX_SEC names carry."""
+    dead allowlist entry lingered."""
     from discogs_etl_spark.registry import all_specs
 
     allow = _probe_mod().FILE_DEPENDENT_ORACLES

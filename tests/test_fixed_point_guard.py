@@ -130,3 +130,23 @@ def test_memoized_column_follows_the_current_ansi_setting(spark):
             df.select(col.alias("f")).collect()
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize(
+    "bad", [float("nan"), float("inf"), float("-inf")], ids=["nan", "+inf", "-inf"]
+)
+def test_non_finite_value_raises_under_ansi(spark, bad):
+    """NaN/±Inf never become a number under ANSI: FLOOR(double) would
+    saturate them to 0 / ±Long.MAX, so half_up_long routes them through
+    its final cast, which raises — for the per-row value and the sum."""
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    df = spark.createDataFrame([(1.25,), (bad,)], "x double")
+    try:
+        spark.conf.set(key, "true")
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            df.select(fixed("x", 2).alias("f")).collect()
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            df.agg(dsum("x", 2).alias("s")).collect()
+    finally:
+        spark.conf.set(key, before)
