@@ -14,13 +14,9 @@ and round-over-round perf comparison came back empty).
 Each query is forced through the noop sink (full computation of every
 output column, no collect/IO skew) after a shared warmup.
 
-``--ladder`` (or SPARK_GRAFT_LADDER=1) runs the same set at EVERY scale
-factor listed in SPARK_GRAFT_LADDER_DIRS (default sf0.001,sf0.01,sf0.1)
-in one session and prints one JSON line with per-sf timings plus the
-t(sf_hi)/t(sf_lo) ratio per query — the three-point scaling table that
-says whether each plan's cost tracks data volume (~linear: ratio ≈ sf
-ratio x constant overheads) or blows up super-linearly.  The driver
-contract never sets it."""
+How each query's cost grows with the data is not measured here: the
+work-growth gate (tests/test_work_growth.py) grades every registered
+query, the bench set included, from exact operator row counts."""
 
 from __future__ import annotations
 
@@ -141,53 +137,8 @@ def _run_set(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    ladder = "--ladder" in sys.argv[1:] or os.environ.get(
-        "SPARK_GRAFT_LADDER", ""
-    ) in ("1", "true")
     spark = get_spark(app_name="discogs-etl-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    if ladder:
-        dirs = os.environ.get(
-            "SPARK_GRAFT_LADDER_DIRS",
-            "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1",
-        ).split(",")
-        per_sf: dict[str, dict[str, float]] = {}
-        for d in dirs:
-            sf = _sf_from_dir(d)
-            key = str(sf)
-            # fail loudly on unparseable or colliding sf names — a silent
-            # key collision would overwrite one run's timings and emit a
-            # corrupt ladder artifact
-            if sf <= 0:
-                raise SystemExit(
-                    f"--ladder: cannot parse a scale factor from {d!r} "
-                    "(expected .../sfN directories)"
-                )
-            if key in per_sf:
-                raise SystemExit(f"--ladder: duplicate scale factor {key} in dirs")
-            _warmup(spark, d)
-            per_sf[key] = _run_set(spark, d)[0]
-        sfs = sorted(per_sf, key=float)
-        lo, hi = sfs[0], sfs[-1]
-        ratios = {
-            name: round(per_sf[hi][name] / max(per_sf[lo][name], 1e-9), 2)
-            for name in per_sf[hi]
-        }
-        print(
-            json.dumps(
-                {
-                    "metric": "headline_queries_scaling_ladder",
-                    "unit": "sec",
-                    "sfs": sfs,
-                    "sf_ratio": round(float(hi) / float(lo), 1),
-                    "per_sf": per_sf,
-                    "time_ratio_hi_over_lo": ratios,
-                }
-            )
-        )
-        spark.stop()
-        return
 
     # Box-load fingerprint bracketing the measured window: two rounds
     # running, the driver artifact recorded a contended-box reading that

@@ -103,9 +103,7 @@ def _cmd_dedup(args) -> int:
             id_col=args.id,
             payload_col=args.text,
             max_bucket=args.max_bucket,
-            # --real-decode forces pixels; otherwise fall through to the
-            # per-session probe gate (None), same as the library default
-            real=True if args.real_decode else None,
+            real=args.real_decode,
         )
     else:
         survivors, report = dedup_corpus(

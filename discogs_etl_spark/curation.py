@@ -152,7 +152,7 @@ def dedup_media(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     max_bucket: int | None = None,
-    real: bool | None = None,
+    real: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Deduplicate a MEDIA table by perceptual content — the
     ``dedup_corpus`` contract for opaque-binary columns.  Returns
@@ -161,10 +161,9 @@ def dedup_media(
     Pipeline = the oracle-checked ``multimodal_phash_dedup`` path:
     64-bit perceptual hash per payload (Arrow-batched map stage;
     ``multimodal.phash_hashes`` — ``real=True`` runs the in-repo
-    ``ahash64_png`` pixel aHash, ``real=None`` probes the per-session
-    real-decode gate, ``real=False`` pins the deterministic stand-in
-    the registered oracle query uses), exact-hash pre-grouping +
-    8×8-bit banded candidates,
+    ``ahash64_png`` pixel aHash, the default ``real=False`` the
+    deterministic stand-in the registered oracle query uses), exact-hash
+    pre-grouping + 8×8-bit banded candidates,
     popcount Hamming ≤ 7 pairs, large-star/small-star connected
     components, keep min-id per component.  NULL payloads are never
     duplicates of each other and all survive.

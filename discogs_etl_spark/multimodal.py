@@ -10,13 +10,12 @@ The decode stage is where a real deployment plugs in PIL / ffmpeg /
 librosa.  Those libraries are not in this container, so by default the
 stage routes through a DETERMINISTIC FAKE decoder (feature values derived
 from the payload's md5 — stable across engines, so the whole pipeline is
-oracle-checkable).  The REAL path is probe-gated per session
-(``spark.discogs_etl_spark.multimodal.realDecode`` conf or the
-``DISCOGS_ETL_SPARK_REAL_DECODE`` env var — no code edit needed); on it,
-PNG images genuinely decode bytes→pixels via the stdlib ``zlib``+
-``struct`` decoder below (true dimensions, all five scanline filters,
-inflate bounded by the IHDR-promised size so a hostile IDAT cannot
-decompression-bomb an executor), RIFF/WAVE PCM audio parses to true
+oracle-checkable).  The REAL path is the caller's explicit ``real=True``
+(the CLI's ``--real-decode``); on it, PNG images genuinely decode
+bytes→pixels via the stdlib ``zlib``+``struct`` decoder below (true
+dimensions, all five scanline filters, inflate bounded by the
+IHDR-promised size so a hostile IDAT cannot decompression-bomb an
+executor), RIFF/WAVE PCM audio parses to true
 sample rate / channels / duration / frame count via ``struct`` alone,
 and RIFF/AVI video parses its main header to true width / height /
 frames / duration (codec payloads still need ffmpeg), while formats
@@ -99,38 +98,15 @@ def with_payload(df: DataFrame) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Real-decode gate.  The registered (oracle-checked) queries always run the
-# deterministic fake; a deployment flips the REAL path on per-session with
-#   spark.conf:  spark.discogs_etl_spark.multimodal.realDecode = true
-# or per-process with  DISCOGS_ETL_SPARK_REAL_DECODE=1  (env wins).  The
-# flag is resolved DRIVER-SIDE at plan-build time in decode_features and
-# captured into the mapInPandas closure — executors never probe confs.
-# What "real" buys today with zero extra libraries: PNG images decode
-# bytes→pixels via the stdlib zlib+struct decoder below (true IHDR
-# dimensions, all five scanline filters), RIFF/WAVE PCM audio parses to
-# true duration/frames, and RIFF/AVI video parses its main header to
-# true dims/frames/duration; other media formats still need
-# PIL/ffmpeg/librosa and raise the clearly-marked NotImplementedError.
-REAL_DECODE_CONF = "spark.discogs_etl_spark.multimodal.realDecode"
-_REAL_DECODE_ENV = "DISCOGS_ETL_SPARK_REAL_DECODE"
-
-
-def _truthy(v: str) -> bool:
-    return v.strip().lower() in ("1", "true", "yes")
-
-
-def real_decode_requested() -> bool:
-    import os
-
-    env = os.environ.get(_REAL_DECODE_ENV)
-    if env is not None:
-        return _truthy(env)
-    s = SparkSession.getActiveSession()
-    if s is None:
-        return False
-    # same truthy forms as the env var — conf.set(..., '1') must not
-    # silently leave the fake decoder active
-    return _truthy(s.conf.get(REAL_DECODE_CONF, "false"))
+# Real decode.  The registered (oracle-checked) queries run the
+# deterministic fake; a caller turns the REAL path on with ``real=True``,
+# captured into the mapInPandas closure at plan-build time.  What "real"
+# buys today with zero extra libraries: PNG images decode bytes→pixels via
+# the stdlib zlib+struct decoder below (true IHDR dimensions, all five
+# scanline filters), RIFF/WAVE PCM audio parses to true duration/frames,
+# and RIFF/AVI video parses its main header to true dims/frames/duration;
+# other media formats still need PIL/ffmpeg/librosa and raise the
+# clearly-marked NotImplementedError.
 
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
@@ -358,13 +334,12 @@ def decode_avi(data: bytes):
 
 
 def _decode_one(payload: bytes, media_type: str, real: bool = False) -> dict:
-    """The decode kernel.  With ``real=True`` (probe-gated, see
-    REAL_DECODE_CONF) PNG image payloads decode bytes→pixels for TRUE
-    dimensions and RIFF/WAVE PCM audio parses to true duration/frames;
-    everything else on the real path (video, non-PNG images, compressed
-    audio) still needs the media libraries this container lacks and
-    raises the marked error."""
-    if real:  # pragma: no cover - exercised directly in tests, not via conf
+    """The decode kernel.  With ``real=True`` PNG image payloads decode
+    bytes→pixels for TRUE dimensions and RIFF/WAVE PCM audio parses to
+    true duration/frames; everything else on the real path (video,
+    non-PNG images, compressed audio) still needs the media libraries
+    this container lacks and raises the marked error."""
+    if real:
         if media_type == "image" and payload[:8] == PNG_MAGIC:
             w, ht, _px = decode_png(payload)
             return {
@@ -425,7 +400,7 @@ def _decode_one(payload: bytes, media_type: str, real: bool = False) -> dict:
     }
 
 
-def decode_features(df: DataFrame, real: bool | None = None) -> DataFrame:
+def decode_features(df: DataFrame, real: bool = False) -> DataFrame:
     """Arrow-batched decode/feature-extraction over payload bytes.
 
     Scale: mapInPandas keeps whole Arrow batches in flight (no
@@ -434,15 +409,8 @@ def decode_features(df: DataFrame, real: bool | None = None) -> DataFrame:
     Real image decode is CPU-bound, so at 100 TB this stage is sized by
     cores, not by shuffle capacity — exactly what a map-only stage wants.
 
-    ``real=None`` (the API default) probes the per-session flag
-    (REAL_DECODE_CONF / env, see the gate above) HERE, driver-side at
-    plan-build time, and captures the answer into the closure.
-    Registered oracle queries pass ``real=False`` EXPLICITLY so a
-    deployment-wide ``DISCOGS_ETL_SPARK_REAL_DECODE=1`` export cannot
-    silently flip evidence runs onto the real path (where synthetic
-    non-PNG/WAV payloads raise) and poison the correctness gate."""
-    if real is None:
-        real = real_decode_requested()
+    ``real=True`` runs the real decoders (see the note above); the
+    default is the deterministic fake the registered queries check."""
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -593,7 +561,7 @@ _SQL_H = "md5(text)"
 def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary payload → typed media features via Arrow-batched mapInPandas
     (deterministic stub decoder; see module docstring for the contract)."""
-    return decode_features(with_payload(load(spark, sf_dir, "documents")), real=False)
+    return decode_features(with_payload(load(spark, sf_dir, "documents")))
 
 
 @register(
@@ -754,7 +722,7 @@ def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-video frame sampling: decode → 1→N frame fan-out, both as
     Arrow-batched map stages."""
-    decoded = decode_features(with_payload(load(spark, sf_dir, "documents")), real=False)
+    decoded = decode_features(with_payload(load(spark, sf_dir, "documents")))
     return sample_frames(decoded.where(F.col("media_type") == "video"))
 
 
@@ -915,7 +883,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_type") == "image"
     )
     # hash stage runs once; four subplans in the pair pipeline read it
-    hashes = phash_hashes(img, real=False).localCheckpoint()
+    hashes = phash_hashes(img).localCheckpoint()
     return phash_near_dup_pairs(hashes)
 
 
@@ -950,19 +918,13 @@ def ahash64_png(payload: bytes) -> int:
     return _pack_bits64((grid > grid.mean()).ravel(), np)
 
 
-def phash_hashes(payloads: DataFrame, real: bool | None = None) -> DataFrame:
+def phash_hashes(payloads: DataFrame, real: bool = False) -> DataFrame:
     """(doc_id, hv): 64-bit perceptual hash per payload, packed into ONE
     BIGINT (two's complement) inside an Arrow-batched map stage.  The
     deterministic stand-in is a simhash over whitespace tokens; with
     ``real=True`` the SAME map stage runs ``ahash64_png`` instead —
     genuine decode → 8×8 mean-threshold aHash over pixels (a DCT pHash
-    via PIL drops into the same slot).  ``real=None`` probes the
-    per-session gate (REAL_DECODE_CONF / env) driver-side at plan-build
-    time, exactly like ``decode_features``; registered oracle queries
-    pass ``real=False`` explicitly so a deployment-wide export cannot
-    flip evidence runs onto the real path."""
-    if real is None:
-        real = real_decode_requested()
+    via PIL drops into the same slot)."""
 
     def phash64(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -1184,7 +1146,7 @@ def multimodal_phash_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     img = with_payload(load(spark, sf_dir, "documents")).where(
         F.col("media_type") == "image"
     )
-    hashes = phash_hashes(img, real=False).localCheckpoint()
+    hashes = phash_hashes(img).localCheckpoint()
     return phash_near_dup_pairs(hashes, max_bucket=_PHASH_MAX_BUCKET)
 
 
@@ -1222,7 +1184,7 @@ def multimodal_phash_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFr
     img = with_payload(load(spark, sf_dir, "documents")).where(
         F.col("media_type") == "image"
     )
-    hashes = phash_hashes(img, real=False)
+    hashes = phash_hashes(img)
     return phash_dropped_buckets(
         phash_bucket_counts(hashes), _PHASH_MAX_BUCKET
     ).select(
@@ -1297,7 +1259,7 @@ def curation_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("media_type") == "image")
         .select("doc_id", "payload")
     )
-    survivors, report = dedup_media(spark, img, real=False)
+    survivors, report = dedup_media(spark, img)
     return survivors.select("doc_id").crossJoin(F.broadcast(report))
 
 
@@ -1378,9 +1340,7 @@ def curation_dedup_media_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("media_type") == "image")
         .select("doc_id", "payload")
     )
-    survivors, report = dedup_media(
-        spark, img, max_bucket=_PHASH_MAX_BUCKET, real=False
-    )
+    survivors, report = dedup_media(spark, img, max_bucket=_PHASH_MAX_BUCKET)
     return survivors.select("doc_id").crossJoin(F.broadcast(report))
 
 
@@ -1423,7 +1383,7 @@ def multimodal_media_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the decode is the Arrow-batched map-only stage; the rollup is
     one 3-key aggregation — inventorying 100 TB of media costs one scan."""
-    feats = decode_features(with_payload(load(spark, sf_dir, "documents")), real=False)
+    feats = decode_features(with_payload(load(spark, sf_dir, "documents")))
     return feats.groupBy("media_type").agg(
         F.count(F.lit(1)).alias("n_assets"),
         F.sum("byte_len").cast("bigint").alias("total_bytes"),

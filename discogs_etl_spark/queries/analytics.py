@@ -28,7 +28,7 @@ from discogs_etl_spark.queries._util import (
     sql_dsum,
 )
 from discogs_etl_spark.registry import register
-from discogs_etl_spark.session import local_frame
+from discogs_etl_spark.session import local_frame, scoped_conf
 from discogs_etl_spark.tables import load
 
 
@@ -440,24 +440,8 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared session's other plans never see them.  Correctness is
     bloom-independent (false positives are re-checked by the exact join),
     so the oracle is the plain join."""
-    # get(k, None) returns None when the conf is NOT explicitly set (the
-    # registered Spark default doesn't count); get(k) would return that
-    # default and the restore below would then pin previously-unset confs
-    # as explicitly set — a state leak the plan test asserts against.
-    saved: dict[str, str | None] = {
-        k: spark.conf.get(k, None) for k in _BLOOM_RUNTIME_CONFS
-    }
-    for k, v in _BLOOM_RUNTIME_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        out = _bloom_join_frame(spark, sf_dir).localCheckpoint()
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return out
+    with scoped_conf(spark, _BLOOM_RUNTIME_CONFS):
+        return _bloom_join_frame(spark, sf_dir).localCheckpoint()
 
 
 @register(

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 
 from discogs_etl_spark.queries._util import half_up_long, memo_cache
 from discogs_etl_spark.registry import register
-from discogs_etl_spark.session import local_frame
+from discogs_etl_spark.session import local_frame, scoped_conf
 from discogs_etl_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -58,16 +58,6 @@ _SHINGLES_SQL = (
     "THEN transform(sequence(1, size({w}) - 2), i -> array_join(slice({w}, i, 3), ' ')) "
     "ELSE array() END)"
 )
-
-
-def _shingles_of(w: Column) -> Column:
-    """Column-API shim over :data:`_SHINGLES_SQL` (kept for callers that
-    already hold a Column)."""
-    seq = F.sequence(F.lit(1), F.size(w) - 2)
-    shingles = F.transform(seq, lambda i: F.array_join(F.slice(w, i, 3), " "))
-    return F.array_distinct(
-        F.when(F.size(w) >= 3, shingles).otherwise(F.array().cast("array<string>"))
-    )
 
 
 def _with_shingles(df: DataFrame, *keep: str) -> DataFrame:
@@ -176,8 +166,8 @@ def _dot(a: Column, b: Column, w: int | None = None) -> Column:
     but compiled by expression codegen instead of interpreted per
     element: ``aggregate``'s lambda evaluation walks an interpreted
     closure per array cell, measured 5-7x slower than the compiled
-    chain on the pair-join hot paths (guide §1.2 per-task work;
-    OPTIMIZATION_r18.md batch 3)."""
+    chain on the pair-join hot paths (guide §1.2 per-task work).  The
+    exact oracles of the cosine pair queries check the bit-identity."""
     if w is not None:
         acc: Column = F.lit(0.0)
         for i in range(w):
@@ -277,14 +267,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by exact word-3-gram Jaccard ≥ 0.3.
 
     Candidate pairs come from an inverted index on shingles (only docs
-    sharing a shingle are compared — never a cross join).  r19: the
-    index is consumed as POSTING LISTS (one collect_list per shingle +
-    in-list position-ordered pair emission) instead of an exploded
-    self-join — the shingle subtree builds ONCE instead of twice, and
-    the build-a-hash-relation/probe machinery of the self-join is gone;
-    per-pair emission and the (doc_a, doc_b) count are unchanged, so
-    n_common is the identical multiset (oracle-exact at all three
-    fixture sfs; guide §2.4, OPTIMIZATION_r19.md).  Scale: posting
+    sharing a shingle are compared — never a cross join).  The index is
+    consumed as POSTING LISTS (one collect_list per shingle + in-list
+    position-ordered pair emission), not as an exploded self-join: the
+    shingle subtree builds ONCE, with no hash-relation build and probe
+    (guide §2.4).  Pair emission and the (doc_a, doc_b) count are those
+    of the self-join, so n_common is the same multiset; the oracle (a
+    self-join) checks it exactly, and dedup_minhash_eval's plan pin
+    shows the second documents scan gone.  Scale: posting
     lists blow up on very common shingles exactly where the old join's
     hot keys did; the prefix-filter variant and the MinHash variant
     below are the 100 TB paths, this one is the exact verifier."""
@@ -330,8 +320,9 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard documents) mostly never enter it.  MinHash LSH
     remains the approximate alternative when even prefixes are too many.
 
-    r19 rewrite (182.8 -> ~8 s at sf0.1, values byte-identical —
-    oracle-exact at all three fixture sfs; OPTIMIZATION_r19.md):
+    Three choices keep the cost candidate-bound (together 182.8 s ->
+    ~8 s measured at sf0.1; the shared oracle checks the values
+    exactly):
 
     * The old verify tail re-split and re-shingled BOTH texts per
       candidate PAIR — at sf0.1 the synthetic corpus is adversarial for
@@ -1862,19 +1853,20 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_pairs = pairs.count()
     cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     loop_parts = max(1, min(cur_parts, n_pairs // 500_000 + 1))
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    edges = (
-        pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .toDF("u", "v")
-        .repartition(loop_parts, "u")
-    )
-    # Round 1 fused into initialization: min(node, direct neighbors) is one
-    # grouped min over edges ∪ self-loops — same shuffle the old
-    # distinct-then-propagate init paid for labels alone, one fewer
-    # join+agg round on the wire (measured ~1s/round of fixed latency at
-    # small scale; at 100 TB a full map-reduce pass saved per run).
-    try:
+    # Labels are cached+materialized by the convergence actions, so the
+    # returned plan reads the cache — restoring the session's shuffle
+    # sizing when the scope ends cannot re-plan the loop's exchanges.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
+        edges = (
+            pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
+            .toDF("u", "v")
+            .repartition(loop_parts, "u")
+        )
+        # Round 1 fused into initialization: min(node, direct neighbors) is one
+        # grouped min over edges ∪ self-loops — same shuffle the old
+        # distinct-then-propagate init paid for labels alone, one fewer
+        # join+agg round on the wire (measured ~1s/round of fixed latency at
+        # small scale; at 100 TB a full map-reduce pass saved per run).
         labels = (
             edges.union(edges.select(F.col("u"), F.col("u")))
             .groupBy("u")
@@ -1903,11 +1895,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
-    finally:
-        # Labels are cached+materialized by the convergence actions, so the
-        # returned plan reads the cache — restoring the session's shuffle
-        # sizing here cannot re-plan the loop's exchanges.
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
     )
@@ -2995,9 +2982,8 @@ def connected_components_star(spark: SparkSession, pairs: DataFrame) -> DataFram
     lineage per round."""
     a, b = pairs.columns[0], pairs.columns[1]
     n_pairs = pairs.count()
-    prev_conf = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(1, min(int(prev_conf), n_pairs // 500_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
+    cur_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    loop_parts = max(1, min(cur_parts, n_pairs // 500_000 + 1))
 
     def _signature(e):
         return e.agg(
@@ -3008,7 +2994,7 @@ def connected_components_star(spark: SparkSession, pairs: DataFrame) -> DataFram
             ).alias("s"),
         ).first()
 
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         # canonical u > v; self-loops contribute nothing and are dropped
         edges = (
             pairs.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
@@ -3062,8 +3048,6 @@ def connected_components_star(spark: SparkSession, pairs: DataFrame) -> DataFram
                 if ss.exceptAll(prev_edges).isEmpty():
                     break
             sig = new_sig
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
     # star forest: every edge points node→root(min); roots label themselves
     return (
         edges.select(F.col("u").alias("doc_id"), F.col("v").alias("component_id"))
@@ -4943,12 +4927,11 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("window_text"),
         )
     )
-    # r18 AUDITED, left alone: a manual (window, doc) pre-agg rollup was
-    # tried and measured NEUTRAL (4.32 → 4.22 s at sf0.1, noise) —
-    # Spark 4.1's single-distinct rewrite already plans this count +
-    # countDistinct pair as the identical two-stage aggregation (no
-    # Expand; see plans/r18/dedup_substring_windows_before.txt), so the
-    # built-in form stays.
+    # Built-in count + countDistinct on purpose: Spark 4.1's
+    # single-distinct rewrite already plans the pair as a two-stage
+    # aggregation with no Expand (explain() shows it), and a manual
+    # (window, doc) pre-agg rollup measured neutral (4.32 → 4.22 s at
+    # sf0.1, noise).
     return (
         winds.groupBy("window_text")
         .agg(

@@ -23,17 +23,28 @@ into a DataFrame (catalogs, audit/report rows, constant tables).
 built from a ``pyarrow.Table`` is a ``LocalRelation`` (with or without
 the Arrow conf), and projections/filters over it fold at optimisation
 time, so ``collect()`` runs no job.
+
+``scoped_conf`` is the one way a builder changes a runtime conf for a
+stretch of work: it restores every key afterwards, also when the body
+raises, and unsets a key that was unset before.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable, Iterator, Mapping, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-__all__ = ["get_spark", "host_fingerprint", "local_frame", "tune_for_correctness"]
+__all__ = [
+    "get_spark",
+    "host_fingerprint",
+    "local_frame",
+    "scoped_conf",
+    "tune_for_correctness",
+]
 
 
 def host_fingerprint() -> dict:
@@ -137,6 +148,26 @@ def tune_for_correctness(spark: SparkSession) -> SparkSession:
     # changes WHICH compiled form runs, never what it computes.
     spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, settings: Mapping[str, str]) -> Iterator[None]:
+    """Hold ``settings`` on ``spark`` for the body of the ``with`` block,
+    then restore each key's previous value.  ``conf.get(k, None)`` is
+    None for a key that was never set (its registered default does not
+    count), and such a key is unset again rather than pinned to the
+    default it read as."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def local_frame(spark: SparkSession, rows: Iterable[Sequence], schema: str) -> DataFrame:

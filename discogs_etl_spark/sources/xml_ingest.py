@@ -38,7 +38,6 @@ covered by tests/test_xml_ingest.py:
 
 from __future__ import annotations
 
-import gzip
 import io
 import re
 import zlib
@@ -80,19 +79,6 @@ def detect_data_type(url: str) -> str:
         if data_type in url:
             return data_type
     raise ValueError(f"cannot detect data type from {url!r}")
-
-
-def lenient_gzip_decompress(data: bytes) -> bytes:
-    """Decompress gzip, tolerating truncated streams / CRC errors the way
-    the reference does (process.py:47-64): return what decompressed."""
-    try:
-        return gzip.decompress(data)
-    except (OSError, EOFError, zlib.error):
-        d = zlib.decompressobj(16 + zlib.MAX_WBITS)
-        try:
-            return d.decompress(data)
-        except zlib.error:
-            return b""
 
 
 _XML_DECL_RE = re.compile(r"<\?xml[^>]*\?>")

@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from discogs_etl_spark.queries._util import dec
 from discogs_etl_spark.registry import register
-from discogs_etl_spark.session import local_frame
+from discogs_etl_spark.session import local_frame, scoped_conf
 
 # The on-disk parquet stores TIMESTAMP(MICROS) with isAdjustedToUTC=false
 # (verified via the parquet footer at every sf), which Spark reads as
@@ -638,12 +638,8 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one RocksDB keyspace per (user, state) — point lookups, no
     per-batch full-state scan; output is one row per user per batch."""
     proc = TypeCountsProcessor()
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    rocksdb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}):
         events = read_events_stream(spark, sf_dir)
         out = events.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=proc,
@@ -657,11 +653,6 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_stream_to_table(
             out, "stream_transform_with_state_sink", "update"
         )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
 @register(

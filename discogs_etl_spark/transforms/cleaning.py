@@ -1,7 +1,6 @@
 """Byte/text cleaning with the reference's semantics (SURVEY.md §2.3
-P3-P5), usable both inside the executor-side parse kernel (plain Python on
-bytes, the hot path is one pass per record) and as Spark column
-expressions for post-parse normalization.
+P3-P5), used inside the executor-side parse kernel (plain Python on
+bytes, the hot path is one pass per record).
 
 Semantics pinned (and unit-tested against golden fixtures):
 
@@ -22,9 +21,6 @@ Semantics pinned (and unit-tested against golden fixtures):
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # XML 1.0 invalid character ranges (everything not in
 # #x9 | #xA | #xD | [#x20-#xD7FF] | [#xE000-#xFFFD] | [#x10000-#x10FFFF]).
@@ -76,14 +72,3 @@ def escape_bare_amps(text: str) -> str:
     text instead of losing the record (or the task)."""
     return _BARE_AMP_RE.sub("&amp;", text)
 
-
-# ---- column-expression twins (for post-parse normalization pipelines) ----
-
-def col_clean_invalid_xml(c: Column | str) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.regexp_replace(c, _INVALID_XML_RE.pattern, " ")
-
-
-def col_collapse_whitespace(c: Column | str) -> Column:
-    c = F.col(c) if isinstance(c, str) else c
-    return F.trim(F.regexp_replace(c, r"\s+", " "))

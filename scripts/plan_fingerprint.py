@@ -10,7 +10,8 @@ see a Catalyst strategy flip — the recsys_holdout_hitrate nested loop
 machine-checked the PHYSICAL plan.  This module normalizes an
 EXECUTED plan (the AQE final plan, not the initial one — runtime
 broadcast conversions are part of the strategy under test) into a small
-dict of node counts that tests/test_plans.py pins per query:
+dict of node counts that PLAN_PINS below pins per query and
+tests/test_plans.py checks:
 
     {"scan_parquet": 1, "scan_rdd": 0, "local_scan": 0, "bhj": 2,
      "smj": 0, "shj": 0, "bnlj": 0, "cartesian": 0, "cache": 0}
@@ -45,15 +46,15 @@ broadcast conversions depend on observed sizes, so the pins are
 statements about the plan AT that condition, exactly the condition the
 suite reruns them under.  UPDATE PATH when a plan legitimately changes:
 rerun this script for the touched names and paste the new dict into
-tests/test_plans.py's PLAN_PINS, with a commit message saying WHY the
-shape moved (a pin update without a rationale is the smell the gate
-exists to produce).
+PLAN_PINS below, with a commit message saying WHY the shape moved (a
+pin update without a rationale is the smell the gate exists to
+produce).
 
     python scripts/plan_fingerprint.py [--sf /root/testdata/sf0.001]
                                        [--only a,b,...] [--pins]
 
-``--pins`` prints the ready-to-paste PLAN_PINS body for the gate's
-pinned set (bench headline set + the previously-fixed scale-killers).
+``--pins`` prints the ready-to-paste PLAN_PINS body for every pinned
+query (or the ``--only`` names).
 """
 
 from __future__ import annotations
@@ -65,97 +66,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# The gate's pinned set: every bench=True headline query (the 23 the
-# driver times every round) plus the previously-fixed scale-killers —
-# queries whose plan SHAPE was the bug once already:
-#   recsys_holdout_hitrate      r10: OR-of-equalities join nested-looped;
-#                               fixed as a union of two hash equi-joins
-#   dedup_minhash_eval          r11: three driver .count() actions re-ran
-#                               the all-pairs join twice; now ONE plan
-#   embedding_power_iteration_pc1 / _gram
-#                               r9/r10: the covariance fold must be
-#                               physically materialized (zero parquet
-#                               scans in the returned iteration plan)
-SCALE_KILLERS = (
-    "recsys_holdout_hitrate",
-    "dedup_minhash_eval",
-    "embedding_power_iteration_pc1",
-    "embedding_power_iteration_pc1_gram",
-)
-
-# Second tier: queries whose 100 TB story IS a specific plan shape — the
-# bucketed/salted/as-of join demos and the production twins of the two
-# all-pairs baselines.  Their correctness is hash-gated like everything
-# else; what the pin protects is the CLAIMED strategy (a bucket join
-# that quietly un-buckets, an IVF candidate join that falls back to
-# brute force, a pruned index that loses its broadcast) — the part a
-# reviewer cites and a value hash cannot see.
-SCALE_STORY = (
-    "range_join_bucketed",
-    "join_skew_salted",
-    "agg_salted_skew_safe",
-    "asof_join_events",
-    "asof_join_tolerance",
-    "dedup_embedding_bucketed",
-    "similarity_ivf_topk",
-    "text_search_bm25_pruned_topk",
-    # r17 (VERDICT r16 task #7): the LSH skew guards' whole story is the
-    # width-filter join on the bucket key BEFORE candidate generation —
-    # a rewrite that silently drops the filter reverts to uncapped
-    # O(width²) pair emission while values stay plausible at fixture
-    # scale, so the shape must redden the plan gate, not just the value
-    # gate.
-    "dedup_minhash_capped_pairs",
-    "multimodal_phash_capped_pairs",
-)
-
-# Third tier: the expensive non-headline tail — the registry's
-# costliest sf0.1 walls outside the bench set when the tier was chosen
-# (phash 20.9 s, theil_sen 11.4 s, semdedup 9.7 s, doc_duplication
-# 8.1 s, pricing_audit 7.8 s, levenshtein 6.5 s).  These are where a
-# silent Catalyst strategy flip costs the most wall time: each one's
-# cost is ACCEPTABLE only under its current shape (banded equi-join,
-# cluster-scoped pairs, blocked compare), and a flip to a broader join
-# multiplies a double-digit wall, so they get the same deterministic
-# pin as the headline set.
-EXPENSIVE_TAIL = (
-    # phash's r15 rewrite cut its wall from 15.4 s to ~2 s, but the pin
-    # stays: the new shape (4 BHJ over a localCheckpointed hash stage)
-    # is exactly what makes it cheap, so a strategy flip is still the
-    # costliest thing that could happen to it.
-    "multimodal_phash_dedup",
-    "stats_theil_sen_trend",
-    "dedup_semdedup",
-    "dedup_doc_duplication_score",
-    "fuzzy_join_levenshtein_blocked",
-    "pricing_consistency_audit",
-)
-
-# Fourth tier (r17): the user-facing curation API compositions — the
-# queries that run `curation.dedup_corpus` / `dedup_media` /
-# `search_corpus` / `profile_table` END TO END.  Their stages are
-# individually pinned above (minhash/phash capped pairs, BM25, CC),
-# but the API composes them across module boundaries, so a regression
-# in the GLUE (a lost broadcast on the report attach, a re-shuffled
-# survivor join, a dropped width filter at the API call site) is
-# invisible to the stage pins while multiplying the cost of the exact
-# entry points a reference user calls.  `curation_dedup_media_capped`
-# is also the costliest non-baseline tail this round (16.7 s sf0.1).
-API_SURFACE = (
-    "curation_dedup_corpus",
-    "curation_dedup_media",
-    "curation_dedup_media_capped",
-    "curation_search_corpus",
-    "curation_profile_table",
-    # r18: the backfill CLI verb's composition.  The RETURNED plan is
-    # the audit report (one local-results scan — the ingest jobs are
-    # actions inside pipeline.backfill, invisible to the returned
-    # DataFrame), so the pin is thin by construction; what it guards is
-    # the report staying driver-local (a rewrite that turns the audit
-    # into a distributed join against the lake would grow scans here).
-    "backfill_audit_table",
-)
 
 # Physical-node classification by JVM class name.  The extractor WALKS
 # THE PLAN OBJECTS (py4j) instead of parsing explain strings: three
@@ -240,6 +150,154 @@ def fingerprint(df, *, executed: bool = True) -> dict[str, int]:
         if key is not None:
             counts[key] += 1
     return counts
+
+
+# Executed-plan pins: name -> the nonzero fingerprint() counts of the
+# query's executed (AQE-final) plan at sf0.001 in the suite's session
+# (local[8], shuffle.partitions=8, AQE on, 64 MiB broadcast threshold).
+# tests/test_plans.py::test_executed_plan_fingerprint compares each pin
+# live.  Answers are hash-gated, but a value hash cannot see a Catalyst
+# strategy flip — the recsys_holdout_hitrate nested loop ran green until
+# the physical plan was machine-checked.  The pinned set is every
+# bench=True query (tests/test_plans.py checks that none is missing)
+# plus the hand-chosen tiers below, each with its reason.
+#
+# What each key catches:
+#   scan_parquet  a "one corpus scan" promise growing a second branch, or
+#                 a checkpointed iteration silently re-deriving the corpus
+#                 (pc1/pc1_gram pin ZERO parquet scans: the fold must be
+#                 physically materialized)
+#   bhj/smj/shj   a dimension join losing its broadcast (hint dropped,
+#                 threshold misread) flips bhj -> smj deterministically
+#   bnlj/cartesian  nonzero ONLY for the deliberate broadcast-hinted
+#                 scalar crossJoins (test_every_crossjoin_is_broadcast_hinted
+#                 proves each is hinted)
+#
+# UPDATE PATH when a plan legitimately changes: rerun
+#   python scripts/plan_fingerprint.py --pins --only <name>
+# and paste the new entry here, saying WHY the shape moved in the commit
+# message — a pin update without a rationale is the smell this gate
+# exists to produce.  Zero-valued keys are omitted.
+PLAN_PINS: dict[str, dict[str, int]] = {
+    # -- scale story: queries whose 100 TB story IS a plan shape — the
+    #    bucketed/salted/as-of join demos and the production twins of the
+    #    all-pairs baselines.  The pin protects the CLAIMED strategy (a
+    #    bucket join that quietly un-buckets, an IVF candidate join that
+    #    falls back to brute force, a pruned index that loses its
+    #    broadcast), the part a value hash cannot see.
+    "agg_salted_skew_safe": {"scan_parquet": 1},
+    "asof_join_events": {"scan_parquet": 1},
+    "asof_join_tolerance": {"scan_parquet": 1},
+    "dedup_embedding_bucketed": {"scan_parquet": 2, "bhj": 1},
+    # The LSH skew guards: the width filter must join on the bucket key
+    # BEFORE candidate generation.  MinHash: localCheckpointed bands
+    # (scan_rdd x2: aggregate input + join probe), BHJ for the width
+    # filter + the two verify text joins, one parquet scan for the
+    # verify text.  phash: localCheckpointed hash stage (scan_rdd x5
+    # across exact/banded/member-expansion branches), BHJ x6 = the
+    # uncapped path's 4 + the width-filter join on (band, sig) on BOTH
+    # sides' candidate generation.  A dropped width filter reverts to
+    # uncapped O(width²) emission while values stay plausible at fixture
+    # scale, and shows here as a lost join/scan.
+    "dedup_minhash_capped_pairs": {"scan_parquet": 1, "scan_rdd": 2, "bhj": 3},
+    "multimodal_phash_capped_pairs": {"scan_rdd": 5, "bhj": 6},
+    "join_skew_salted": {"scan_parquet": 2, "bhj": 1},
+    "range_join_bucketed": {"scan_parquet": 2, "bhj": 1},
+    "similarity_ivf_topk": {"scan_parquet": 5, "bhj": 3, "bnlj": 1},
+    "text_search_bm25_pruned_topk": {"scan_rdd": 5, "bhj": 3, "smj": 1, "bnlj": 4},
+    # -- expensive tail: the costliest sf0.1 walls outside the bench set
+    #    when the tier was chosen.  Each one's cost is acceptable only
+    #    under its current shape (banded pHash equi-join, per-cluster
+    #    semdedup pairs, blocked Levenshtein, broadcast-dim audits,
+    #    daily-rollup Theil-Sen bnlj); a flip to a broader join
+    #    multiplies a double-digit wall.
+    # Window generation runs ONCE: the (w, doc_id) multiplicity
+    # aggregation + a w-partitioned count window, no second documents
+    # scan or membership join.
+    "dedup_doc_duplication_score": {"scan_parquet": 1},
+    "dedup_semdedup": {"scan_parquet": 1, "scan_rdd": 2, "bhj": 3},
+    "fuzzy_join_levenshtein_blocked": {"scan_parquet": 2, "bhj": 1},
+    # The 64-bit hash is a localCheckpointed map stage (scan_rdd leaves),
+    # and the exact-pair, banded-candidate and two member-expansion joins
+    # are all BHJ at this sf — zero parquet rescans of the payload.
+    "multimodal_phash_dedup": {"scan_rdd": 4, "bhj": 4},
+    "pricing_consistency_audit": {"scan_parquet": 2, "bhj": 1},
+    # daily is localCheckpointed, so both pair-join sides read the
+    # checkpoint RDD; the median is sort+rank, one BNLJ pair join.
+    "stats_theil_sen_trend": {"scan_rdd": 2, "bnlj": 1},
+    # -- API surface: the user-facing curation compositions end to end
+    #    (curation.dedup_corpus / dedup_media / search_corpus /
+    #    profile_table).  Their stages are pinned above, but a regression
+    #    in the glue (a lost broadcast on the report attach, a
+    #    re-shuffled survivor join, a dropped width filter at the call
+    #    site) is invisible to the stage pins.  The dedup APIs share one
+    #    shape: one parquet payload scan, a localCheckpointed
+    #    hash/signature stage (scan_rdd x2 across pair generation and
+    #    member expansion), one BHJ survivor join, and the audited one-row
+    #    broadcast report attach (bnlj) — the report is a driver-built
+    #    LocalRelation (session.local_frame), so it scans as local_scan.
+    #    search_corpus is the checkpointed-postings BM25 composition
+    #    (scan_rdd x4) with the hit-scoped df join + 1-row corpus-stats
+    #    attach; profile_table is deliberately a SINGLE parquet scan.
+    "curation_dedup_corpus": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
+    "curation_dedup_media": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
+    "curation_dedup_media_capped": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
+    "curation_search_corpus": {"scan_rdd": 4, "bhj": 2, "bnlj": 1},
+    "curation_profile_table": {"scan_parquet": 1},
+    # The backfill CLI verb's audit report: a driver-local LocalRelation
+    # (the ingest jobs are actions inside pipeline.backfill, not part of
+    # the returned plan).  A join against the lake, or an RDD scan of a
+    # list-built frame, appearing here means the audit's shape regressed.
+    "backfill_audit_table": {"local_scan": 1},
+    # -- the bench set, plus the scale-killers whose plan shape was the
+    #    bug once already: recsys_holdout_hitrate (an OR-of-equalities
+    #    join nested-looped; now a union of two hash equi-joins),
+    #    dedup_minhash_eval (driver count() actions re-ran the all-pairs
+    #    join; now ONE plan) and embedding_power_iteration_pc1/_gram (the
+    #    covariance fold must be physically materialized: zero parquet
+    #    scans in the returned iteration plan).
+    "corpus_curate_pipeline": {"scan_parquet": 1},
+    "dedup_cc_starcontraction": {"scan_rdd": 2},
+    # the one caching query in the set: the walker descends into each
+    # of its 3 distinct cached-relation plans, so the counts cover the
+    # WHOLE plan, caches included
+    "dedup_connected_components": {"scan_rdd": 6, "bhj": 1, "cache": 3},
+    "dedup_exact_hash": {"scan_parquet": 1},
+    # The exact-jaccard side generates pairs from posting lists
+    # (_posting_pair_counts: no self-join, so no second documents scan
+    # or hash join), and the minhash side reads the shared per-session
+    # pair-graph checkpoint (scan_rdd) instead of re-running the
+    # signature pipeline.
+    "dedup_minhash_eval": {"scan_parquet": 2, "scan_rdd": 1, "bhj": 2, "smj": 1},
+    "dedup_minhash_lsh": {"scan_parquet": 2, "bhj": 2},
+    "embedding_power_iteration_pc1": {"scan_rdd": 3, "bhj": 3, "bnlj": 4},
+    "embedding_power_iteration_pc1_gram": {"scan_rdd": 3, "bhj": 3, "bnlj": 4},
+    "events_hourly_agg": {"scan_parquet": 1},
+    "feature_hashing_vectorize": {"scan_parquet": 1},
+    "flagship_scan_filter_limit": {"scan_parquet": 1},
+    "graph_pagerank_coorder": {"scan_rdd": 3, "bhj": 5},
+    "graph_triangle_count": {"scan_rdd": 3, "bhj": 2},
+    "join_broadcast_part_agg": {"scan_parquet": 2, "bhj": 1},
+    "kmeans_embeddings_fixed": {"scan_parquet": 4, "bnlj": 3},
+    # The bigram-instance counts are materialized once (2 checkpoint
+    # reads: LM side + scoring probe), and the context totals come from a
+    # w1-window over the bigram counts instead of a second agg + join.
+    "lm_bigram_surprisal": {"scan_rdd": 2, "bhj": 1},
+    "q1_pricing_summary": {"scan_parquet": 1},
+    "q3_shipping_priority": {"scan_parquet": 3, "bhj": 2},
+    "q5_regional_revenue": {"scan_parquet": 6, "bhj": 5},
+    "recsys_holdout_hitrate": {"scan_parquet": 1, "bhj": 2, "bnlj": 1},
+    # Session bounds are materialized once; the sweep and carry branches
+    # read the checkpoint instead of re-running the events scan and the
+    # sessionization windows per consumer.
+    "sessions_max_concurrency": {"scan_rdd": 2},
+    "similarity_topk_bruteforce": {"scan_parquet": 2, "bnlj": 1},
+    "sort_topk_orders": {"scan_parquet": 1},
+    "text_chunk_sliding": {"scan_parquet": 1},
+    "text_search_bm25_topk": {"scan_rdd": 5, "bhj": 3, "bnlj": 1},
+    "text_search_inverted_topk": {"scan_rdd": 2, "bhj": 1},
+    "text_stats_by_lang": {"scan_parquet": 1},
+}
 
 
 # The registry-wide nested-loop audit.  A nested-loop join can enter a
@@ -564,6 +622,7 @@ def measure_work(spark, run):
     memos and cached tables are emptied first and _STATIC_PLANS holds
     while ``run`` runs (see the section comment: determinism)."""
     from discogs_etl_spark.queries._util import clear_session_memos
+    from discogs_etl_spark.session import scoped_conf
 
     clear_session_memos()
     spark.catalog.clearCache()
@@ -572,17 +631,8 @@ def measure_work(spark, run):
     bus.waitUntilEmpty()
     n = store.executionsCount()
     mark = store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
-    saved = {key: spark.conf.get(key, None) for key in _STATIC_PLANS}
-    for key, value in _STATIC_PLANS.items():
-        spark.conf.set(key, value)
-    try:
+    with scoped_conf(spark, _STATIC_PLANS):
         out = run()
-    finally:
-        for key, value in saved.items():
-            if value is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, value)
     bus.waitUntilEmpty()
     work = sum(execution_work(store, i) for i in _execution_ids_after(store, mark))
     return work, out
@@ -641,19 +691,6 @@ def build_lo_fixture(small_dir: str, hi_dir: str, out_dir: str) -> str:
     return out_dir
 
 
-def pinned_names() -> list[str]:
-    from discogs_etl_spark.registry import all_specs
-
-    specs = all_specs()
-    names = [n for n, s in specs.items() if s.bench]
-    names += [
-        n
-        for n in SCALE_KILLERS + SCALE_STORY + EXPENSIVE_TAIL + API_SURFACE
-        if n not in names
-    ]
-    return sorted(names)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
@@ -679,7 +716,7 @@ def main() -> int:
     names = (
         [n.strip() for n in args.only.split(",") if n.strip()]
         if args.only
-        else pinned_names()
+        else sorted(PLAN_PINS)
     )
     unknown = [n for n in names if n not in specs]
     if unknown:

@@ -1,4 +1,4 @@
-"""Stdlib PNG decode + the probe-gated real-decoder hook (SURVEY.md §2.12e).
+"""Stdlib PNG decode + the opt-in real-decoder hook (SURVEY.md §2.12e).
 
 The encoder here is test-only: it writes a known pixel buffer through
 each of the five PNG scanline filters (one per row), so the decoder's
@@ -16,12 +16,10 @@ import pytest
 
 from discogs_etl_spark.multimodal import (
     PNG_MAGIC,
-    REAL_DECODE_CONF,
     _decode_one,
     decode_features,
     decode_png,
     decode_wav,
-    real_decode_requested,
 )
 
 
@@ -313,34 +311,10 @@ def test_decode_png_corrupt_idat_raises_valueerror_not_zlib_error():
             decode_png(data)
 
 
-def test_real_decode_probe_env_wins(monkeypatch):
-    monkeypatch.setenv("DISCOGS_ETL_SPARK_REAL_DECODE", "1")
-    assert real_decode_requested() is True
-    monkeypatch.setenv("DISCOGS_ETL_SPARK_REAL_DECODE", "false")
-    assert real_decode_requested() is False
-
-
-def test_registered_queries_immune_to_global_real_decode_flag(spark, monkeypatch):
-    """A deployment-wide DISCOGS_ETL_SPARK_REAL_DECODE=1 export must NOT
-    flip the registered oracle queries onto the real path (where the
-    synthetic non-PNG/WAV payloads raise NotImplementedError) — they pin
-    real=False explicitly at plan-build time."""
-    import os
-
-    from discogs_etl_spark.multimodal import multimodal_decode_features
-
-    monkeypatch.setenv("DISCOGS_ETL_SPARK_REAL_DECODE", "1")
-    assert real_decode_requested() is True  # the poison IS armed...
-    rows = multimodal_decode_features(spark, os.environ.get(
-        "SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")).limit(5).collect()
-    assert rows  # ...and the registered query still runs the fake decoder
-
-
-def test_decode_features_real_path_mixed_media_via_conf(spark, monkeypatch):
+def test_decode_features_real_path_mixed_media_via_conf(spark):
     """End-to-end real decode through the Spark stage with all THREE
     media types in one Arrow batch: PNG pixels, extensible-PCM WAV, and
     an AVI container header — true header values, not md5-derived."""
-    monkeypatch.delenv("DISCOGS_ETL_SPARK_REAL_DECODE", raising=False)
     png = _encode_png(_golden_pixels(5, 8, 4), [0, 1, 2, 3, 4])
     wav = _encode_wav(n_frames=8000, sample_rate=16000, channels=2, extensible=True)
     avi = _encode_avi(1280, 720, 120, 33333)
@@ -352,11 +326,7 @@ def test_decode_features_real_path_mixed_media_via_conf(spark, monkeypatch):
         ],
         "doc_id long, payload binary, media_type string",
     )
-    spark.conf.set(REAL_DECODE_CONF, "true")
-    try:
-        rows = {r["doc_id"]: r for r in decode_features(df).collect()}
-    finally:
-        spark.conf.set(REAL_DECODE_CONF, "false")
+    rows = {r["doc_id"]: r for r in decode_features(df, real=True).collect()}
     assert (rows[1]["width"], rows[1]["height"]) == (8, 5)
     assert (rows[2]["duration_ms"], rows[2]["n_frames"]) == (500, 8000)
     assert rows[2]["width"] is None
@@ -364,20 +334,15 @@ def test_decode_features_real_path_mixed_media_via_conf(spark, monkeypatch):
     assert (rows[3]["n_frames"], rows[3]["duration_ms"]) == (120, 3999)
 
 
-def test_decode_features_real_path_via_conf(spark, monkeypatch):
-    monkeypatch.delenv("DISCOGS_ETL_SPARK_REAL_DECODE", raising=False)
+def test_decode_features_real_path_via_conf(spark):
     px = _golden_pixels(4, 6, 3)
     payload = _encode_png(px, [0, 1, 2, 3])
     df = spark.createDataFrame(
         [(1, bytearray(payload), "image")], "doc_id long, payload binary, media_type string"
     )
-    spark.conf.set(REAL_DECODE_CONF, "true")
-    try:
-        row = decode_features(df).collect()[0]
-    finally:
-        spark.conf.set(REAL_DECODE_CONF, "false")
+    row = decode_features(df, real=True).collect()[0]
     assert (row["width"], row["height"]) == (6, 4)
-    # and the default (conf off) stays on the deterministic fake
+    # and the default stays on the deterministic fake
     fake_row = decode_features(df).collect()[0]
     assert (fake_row["width"], fake_row["height"]) != (6, 4)
 

@@ -564,166 +564,29 @@ def test_every_crossjoin_is_broadcast_hinted():
 
 
 # ---------------------------------------------------------------------------
-# Executed-plan fingerprint gate (verdict r11 #1).
-#
-# Answers are hash-gated and wall-times are ratio-gated, but both catch a
-# Catalyst strategy flip only noisily and after the fact — the r10
-# recsys_holdout_hitrate nested-loop ran green for NINE rounds because
-# nothing machine-checked the physical plan.  This sweep pins normalized
-# node counts of the EXECUTED (AQE-final) plan for every headline bench
-# query plus the previously-fixed scale-killers, at the suite's exact
-# session condition (local[8], shuffle.partitions=8, AQE on, 64 MiB
-# broadcast threshold, sf0.001).
-#
-# What each key catches:
-#   scan_parquet  a "one corpus scan" promise growing a second branch, or
-#                 a checkpointed iteration silently re-deriving the corpus
-#                 (pc1/pc1_gram pin ZERO parquet scans: the fold must be
-#                 physically real — the r9 lesson)
-#   bhj/smj/shj   a dimension join losing its broadcast (hint dropped,
-#                 threshold misread) flips bhj -> smj deterministically
-#   bnlj/cartesian  nonzero ONLY for the deliberate broadcast-hinted
-#                 scalar crossJoins (test_every_crossjoin_is_broadcast_hinted
-#                 proves each is hinted); any other value is the r10 bug
-#                 class resurfacing
-#
-# UPDATE PATH when a plan legitimately changes: rerun
-#   python scripts/plan_fingerprint.py --pins --only <name>
-# and paste the new entry here, saying WHY the shape moved in the commit
-# message — a pin update without a rationale is the smell this gate
-# exists to produce.  Zero-valued keys are omitted.
+# Executed-plan fingerprint gate: scripts/plan_fingerprint.py::PLAN_PINS
+# holds the pins, what each key catches and why each query is pinned.
 # ---------------------------------------------------------------------------
 
-PLAN_PINS: dict[str, dict[str, int]] = {
-    # -- second tier (SCALE_STORY): the queries whose 100 TB story IS a
-    #    plan shape — bucket/salt/as-of demos, production twins of the
-    #    all-pairs baselines
-    "agg_salted_skew_safe": {"scan_parquet": 1},
-    "asof_join_events": {"scan_parquet": 1},
-    "asof_join_tolerance": {"scan_parquet": 1},
-    "dedup_embedding_bucketed": {"scan_parquet": 2, "bhj": 1},
-    # r17 (VERDICT r16 task #7): the LSH skew guards — the width filter
-    # must join on the bucket key BEFORE candidate generation.  MinHash:
-    # localCheckpointed bands (scan_rdd x2: aggregate input + join
-    # probe), BHJ for the width filter + the two verify text joins, one
-    # parquet scan for the verify text.  phash: localCheckpointed hash
-    # stage (scan_rdd x5 across exact/banded/member-expansion branches),
-    # BHJ x6 = r16's uncapped 4 + the width-filter join on (band, sig)
-    # on BOTH sides' candidate generation.  A dropped width filter
-    # reverts to uncapped O(width²) emission and shows here as a lost
-    # join/scan before the value gate could notice at fixture scale.
-    "dedup_minhash_capped_pairs": {"scan_parquet": 1, "scan_rdd": 2, "bhj": 3},
-    "multimodal_phash_capped_pairs": {"scan_rdd": 5, "bhj": 6},
-    "join_skew_salted": {"scan_parquet": 2, "bhj": 1},
-    "range_join_bucketed": {"scan_parquet": 2, "bhj": 1},
-    "similarity_ivf_topk": {"scan_parquet": 5, "bhj": 3, "bnlj": 1},
-    "text_search_bm25_pruned_topk": {"scan_rdd": 5, "bhj": 3, "smj": 1, "bnlj": 4},
-    # -- third tier (EXPENSIVE_TAIL, verdict r12 #4): the costliest
-    #    non-headline sf0.1 walls — a strategy flip here multiplies a
-    #    double-digit wall, so each one's claimed shape (banded pHash
-    #    equi-join, per-cluster semdedup pairs, blocked Levenshtein,
-    #    broadcast-dim audits, daily-rollup Theil-Sen bnlj) is pinned
-    # r18: window generation runs ONCE — the (w, doc_id) multiplicity
-    # aggregation + a w-partitioned count window replaced the
-    # duplicate-set branch + membership join (second documents scan and
-    # the broadcast join gone; identical Σk integers, oracle-verified
-    # at all three sfs).
-    "dedup_doc_duplication_score": {"scan_parquet": 1},
-    "dedup_semdedup": {"scan_parquet": 1, "scan_rdd": 2, "bhj": 3},
-    "fuzzy_join_levenshtein_blocked": {"scan_parquet": 2, "bhj": 1},
-    # r15 banding rewrite (VERDICT r14 task #1): the 64-bit hash is a
-    # localCheckpointed map stage (scan_rdd leaves), and exact-pair,
-    # banded-candidate, and two member-expansion joins are all BHJ at
-    # this sf — zero parquet rescans of the payload.
-    "multimodal_phash_dedup": {"scan_rdd": 4, "bhj": 4},
-    "pricing_consistency_audit": {"scan_parquet": 2, "bhj": 1},
-    # r18: daily is localCheckpoint-ed (scan_parquet -> scan_rdd, and the
-    # count action no longer re-derives the orders aggregation), so both
-    # pair-join sides read the checkpoint RDD; the median is sort+rank
-    # (no percentile buffer), same single BNLJ pair join.
-    "stats_theil_sen_trend": {"scan_rdd": 2, "bnlj": 1},
-    # -- fourth tier (API_SURFACE, r17): the user-facing curation API
-    #    compositions end-to-end.  The dedup APIs share one shape: one
-    #    parquet payload scan, a localCheckpointed hash/signature stage
-    #    (scan_rdd x2 across pair generation and member expansion), one
-    #    BHJ survivor join, and the audited one-row broadcast report
-    #    attach (bnlj) — the report is a driver-built LocalRelation
-    #    (session.local_frame), so it scans as local_scan, not an RDD.  search_corpus is the checkpointed-postings BM25
-    #    composition (scan_rdd x4) with the hit-scoped df join + 1-row
-    #    corpus-stats attach; profile_table is deliberately a SINGLE
-    #    parquet scan — a second scan would mean the one-pass profile
-    #    regressed to per-column rescans.
-    "curation_dedup_corpus": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
-    "curation_dedup_media": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
-    "curation_dedup_media_capped": {"scan_parquet": 1, "scan_rdd": 2, "local_scan": 1, "bhj": 1, "bnlj": 1},
-    "curation_search_corpus": {"scan_rdd": 4, "bhj": 2, "bnlj": 1},
-    "curation_profile_table": {"scan_parquet": 1},
-    # the backfill CLI verb's audit report — driver-local results scan
-    # only, a LocalRelation built by session.local_frame (the ingest
-    # jobs are actions inside pipeline.backfill, not part of the
-    # returned plan); a distributed join against the lake, or an RDD
-    # scan of a list-built frame, appearing here means the audit's
-    # shape regressed.
-    "backfill_audit_table": {"local_scan": 1},
-    # -- headline bench set + fixed scale-killers
-    "corpus_curate_pipeline": {"scan_parquet": 1},
-    "dedup_cc_starcontraction": {"scan_rdd": 2},
-    # the one caching query in the set: the walker descends into each
-    # of its 3 distinct cached-relation plans, so the counts cover the
-    # WHOLE plan, caches included
-    "dedup_connected_components": {"scan_rdd": 6, "bhj": 1, "cache": 3},
-    "dedup_exact_hash": {"scan_parquet": 1},
-    # r19 (two changes, both oracle-exact at all three fixture sfs —
-    # OPTIMIZATION_r19.md): the composed exact-jaccard side uses
-    # posting-list pair generation (_posting_pair_counts: the self-join's
-    # second documents scan and hash join left the plan), and the
-    # minhash side reads the shared per-session pair-graph checkpoint
-    # (scan_rdd) instead of re-running the whole signature pipeline.
-    "dedup_minhash_eval": {"scan_parquet": 2, "scan_rdd": 1, "bhj": 2, "smj": 1},
-    "dedup_minhash_lsh": {"scan_parquet": 2, "bhj": 2},
-    "embedding_power_iteration_pc1": {"scan_rdd": 3, "bhj": 3, "bnlj": 4},
-    "embedding_power_iteration_pc1_gram": {"scan_rdd": 3, "bhj": 3, "bnlj": 4},
-    "events_hourly_agg": {"scan_parquet": 1},
-    "feature_hashing_vectorize": {"scan_parquet": 1},
-    "flagship_scan_filter_limit": {"scan_parquet": 1},
-    "graph_pagerank_coorder": {"scan_rdd": 3, "bhj": 5},
-    "graph_triangle_count": {"scan_rdd": 3, "bhj": 2},
-    "join_broadcast_part_agg": {"scan_parquet": 2, "bhj": 1},
-    "kmeans_embeddings_fixed": {"scan_parquet": 4, "bnlj": 3},
-    # r18: the bigram-instance counts are materialized once (2 checkpoint
-    # reads: LM side + scoring probe) and the context totals come from a
-    # w1-window over the bigram counts instead of a second agg + join —
-    # 3 documents scans and one broadcast join gone from the plan.
-    "lm_bigram_surprisal": {"scan_rdd": 2, "bhj": 1},
-    "q1_pricing_summary": {"scan_parquet": 1},
-    "q3_shipping_priority": {"scan_parquet": 3, "bhj": 2},
-    "q5_regional_revenue": {"scan_parquet": 6, "bhj": 5},
-    "recsys_holdout_hitrate": {"scan_parquet": 1, "bhj": 2, "bnlj": 1},
-    # r18: session bounds are materialized once (the sweep and carry
-    # branches read the checkpoint) instead of re-running the events scan
-    # + sessionization windows per consumer.
-    "sessions_max_concurrency": {"scan_rdd": 2},
-    "similarity_topk_bruteforce": {"scan_parquet": 2, "bnlj": 1},
-    "sort_topk_orders": {"scan_parquet": 1},
-    "text_chunk_sliding": {"scan_parquet": 1},
-    "text_search_bm25_topk": {"scan_rdd": 5, "bhj": 3, "bnlj": 1},
-    "text_search_inverted_topk": {"scan_rdd": 2, "bhj": 1},
-    "text_stats_by_lang": {"scan_parquet": 1},
-}
+PLAN_PINS = load_script("plan_fingerprint").PLAN_PINS
 
 
 def test_plan_pins_cover_the_whole_gate_set():
-    """The pinned set is DERIVED (bench set + scale-killers), not
-    hand-typed: registering a new bench=True headline query without
-    pinning its plan fails here, so the gate's coverage cannot silently
+    """Every bench=True headline query is pinned: registering a new one
+    without pinning its plan fails here, so the gate's coverage cannot
     rot as the headline set evolves."""
-    expected = set(load_script("plan_fingerprint").pinned_names())
-    assert set(PLAN_PINS) == expected, (
-        f"PLAN_PINS out of sync with the gate set: missing "
-        f"{sorted(expected - set(PLAN_PINS))}, stale "
-        f"{sorted(set(PLAN_PINS) - expected)} — rerun "
-        "`python scripts/plan_fingerprint.py --pins`"
+    from discogs_etl_spark.registry import bench_specs
+
+    missing = sorted(set(bench_specs()) - set(PLAN_PINS))
+    assert not missing, (
+        f"bench queries without a plan pin: {missing} — run "
+        "`python scripts/plan_fingerprint.py --pins --only <name>` and add "
+        "the entry to PLAN_PINS"
     )
+
+
+def test_plan_pins_name_registered_queries(q):
+    assert set(PLAN_PINS) <= set(q), sorted(set(PLAN_PINS) - set(q))
 
 
 @pytest.mark.parametrize("name", sorted(PLAN_PINS))
