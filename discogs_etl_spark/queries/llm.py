@@ -126,10 +126,11 @@ _EMB_DIM_CHECKED: dict[tuple[str, str], int] = memo_cache()
 
 def _checked_emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """``_EMB_DIM``, runtime-asserted against the actual embeddings
-    table once per (session, sf_dir) — one min/max(size) aggregate over
-    the id-and-width projection (footer-cheap), memoized like
+    table once per (session, sf_dir) — one count/min/max(size) aggregate
+    over the id-and-width projection (footer-cheap), memoized like
     session_memo's caches.  Raises if ANY vector's width differs, so
-    the unrolled fold can never silently NULL out pairs."""
+    the unrolled fold can never silently NULL out pairs; a table with
+    zero rows has no width to drift and passes."""
     app = spark.sparkContext.applicationId
     for k in [k for k in _EMB_DIM_CHECKED if k[0] != app]:
         del _EMB_DIM_CHECKED[k]
@@ -138,12 +139,13 @@ def _checked_emb_dim(spark: SparkSession, sf_dir: str) -> int:
         row = (
             load(spark, sf_dir, "embeddings")
             .agg(
+                F.count(F.lit(1)).alias("n"),
                 F.min(F.size("embedding")).alias("lo"),
                 F.max(F.size("embedding")).alias("hi"),
             )
             .first()
         )
-        if row.lo != _EMB_DIM or row.hi != _EMB_DIM:
+        if row.n and (row.lo != _EMB_DIM or row.hi != _EMB_DIM):
             raise ValueError(
                 f"embeddings at {sf_dir} carry widths "
                 f"[{row.lo}, {row.hi}] but the unrolled dot product is "

@@ -72,6 +72,10 @@ def _cpus() -> int:
         return os.cpu_count() or 4
 
 
+def _driver_memory() -> str:
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+
+
 def get_spark(
     app_name: str = "discogs-etl-spark",
     master: str | None = None,
@@ -121,7 +125,7 @@ def get_spark(
         # zstd over the default snappy: ~30% smaller lake files for ~equal
         # read CPU — at 100 TB stored that's the cheaper default.
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")

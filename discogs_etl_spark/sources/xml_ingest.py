@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from discogs_etl_spark.schemas import SCHEMAS, XML_TAGS
 from discogs_etl_spark.transforms.cleaning import (
-    clean_xml_bytes,
     clean_xml_content,
     collapse_whitespace,
     escape_bare_amps,

@@ -1,110 +1,107 @@
 #!/usr/bin/env python
-"""Targeted Spark-vs-DuckDB oracle check at ANY fixture scale factor.
+"""Spark-vs-DuckDB oracle replay at any fixture scale factor, run the
+way the verification driver runs the registry.
 
-The pytest oracle gate (tests/test_oracle.py) runs the whole registry at
-sf0.01; optimization rounds additionally need "this restructured query
-is value-identical at sf0.001 AND sf0.1" evidence before a rewrite can
-claim equivalence (round rule: prove equivalence with the oracle before
-moving on).  This script is that instrument::
+A fresh process builds a plain ``SparkSession`` (none of ``get_spark``'s
+tuned confs; only the driver memory, a resource setting that changes no
+result) and runs each query through ``__spark_entry__.queries()``, so
+``tune_for_correctness`` is applied exactly as in a driver run.  Each
+result is compared with its ``__spark_entry__.oracle_sql()`` twin over
+the same fixture files, with tests/test_oracle.py's canonical form
+(column sets, row count, order-insensitive value multiset;
+``DriverHasherHazard`` types fail loudly).  This catches session
+sensitivity (time zone, shuffle partitions, active-session leakage)
+that the tuned pytest session hides.
 
-    python scripts/oracle_check.py dedup_ngram_jaccard dedup_containment
-    python scripts/oracle_check.py --sf-dirs /root/testdata/sf0.001 -- q1
+    python scripts/oracle_check.py                 # every query, all three SFs
+    python scripts/oracle_check.py --sf-dirs /root/testdata/sf0.001 q1_pricing_summary
 
-With no --sf-dirs it checks all three fixture SFs.  Comparison is the
-same canonicalization as tests/test_oracle.py (column sets, row count,
-order-insensitive canonical value multiset, DriverHasherHazard types
-fail loudly).  Exit 1 on any mismatch.
+One ``OK``/``FAIL`` line per (fixture, query), then a summary line.
+Exit 1 on any failure.
 """
 
 from __future__ import annotations
 
 import argparse
-import importlib.util
 import os
 import sys
+import time
+import traceback
+
+# Collected TimestampType cells render in the process time zone, not the
+# session zone; the driver runs in UTC, so pin it before the JVM starts.
+os.environ["TZ"] = "UTC"
+time.tzset()
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from discogs_etl_spark.registry import all_specs
-from discogs_etl_spark.session import get_spark
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+import __spark_entry__  # noqa: E402
+from discogs_etl_spark.session import _cpus, _driver_memory  # noqa: E402
+from discogs_etl_spark.tables import TABLE_NAMES  # noqa: E402
+from tests.test_oracle import canon_rows  # noqa: E402
 
 
-def _canon():
-    spec = importlib.util.spec_from_file_location(
-        "oracle_canon",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tests",
-            "test_oracle.py",
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.canon_rows
+def _compare(sdf, con, sql) -> str:
+    """'' when Spark's result equals the oracle's, else why not."""
+    scols, srows = sdf.columns, sdf.collect()
+    if sql is None:  # rows-only query: running it is the check
+        return ""
+    res = con.execute(sql)
+    dcols, drows = [d[0] for d in res.description], res.fetchall()
+    if sorted(scols) != sorted(dcols) or len(srows) != len(drows):
+        return f"cols {sorted(scols)} vs {sorted(dcols)}; rows {len(srows)} vs {len(drows)}"
+    s_canon, d_canon = canon_rows(scols, srows)[1], canon_rows(dcols, drows)[1]
+    mism = [(a, b) for a, b in zip(s_canon, d_canon) if a != b]
+    return f"first diffs: {mism[:2]}" if mism else ""
 
 
 def main() -> int:
+    queries, oracles = __spark_entry__.queries(), __spark_entry__.oracle_sql()
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--sf-dirs",
         default="/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1",
         help="comma-separated fixture dirs to check (default: all three)",
     )
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*", help="registered queries (default: all)")
     args = ap.parse_args()
-
-    import duckdb
-
-    canon_rows = _canon()
-    specs = all_specs()
-    unknown = [n for n in args.names if n not in specs]
+    names = args.names or list(queries)
+    unknown = [n for n in names if n not in queries]
     if unknown:
         sys.exit(f"not registered: {unknown}")
-    no_oracle = [n for n in args.names if specs[n].oracle is None]
-    if no_oracle:
-        sys.exit(f"rows-only (no oracle) queries: {no_oracle}")
 
-    spark = get_spark(app_name="oracle-check")
+    import duckdb
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master(f"local[{_cpus()}]")
+        .config("spark.driver.memory", _driver_memory())
+        .getOrCreate()
+    )
     spark.sparkContext.setLogLevel("ERROR")
-    failures = 0
+    checked = failures = 0
     for sf_dir in args.sf_dirs.split(","):
         con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
+        for t in TABLE_NAMES:
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+        for name in names:
+            t0 = time.monotonic()
+            try:
+                detail = _compare(queries[name](spark, sf_dir), con, oracles.get(name))
+            except Exception as exc:  # noqa: BLE001 - report it and go on
+                traceback.print_exc()
+                detail = f"{type(exc).__name__}: {str(exc)[:300]}"
+            tag = "FAIL" if detail else "OK  "
+            print(
+                f"{tag} {os.path.basename(sf_dir):8s} {name} ({time.monotonic() - t0:.2f}s)"
+                + (f" {detail}" if detail else ""),
+                flush=True,
             )
-        for name in args.names:
-            spec = specs[name]
-            sdf = spec.fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            res = con.execute(spec.oracle)
-            dcols = [d[0] for d in res.description]
-            drows = res.fetchall()
-            ok = sorted(scols) == sorted(dcols) and len(srows) == len(drows)
-            detail = ""
-            if ok:
-                _, s_canon = canon_rows(scols, srows)
-                _, d_canon = canon_rows(dcols, drows)
-                ok = s_canon == d_canon
-                if not ok:
-                    mism = [(a, b) for a, b in zip(s_canon, d_canon) if a != b]
-                    detail = f" first diffs: {mism[:2]}"
-            else:
-                detail = (
-                    f" cols {sorted(scols)} vs {sorted(dcols)};"
-                    f" rows {len(srows)} vs {len(drows)}"
-                )
-            tag = "OK  " if ok else "FAIL"
-            print(f"{tag} {os.path.basename(sf_dir):8s} {name}{detail}")
-            failures += 0 if ok else 1
+            checked += 1
+            failures += bool(detail)
         con.close()
     spark.stop()
+    print(f"oracle_check: {checked - failures}/{checked} OK, {failures} FAIL")
     return 1 if failures else 0
 
 

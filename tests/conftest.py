@@ -10,6 +10,8 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from discogs_etl_spark.tables import TABLE_NAMES  # noqa: E402
+
 TESTDATA = "/root/testdata"
 SF_SMOKE = os.path.join(TESTDATA, "sf0.001")
 SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
@@ -47,13 +49,25 @@ def sf_lo(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
+def sf_empty(tmp_path_factory):
+    """Every table with zero rows, typed from SF_SMOKE's parquet footers
+    (``schema.empty_table()``), so events.ts keeps its NTZ flag: a Spark
+    ``limit(0)`` rewrite would drop it and test a different type."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("sf_empty")
+    for t in TABLE_NAMES:
+        schema = pq.read_schema(os.path.join(SF_SMOKE, f"{t}.parquet"))
+        pq.write_table(schema.empty_table(), str(out / f"{t}.parquet"))
+    return str(out)
+
+
+@pytest.fixture(scope="session")
 def duck():
     import duckdb
 
     con = duckdb.connect()
-    for name in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
+    for name in TABLE_NAMES:
         con.execute(
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{SF_ORACLE}/{name}.parquet')"
         )

@@ -15,12 +15,14 @@ build cost.
 from __future__ import annotations
 
 import math
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from discogs_etl_spark.registry import all_specs
-from tests.conftest import SF_ORACLE, load_script
+from tests.conftest import REPO, SF_ORACLE, SF_SMOKE, load_script
 
 _PF = load_script("plan_fingerprint")
 
@@ -180,3 +182,18 @@ def test_oracle_schema_driver_hash_safe(duck, name):
         f"{name}: oracle emits driver-hash-unsafe types {offenders}; "
         "CAST to BIGINT/DOUBLE/INT in the oracle SQL"
     )
+
+
+def test_oracle_check_replays_a_query():
+    """scripts/oracle_check.py end to end.  It builds and stops its own
+    plain session, so it runs in a subprocess, not in the suite's."""
+    out = subprocess.run(
+        [sys.executable, "scripts/oracle_check.py", "--sf-dirs", SF_SMOKE, "q1_pricing_summary"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stdout + out.stderr
+    ok = [line.split()[:3] for line in out.stdout.splitlines() if line.startswith("OK")]
+    assert ok == [["OK", "sf0.001", "q1_pricing_summary"]], out.stdout

@@ -131,10 +131,13 @@ def test_theil_sen_day_bound_guard(spark, monkeypatch):
         stats.stats_theil_sen_trend(spark, SF_SMOKE)
 
 
-def test_checked_emb_dim_guard(spark, monkeypatch):
+def test_checked_emb_dim_guard(spark, monkeypatch, sf_empty, tmp_path):
     """The unrolled dot product indexes past a shorter embedding as NULL
     and silently drops pairs; _checked_emb_dim must fail loudly on any
-    width drift instead (r18 ADVICE, fixed r19)."""
+    width drift instead, and on rows whose width reads NULL.  A table
+    with zero rows has no width and passes."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     import pytest
 
     from discogs_etl_spark.queries import llm
@@ -146,6 +149,14 @@ def test_checked_emb_dim_guard(spark, monkeypatch):
     # carries the key)
     key = (spark.sparkContext.applicationId, SF_SMOKE)
     assert key in llm._EMB_DIM_CHECKED
+
+    assert llm._checked_emb_dim(spark, sf_empty) == llm._EMB_DIM
+
+    schema = pq.read_schema(f"{SF_SMOKE}/embeddings.parquet")
+    null_width = pa.table({"vec_id": [0], "embedding": [None], "label": [0]}, schema=schema)
+    pq.write_table(null_width, str(tmp_path / "embeddings.parquet"))
+    with pytest.raises(ValueError, match="unrolled dot product is"):
+        llm._checked_emb_dim(spark, str(tmp_path))
 
     llm._EMB_DIM_CHECKED.clear()
     monkeypatch.setattr(llm, "_EMB_DIM", 63)
