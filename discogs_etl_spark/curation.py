@@ -32,6 +32,43 @@ from pyspark.sql.window import Window
 from discogs_etl_spark.session import local_frame
 
 
+def _keep_component_minima(
+    spark: SparkSession, norm: DataFrame, tid: str, pairs: DataFrame
+) -> DataFrame:
+    """``norm`` without the rows whose id column ``tid`` is a non-minimum
+    member of a connected component of the near-dup graph ``pairs``
+    (doc_a, doc_b).  Rows outside every component survive untouched:
+    the anti-join is against the losers only, a graph-sized table."""
+    from discogs_etl_spark.queries.llm import connected_components_star
+
+    comp = connected_components_star(spark, pairs)
+    losers = comp.where(F.col("doc_id") != F.col("component_id")).select(
+        F.col("doc_id").alias("__detl_loser")
+    )
+    return norm.join(losers, norm[tid] == losers["__detl_loser"], "left_anti")
+
+
+def _dedup_report(
+    spark: SparkSession,
+    method: str,
+    df: DataFrame,
+    survivors: DataFrame,
+    n_dropped_buckets: int,
+    n_docs_in_dropped: int,
+) -> DataFrame:
+    """The one-row report of a dedup run: method, the input and survivor
+    row counts (two count jobs), their difference, and the capped run's
+    dropped-bucket accounting."""
+    n_in = df.count()
+    n_out = survivors.count()
+    return local_frame(
+        spark,
+        [(method, n_in, n_out, n_in - n_out, n_dropped_buckets, n_docs_in_dropped)],
+        "method string, n_input long, n_survivors long, n_removed long, "
+        "n_dropped_buckets long, n_docs_in_dropped_buckets long",
+    )
+
+
 def dedup_corpus(
     spark: SparkSession,
     df: DataFrame,
@@ -76,7 +113,6 @@ def dedup_corpus(
         )
     elif method == "minhash":
         from discogs_etl_spark.queries.llm import (
-            connected_components_star,
             minhash_bands_df,
             minhash_bucket_counts,
             minhash_dropped_buckets,
@@ -114,36 +150,12 @@ def dedup_corpus(
             .select("doc_a", "doc_b")
             .localCheckpoint()
         )
-        comp = connected_components_star(spark, pairs)
-        # drop every component member except the minimum id; docs outside
-        # any near-dup component survive untouched (anti-join is against
-        # the LOSERS only — graph-sized, not corpus-sized)
-        losers = comp.where(F.col("doc_id") != F.col("component_id")).select(
-            F.col("doc_id").alias("__detl_loser")
-        )
-        survivors = norm.join(
-            losers, norm[tid] == losers["__detl_loser"], "left_anti"
-        ).drop(tid, ttxt)
+        survivors = _keep_component_minima(spark, norm, tid, pairs).drop(tid, ttxt)
     else:
         raise ValueError(f"unknown dedup method {method!r}; use 'exact' or 'minhash'")
-    n_in = df.count()
-    n_out = survivors.count()
-    report = local_frame(
-        spark,
-        [
-            (
-                method,
-                n_in,
-                n_out,
-                n_in - n_out,
-                n_dropped_buckets,
-                n_docs_in_dropped,
-            )
-        ],
-        "method string, n_input long, n_survivors long, n_removed long, "
-        "n_dropped_buckets long, n_docs_in_dropped_buckets long",
+    return survivors, _dedup_report(
+        spark, method, df, survivors, n_dropped_buckets, n_docs_in_dropped
     )
-    return survivors, report
 
 
 def dedup_media(
@@ -182,11 +194,10 @@ def dedup_media(
         phash_hashes,
         phash_near_dup_pairs,
     )
-    from discogs_etl_spark.queries.llm import connected_components_star
 
-    # validate the payload column DRIVER-SIDE (r15 ADVICE #3): the CLI's
-    # --method phash reuses --text (default 'text'), so pointing it at a
-    # string column is an easy misconfiguration that used to surface as
+    # Validate the payload column on the driver: the CLI's --method
+    # phash reuses --text (default 'text'), so pointing it at a string
+    # column is an easy misconfiguration that would otherwise surface as
     # bytes(payload) raising TypeError inside executor tasks.  Strings
     # are accepted by casting to binary (Spark's string->binary cast is
     # the UTF-8 bytes, which for the fixtures is exactly with_payload's
@@ -240,31 +251,10 @@ def dedup_media(
         .select("doc_a", "doc_b")
         .localCheckpoint()
     )
-    comp = connected_components_star(spark, pairs)
-    losers = comp.where(F.col("doc_id") != F.col("component_id")).select(
-        F.col("doc_id").alias("__detl_loser")
+    survivors = _keep_component_minima(spark, norm, tid, pairs).drop(tid, tpay)
+    return survivors, _dedup_report(
+        spark, "phash", df, survivors, n_dropped_buckets, n_docs_in_dropped
     )
-    survivors = norm.join(
-        losers, norm[tid] == losers["__detl_loser"], "left_anti"
-    ).drop(tid, tpay)
-    n_in = df.count()
-    n_out = survivors.count()
-    report = local_frame(
-        spark,
-        [
-            (
-                "phash",
-                n_in,
-                n_out,
-                n_in - n_out,
-                n_dropped_buckets,
-                n_docs_in_dropped,
-            )
-        ],
-        "method string, n_input long, n_survivors long, n_removed long, "
-        "n_dropped_buckets long, n_docs_in_dropped_buckets long",
-    )
-    return survivors, report
 
 
 def _orderable(dt: T.DataType) -> bool:

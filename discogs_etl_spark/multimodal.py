@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from discogs_etl_spark.queries._oracle_sql import cc_sql
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.tables import load
 
@@ -1194,29 +1195,23 @@ def multimodal_phash_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@register(
-    "curation_dedup_media",
-    oracle=f"""
-        WITH RECURSIVE {_PHASH_GRAPH_SQL}{_phash_pairs_sql()},
-        pairs AS (
-            SELECT doc_a, doc_b FROM exact_pairs
-            UNION ALL
-            SELECT doc_a, doc_b FROM near_pairs
-        ),
-        edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        nodes AS (SELECT DISTINCT u AS node FROM edges),
-        reach(node, lbl) AS (
-            SELECT node, node FROM nodes
-            UNION
-            SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-        ),
-        comp AS (SELECT node AS doc_id, MIN(lbl) AS component_id
-                 FROM reach GROUP BY node),
+# The keep-min-id tail of the media dedup oracles: connected components
+# over the exact_pairs and near_pairs CTEs of the enclosing query
+# (``_phash_pairs_sql``), then the image docs (every third doc_id) that
+# are no component's non-minimum.  Twin of ``curation.dedup_media``.
+_PHASH_PAIRS = "SELECT doc_a, doc_b FROM exact_pairs UNION ALL SELECT doc_a, doc_b FROM near_pairs"
+_PHASH_SURVIVORS_SQL = f"""comp AS ({cc_sql(_PHASH_PAIRS)}),
         losers AS (SELECT doc_id FROM comp WHERE doc_id <> component_id),
         allimg AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0),
         surv AS (SELECT doc_id FROM allimg
-                 WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
+                 WHERE doc_id NOT IN (SELECT doc_id FROM losers)),"""
+
+
+@register(
+    "curation_dedup_media",
+    oracle=f"""
+        WITH {_PHASH_GRAPH_SQL}{_phash_pairs_sql()},
+        {_PHASH_SURVIVORS_SQL}
         report AS (
             SELECT 'phash' AS method,
                    (SELECT COUNT(*) FROM allimg) AS n_input,
@@ -1234,7 +1229,7 @@ def multimodal_phash_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def curation_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END driver evidence for the user-facing ``dedup_media``
-    API (r15 verdict task #1): the full curation pipeline — phash ->
+    API: the full curation pipeline — phash ->
     exact-hash pre-grouping -> banded Hamming <= 7 pairs ->
     large-star/small-star connected components -> keep min-id — run
     through ``curation.dedup_media`` itself (the function the CLI's
@@ -1243,11 +1238,10 @@ def curation_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the keep-set, the counts, and the uncapped run's zero
     skew-accounting are all value-hashed in one result.
 
-    The oracle composes the two already-proven oracle fragments: the
-    phash pair graph (``multimodal_phash_dedup``'s SQL twin) and the
-    recursive-CTE transitive closure (``dedup_connected_components``'s
-    pattern), then recomputes survivors = all image docs minus
-    component non-minima, cross-joined with the recomputed report row.
+    The oracle composes the phash pair graph (``multimodal_phash_dedup``'s
+    SQL twin) with ``_PHASH_SURVIVORS_SQL`` (the shared ``cc_sql``
+    closure, then all image docs minus component non-minima),
+    cross-joined with the recomputed report row.
 
     Scale: composition of oracle-checked stages — no new shuffle
     shapes; the report attach is a broadcast of ONE row (the registered
@@ -1266,26 +1260,8 @@ def curation_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "curation_dedup_media_capped",
     oracle=f"""
-        WITH RECURSIVE {_PHASH_GRAPH_SQL}{_PHASH_WIDTHS_SQL}{_phash_pairs_sql("banded_ok")},
-        pairs AS (
-            SELECT doc_a, doc_b FROM exact_pairs
-            UNION ALL
-            SELECT doc_a, doc_b FROM near_pairs
-        ),
-        edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        nodes AS (SELECT DISTINCT u AS node FROM edges),
-        reach(node, lbl) AS (
-            SELECT node, node FROM nodes
-            UNION
-            SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-        ),
-        comp AS (SELECT node AS doc_id, MIN(lbl) AS component_id
-                 FROM reach GROUP BY node),
-        losers AS (SELECT doc_id FROM comp WHERE doc_id <> component_id),
-        allimg AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0),
-        surv AS (SELECT doc_id FROM allimg
-                 WHERE doc_id NOT IN (SELECT doc_id FROM losers)),
+        WITH {_PHASH_GRAPH_SQL}{_PHASH_WIDTHS_SQL}{_phash_pairs_sql("banded_ok")},
+        {_PHASH_SURVIVORS_SQL}
         dropped AS (SELECT band, sig FROM widths
                     WHERE n_hashes > {_PHASH_MAX_BUCKET}),
         dropped_bits AS (
@@ -1310,13 +1286,12 @@ def curation_dedup_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("multimodal", "dedup", "phash", "curation", "roundtrip", "graph", "skew"),
 )
 def curation_dedup_media_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MEDIA curation API under its PRODUCTION configuration — the
-    other half of the r16 residual ``curation_dedup_corpus`` closes for
-    text: ``curation.dedup_media`` with the bucket-skew cap ENGAGED
-    (``max_bucket=_PHASH_MAX_BUCKET``), so the API-level accounting
-    columns (n_dropped_buckets, n_docs_in_dropped_buckets) carry
-    NONZERO driver-checked values for the first time (the r16
-    ``curation_dedup_media`` row runs uncapped and pins them at zero).
+    """The MEDIA curation API under its PRODUCTION configuration, the
+    media twin of ``curation_dedup_corpus``: ``curation.dedup_media``
+    with the bucket-skew cap ENGAGED (``max_bucket=_PHASH_MAX_BUCKET``),
+    so the API-level accounting columns (n_dropped_buckets,
+    n_docs_in_dropped_buckets) carry NONZERO driver-checked values
+    (``curation_dedup_media`` runs uncapped and pins them at zero).
     Survivors differ from the uncapped run exactly where near-pair
     recall is traded inside over-wide buckets; exact-duplicate removal
     is unaffected (the full-hash equi-join bypasses banding).

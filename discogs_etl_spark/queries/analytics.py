@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from discogs_etl_spark.queries._oracle_sql import SESSION_GAP_S, sessions_sql
 from discogs_etl_spark.queries._util import (
     davg,
     dec,
@@ -722,23 +723,31 @@ def window_lag_lead_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sessionize(events: DataFrame, *cols: str) -> DataFrame:
+    """Gap sessionization, the Spark twin of ``sessions_sql``: user_id,
+    ts, event_id and ``cols`` of ``events`` plus is_new and session_id,
+    the running count of session starts in (ts, event_id) order per
+    user.  An event starts a session when it is the user's first or
+    follows the previous one by more than SESSION_GAP_S seconds, the
+    rule ``F.session_window`` applies (tests/test_streaming.py pins the
+    boundary on a crafted file).  Both windows partition by user_id, so
+    they and a later per-session aggregate share one exchange."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ep = epoch("ts")
+    gap = ep - F.lag(ep).over(w)
+    is_new = F.when(F.lag("ts").over(w).isNull() | (gap > float(SESSION_GAP_S)), 1)
+    return events.select(
+        "user_id", "ts", "event_id", *cols, is_new.otherwise(0).alias("is_new")
+    ).withColumn(
+        "session_id",
+        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)),
+    )
+
+
 @register(
     "sessionization_events",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, value,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts, event_id, value,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        )
+    oracle=f"""
+        WITH {sessions_sql("value")}
         SELECT user_id,
                CAST(session_id AS BIGINT) AS session_id,
                COUNT(*) AS n_events,
@@ -755,33 +764,12 @@ def sessionization_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of a session_window stream (§2.6, §2.10).  Two stacked windows +
     one aggregate; all three shuffles share the user_id hash partitioning
     so Spark reuses a single exchange."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.when(
-            F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    sess = flagged.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.sum("is_new").over(wsum).cast("long").alias("session_id"),
-    )
+    sess = _sessionize(load(spark, sf_dir, "events"), "value")
     return sess.groupBy("user_id", "session_id").agg(
-        # TIMESTAMP_NTZ output (r7 TZ audit hardening): collected
-        # TimestampType renders through the PYTHON PROCESS timezone;
-        # NTZ collects the session-TZ (UTC-pinned) wall clock as a
-        # naive datetime regardless of process zone — value-identical
-        # on a UTC box, so the oracle hash is unchanged.
+        # TIMESTAMP_NTZ output: a collected TimestampType renders
+        # through the Python process timezone, while NTZ collects the
+        # session-TZ (UTC-pinned) wall clock as a naive datetime in any
+        # process zone, the value DuckDB's naive timestamp holds.
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").cast("timestamp_ntz").alias("session_start"),
         F.max("ts").cast("timestamp_ntz").alias("session_end"),
@@ -3310,6 +3298,68 @@ _COORDER_EDGES_SQL = """
     )
 """
 
+# Label propagation over ``oriented``, the oracle twin of
+# _label_propagation: und holds both directions of every edge, l0 gives
+# each node its own label, and r1..r3 are three synchronous rounds in
+# which a node adopts its neighbours' most frequent label, ties to the
+# smallest.
+_LPA_SQL = """und AS (
+            SELECT u AS a, v AS b FROM oriented
+            UNION ALL
+            SELECT v AS a, u AS b FROM oriented
+        ),
+        l0 AS (SELECT DISTINCT a AS node, a AS label FROM und),""" + ",".join(
+    f"""
+        r{i} AS (
+            SELECT node, label FROM (
+                SELECT und.a AS node, lb.label, COUNT(*) AS c,
+                       ROW_NUMBER() OVER (PARTITION BY und.a
+                                          ORDER BY COUNT(*) DESC, lb.label)
+                           AS rn
+                FROM und JOIN {prev} lb ON und.b = lb.node
+                GROUP BY und.a, lb.label
+            ) WHERE rn = 1
+        )"""
+    for i, prev in ((1, "l0"), (2, "r1"), (3, "r2"))
+)
+
+
+def _label_propagation(oriented: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(und, labels): both directions of the ``oriented`` (u, v) edges as
+    (a, b), and each node's label after three synchronous rounds of
+    label propagation from every node labelling itself.  A round gives
+    each node its neighbours' most frequent label, ties to the smallest,
+    the deterministic variant.
+
+    Each round's argmax is a two-level aggregation: min(struct(-c,
+    label)) over the (node, label) counts picks the winner a row_number
+    window would, but partial-aggregates map-side on the node key and
+    skips the window's per-partition sort.  A round is one edge-sized
+    shuffle join plus those two aggregates: the Pregel superstep
+    shape."""
+    und = oriented.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
+        oriented.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+    labels = und.select(F.col("a").alias("node")).distinct().select(
+        "node", F.col("node").alias("label")
+    )
+    for _ in range(3):
+        labels = (
+            und.join(labels.select(F.col("node").alias("b"), "label"), "b")
+            .groupBy(F.col("a").alias("node"), "label")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .groupBy("node")
+            .agg(
+                F.min(
+                    F.struct(
+                        (-F.col("c")).alias("nc"), F.col("label").alias("label")
+                    )
+                ).alias("best")
+            )
+            .select("node", F.col("best.label").alias("label"))
+        )
+    return und, labels
+
 
 @register(
     "graph_triangle_count",
@@ -4741,21 +4791,8 @@ def attribution_first_vs_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sessions_max_concurrency",
     bench=True,
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), bounds AS (
+    oracle=f"""
+        WITH {sessions_sql()}, bounds AS (
             SELECT user_id, session_id,
                    MIN(ts) AS s_start, MAX(ts) AS s_end
             FROM sess GROUP BY user_id, session_id
@@ -4811,27 +4848,15 @@ def sessions_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     day is still too big, the same two-pass trick applies fractally —
     sub-partition by hour, sweep each, then cumulate the 24 per-hour
     totals as hour-level carry (the standard distributed prefix-sum)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    # Materialize the session bounds ONCE: three consumers (starts, ends,
+    sess = _sessionize(load(spark, sf_dir, "events"))
+    # Materialize the session bounds once: three consumers (starts, ends,
     # carry) reference this subtree, and Spark does not share common
-    # subplans across DataFrame branches — unshared, the events scan plus
-    # both sessionization windows executed 3x per run (3 parquet scans in
-    # the before-plan; guide §1.2/§2.4).  bounds is sessions-sized (≪
-    # events), so the checkpoint holds only the small interval table and
-    # the sweep/carry branches read it for free.
+    # subplans across DataFrame branches, so unshared the events scan and
+    # both sessionization windows ran three times per run (three parquet
+    # scans in the plan).  bounds is sessions-sized (≪ events), so the
+    # checkpoint holds only the small interval table.
     bounds = (
-        flagged.withColumn("session_id", F.sum("is_new").over(wsum))
-        .groupBy("user_id", "session_id")
+        sess.groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
         .localCheckpoint()
     )
@@ -4881,42 +4906,7 @@ def sessions_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "graph_label_propagation",
     oracle=f"""
         WITH {_COORDER_EDGES_SQL},
-        und AS (
-            SELECT u AS a, v AS b FROM oriented
-            UNION ALL
-            SELECT v AS a, u AS b FROM oriented
-        ),
-        l0 AS (SELECT DISTINCT a AS node, a AS label FROM und),
-        r1 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label)
-                           AS rn
-                FROM und JOIN l0 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        ),
-        r2 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label)
-                           AS rn
-                FROM und JOIN r1 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        ),
-        r3 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label)
-                           AS rn
-                FROM und JOIN r2 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        )
+        {_LPA_SQL}
         SELECT label AS community,
                COUNT(*) AS n_members,
                MIN(node) AS min_node
@@ -4941,36 +4931,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel superstep shape; rounds are fixed (3) so the plan is static,
     no driver-side convergence actions (contrast
     dedup_connected_components, where convergence IS the contract)."""
-    oriented = _coorder_oriented_edges(spark, sf_dir)
-    und = oriented.select(
-        F.col("u").alias("a"), F.col("v").alias("b")
-    ).unionAll(oriented.select(F.col("v").alias("a"), F.col("u").alias("b")))
-    labels = und.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    # Per-superstep argmax as a two-level AGGREGATION instead of a
-    # row_number window (r18, guide §2.3 "aggregate before you shuffle"):
-    # min(struct(-c, label)) over the (node, label) counts picks the
-    # identical (max c, tie -> smallest label) winner the rn=1 filter
-    # picked, but partial-aggregates map-side on the node key and skips
-    # the window's per-partition sort.
-    for _ in range(3):
-        labels = (
-            und.join(
-                labels.select(F.col("node").alias("b"), "label"), "b"
-            )
-            .groupBy(F.col("a").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("c")).alias("nc"), F.col("label").alias("label")
-                    )
-                ).alias("best")
-            )
-            .select("node", F.col("best.label").alias("label"))
-        )
+    _und, labels = _label_propagation(_coorder_oriented_edges(spark, sf_dir))
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("node").alias("min_node"),
@@ -6087,20 +6048,7 @@ def _concurrency_oracle() -> str:
 @register(
     "events_littles_law_report",
     oracle=f"""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), bounds AS (
+        WITH {sessions_sql()}, bounds AS (
             SELECT user_id, session_id,
                    MIN(ts) AS s_start, MAX(ts) AS s_end
             FROM sess GROUP BY user_id, session_id
@@ -6136,20 +6084,9 @@ def events_littles_law_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: session bounds are the user-keyed sessionization shuffle;
     the report aggregates are scalars; the peak reuses the day-
     partitioned sweep (never a global single-partition sort)."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
+    sess = _sessionize(load(spark, sf_dir, "events"))
     bounds = (
-        flagged.withColumn("session_id", F.sum("is_new").over(wsum))
-        .groupBy("user_id", "session_id")
+        sess.groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
     )
     dur = F.round(epoch("s_end") - epoch("s_start"), 3)
@@ -6416,21 +6353,8 @@ def topn_with_others_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "process_conformance_sessions",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, event_type,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts, event_id, event_type,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), firsts AS (
+    oracle=f"""
+        WITH {sessions_sql("event_type")}, firsts AS (
             SELECT user_id, session_id,
                    MIN(CASE WHEN event_type = 'view' THEN ts END) AS t_view,
                    MIN(CASE WHEN event_type = 'click' THEN ts END) AS t_click,
@@ -6464,21 +6388,9 @@ def process_conformance_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sessionization's user-keyed windows, then ONE conditional-MIN
     aggregate per session and a 5-way classification — no joins, no
     per-trace explode; the class histogram is the output."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
+    sess = _sessionize(load(spark, sf_dir, "events"), "event_type")
     firsts = (
-        flagged.withColumn("session_id", F.sum("is_new").over(wsum))
-        .groupBy("user_id", "session_id")
+        sess.groupBy("user_id", "session_id")
         .agg(
             F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
             F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
@@ -7445,21 +7357,8 @@ def customers_churned_1997(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "conversion_by_session_depth",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, event_type,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, event_type,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), per AS (
+    oracle=f"""
+        WITH {sessions_sql("event_type")}, per AS (
             SELECT user_id, session_id, COUNT(*) AS depth,
                    MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                        AS converted
@@ -7488,21 +7387,9 @@ def conversion_by_session_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: sessionization's user-keyed windows, a per-session count+flag
     aggregate, a 4-bucket rollup — nothing new shuffles."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
+    sess = _sessionize(load(spark, sf_dir, "events"), "event_type")
     per = (
-        flagged.withColumn("session_id", F.sum("is_new").over(wsum))
-        .groupBy("user_id", "session_id")
+        sess.groupBy("user_id", "session_id")
         .agg(
             F.count(F.lit(1)).alias("depth"),
             F.max(
@@ -7708,21 +7595,8 @@ def parts_price_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "attribution_shapley_two_channel",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, event_type,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, event_type,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), per AS (
+    oracle=f"""
+        WITH {sessions_sql("event_type")}, per AS (
             SELECT user_id, session_id,
                    MAX(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS has_v,
                    MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS has_c,
@@ -7768,21 +7642,9 @@ def attribution_shapley_two_channel(spark: SparkSession, sf_dir: str) -> DataFra
     Scale: sessionization + ONE 4-cell conditional aggregate; the
     Shapley arithmetic is scalar.  Sessions missing a coalition cell
     contribute v = 0 (NULLIF-guarded) — stated, not silent."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
+    sess = _sessionize(load(spark, sf_dir, "events"), "event_type")
     per = (
-        flagged.withColumn("session_id", F.sum("is_new").over(wsum))
-        .groupBy("user_id", "session_id")
+        sess.groupBy("user_id", "session_id")
         .agg(
             F.max(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("has_v"),
             F.max(F.when(F.col("event_type") == "click", 1).otherwise(0)).alias(
@@ -9105,21 +8967,8 @@ def priority_sla_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "path_entropy_by_outcome",
-    oracle="""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id, event_type,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) > 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            SELECT user_id, ts, event_id, event_type,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        ), numbered AS (
+    oracle=f"""
+        WITH {sessions_sql("event_type")}, numbered AS (
             SELECT user_id, session_id, event_type,
                    ROW_NUMBER() OVER (PARTITION BY user_id, session_id
                                       ORDER BY ts, event_id) AS rn
@@ -9160,19 +9009,8 @@ def path_entropy_by_outcome(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sessionization windows, a per-session ordered collect of 3
     elements, and a (outcome, path) count → entropy per class with
     DECIMAL accumulation — path cardinality is types³ bounded."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ep = epoch("ts")
-    flagged = load(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(F.lag("ts").over(w).isNull() | ((ep - F.lag(ep).over(w)) > 1800.0), 1)
-        .otherwise(0)
-        .alias("is_new"),
-    )
-    numbered = flagged.withColumn("session_id", F.sum("is_new").over(wsum)).withColumn(
+    sess = _sessionize(load(spark, sf_dir, "events"), "event_type")
+    numbered = sess.withColumn(
         "rn",
         F.row_number().over(
             Window.partitionBy("user_id", "session_id").orderBy("ts", "event_id")
@@ -9470,43 +9308,12 @@ def supplier_greedy_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _modularity_oracle() -> str:
-    # Re-derives per-node labels by repeating graph_label_propagation's
-    # CTE chain up to r3: the registered query aggregates to communities,
-    # and modularity needs node-level labels joined back to edges.
+    # Per-node labels come from the shared _LPA_SQL chain: the registered
+    # graph_label_propagation aggregates to communities, and modularity
+    # needs node-level labels joined back to edges.
     return f"""
         WITH {_COORDER_EDGES_SQL},
-        und AS (
-            SELECT u AS a, v AS b FROM oriented
-            UNION ALL SELECT v, u FROM oriented
-        ),
-        l0 AS (SELECT DISTINCT a AS node, a AS label FROM und),
-        r1 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label) AS rn
-                FROM und JOIN l0 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        ),
-        r2 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label) AS rn
-                FROM und JOIN r1 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        ),
-        r3 AS (
-            SELECT node, label FROM (
-                SELECT und.a AS node, lb.label, COUNT(*) AS c,
-                       ROW_NUMBER() OVER (PARTITION BY und.a
-                                          ORDER BY COUNT(*) DESC, lb.label) AS rn
-                FROM und JOIN r2 lb ON und.b = lb.node
-                GROUP BY und.a, lb.label
-            ) WHERE rn = 1
-        ),
+        {_LPA_SQL},
         m AS (SELECT COUNT(*) AS m FROM oriented),
         intra AS (
             SELECT COUNT(*) AS e_in FROM oriented e
@@ -9552,30 +9359,7 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     intra-edge join against labels and a per-community degree sum —
     community-cardinality arithmetic at the end."""
     oriented = _coorder_oriented_edges(spark, sf_dir)
-    und = oriented.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
-        oriented.select(F.col("v").alias("a"), F.col("u").alias("b"))
-    )
-    labels = und.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    # same two-level argmax aggregation as graph_label_propagation's r18
-    # rewrite — identical winner per (max c, tie -> smallest label), no
-    # per-node window sort
-    for _ in range(3):
-        labels = (
-            und.join(labels.select(F.col("node").alias("b"), "label"), "b")
-            .groupBy(F.col("a").alias("node"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .groupBy("node")
-            .agg(
-                F.min(
-                    F.struct(
-                        (-F.col("c")).alias("nc"), F.col("label").alias("label")
-                    )
-                ).alias("best")
-            )
-            .select("node", F.col("best.label").alias("label"))
-        )
+    und, labels = _label_propagation(oriented)
     labels = labels.localCheckpoint()
     m = oriented.count()
     intra = (
@@ -9597,8 +9381,9 @@ def graph_modularity_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_dc2"),
     )
     # m is a driver scalar: an edgeless graph (empty lineitem) has no
-    # modularity to report — NULL q, same CASE guard as the oracle (r11
-    # empty-input hardening; 4.0*m*m would otherwise be a Python 0-div).
+    # modularity to report, so q is NULL, the oracle's CASE guard
+    # (4.0*m*m would otherwise divide by zero in Python;
+    # tests/test_empty_inputs.py runs it on empty tables).
     q = (
         F.round(
             F.lit(intra) / F.lit(float(m)) - F.col("sum_dc2") / (4.0 * m * m), 6

@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from discogs_etl_spark.queries._oracle_sql import cc_sql
 from discogs_etl_spark.queries._util import half_up_long, memo_cache
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.session import local_frame, scoped_conf
@@ -241,16 +242,22 @@ def dedup_exact_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# sh: each document's distinct word trigrams; m: their count per document;
+# inter: the trigrams each document pair shares (doc_a < doc_b), the
+# shingle-overlap core the n-gram similarity oracles score.
+_SQL_TRIGRAM_INTER = f"""sh AS (
+            SELECT doc_id, unnest({_SQL_TRIGRAMS}) AS sh FROM documents
+        ),
+        m AS (SELECT doc_id, COUNT(*) AS m FROM sh GROUP BY doc_id),
+        inter AS (
+            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
+            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id
+        )"""
+
+
 _NGRAM_ORACLE = f"""
-    WITH sh AS (
-        SELECT doc_id, unnest({_SQL_TRIGRAMS}) AS sh FROM documents
-    ),
-    m AS (SELECT doc_id, COUNT(*) AS m FROM sh GROUP BY doc_id),
-    inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
+    WITH {_SQL_TRIGRAM_INTER}
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / (ma.m + mb.m - n_common), 6) AS jaccard
     FROM inter
@@ -258,6 +265,20 @@ _NGRAM_ORACLE = f"""
     JOIN m mb ON doc_b = mb.doc_id
     WHERE CAST(n_common AS DOUBLE) / (ma.m + mb.m - n_common) >= 0.3
 """
+
+
+def _trigram_overlap(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(m, inter), the Spark twin of ``_SQL_TRIGRAM_INTER``: m(doc_id, m)
+    is each document's distinct word-trigram count and inter(doc_a,
+    doc_b, n_common) the trigrams each pair shares, from the posting
+    lists of ``_posting_pair_counts``.  m is the size of the
+    array_distinct'ed shingle array, equal to an explode-and-count per
+    document without a second exchange; a document with no shingles
+    gets an m row that no pair joins."""
+    docs = _with_shingles(load(spark, sf_dir, "documents"), "doc_id")
+    sh = docs.select("doc_id", F.explode("shingles").alias("sh"))
+    m = docs.select("doc_id", F.size("shingles").cast("bigint").alias("m"))
+    return m, _posting_pair_counts(sh)
 
 
 @register(
@@ -272,24 +293,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing a shingle are compared — never a cross join).  The index is
     consumed as POSTING LISTS (one collect_list per shingle + in-list
     position-ordered pair emission), not as an exploded self-join: the
-    shingle subtree builds ONCE, with no hash-relation build and probe
-    (guide §2.4).  Pair emission and the (doc_a, doc_b) count are those
+    shingle subtree builds ONCE, with no hash-relation build and probe.
+    Pair emission and the (doc_a, doc_b) count are those
     of the self-join, so n_common is the same multiset; the oracle (a
     self-join) checks it exactly, and dedup_minhash_eval's plan pin
     shows the second documents scan gone.  Scale: posting
     lists blow up on very common shingles exactly where the old join's
     hot keys did; the prefix-filter variant and the MinHash variant
     below are the 100 TB paths, this one is the exact verifier."""
-    docs = _with_shingles(load(spark, sf_dir, "documents"), "doc_id")
-    sh = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    # |shingle set| is the ARRAY SIZE — shingles is array_distinct'ed, so
-    # size(shingles) equals the old explode+count per doc exactly (docs
-    # with zero shingles gain an m row, but m is only ever inner-joined
-    # to pair docs, which by construction have >= 1 shingle).  Removes a
-    # full shingle re-explode + aggregation exchange per query (r18,
-    # guide §2.4); the doc-sized m side broadcasts as before.
-    m = docs.select("doc_id", F.size("shingles").cast("bigint").alias("m"))
-    inter = _posting_pair_counts(sh)
+    m, inter = _trigram_overlap(spark, sf_dir)
     ma = m.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("m_a"))
     mb = m.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("m_b"))
     jacc = F.col("n_common").cast("double") / (
@@ -819,18 +831,7 @@ def dedup_minhash_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "curation_dedup_corpus",
     oracle=f"""
-        WITH RECURSIVE
-        pairs AS ({_MINHASH_CAPPED_ORACLE}),
-        edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                  UNION SELECT doc_b, doc_a FROM pairs),
-        nodes AS (SELECT DISTINCT u AS node FROM edges),
-        reach(node, lbl) AS (
-            SELECT node, node FROM nodes
-            UNION
-            SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-        ),
-        comp AS (SELECT node AS doc_id, MIN(lbl) AS component_id
-                 FROM reach GROUP BY node),
+        WITH comp AS ({cc_sql(_MINHASH_CAPPED_ORACLE)}),
         losers AS (SELECT doc_id FROM comp WHERE doc_id <> component_id),
         alldocs AS (SELECT doc_id FROM documents),
         surv AS (SELECT doc_id FROM alldocs
@@ -870,24 +871,24 @@ def dedup_minhash_dropped_buckets(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def curation_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END driver evidence for the user-facing ``dedup_corpus``
-    TEXT API (r16 verdict task #1 — the text twin of r16's
-    ``curation_dedup_media``): the engine's flagship curation pipeline —
-    MinHash signatures -> banded LSH candidates -> exact-Jaccard verify
-    -> large-star/small-star connected components -> keep min-id — run
+    TEXT API (the text twin of ``curation_dedup_media``): the engine's
+    flagship curation pipeline — MinHash signatures -> banded LSH
+    candidates -> exact-Jaccard verify -> large-star/small-star
+    connected components -> keep min-id — run
     through ``curation.dedup_corpus`` itself (the function the CLI's
     ``dedup --method minhash`` calls) over the documents corpus, WITH
     the production skew guard ENGAGED (``max_bucket=_MINHASH_MAX_BUCKET``,
     the same cap the registered capped twins pin), so the API's
     accounting columns (n_dropped_buckets, n_docs_in_dropped_buckets)
-    carry NONZERO driver-checked values for the first time.  Returns
+    carry NONZERO driver-checked values.  Returns
     the survivor set with the one-row report broadcast onto every
     survivor, so the keep-set, the counts, and the cap accounting are
     all value-hashed in one result.
 
-    The oracle composes three already-green fragments: the capped pair
-    graph (``dedup_minhash_capped_pairs``' oracle, embedded verbatim via
-    ``_MINHASH_CAPPED_ORACLE``), the recursive-CTE transitive closure
-    (``dedup_connected_components``' pattern), and the dropped-bucket
+    The oracle composes three fragments: the capped pair graph
+    (``dedup_minhash_capped_pairs``' oracle, embedded verbatim via
+    ``_MINHASH_CAPPED_ORACLE``), the shared recursive-CTE closure
+    ``cc_sql``, and the dropped-bucket
     accounting recomputed from ``_MINHASH_PRE_SQL``'s banded
     memberships — survivors = all docs minus component non-minima,
     cross-joined with the recomputed report row.
@@ -1316,9 +1317,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "lang_id_corpus",
-    oracle="""
+_LANG_ID_ORACLE = """
         WITH w AS (
             SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents
         ),
@@ -1346,7 +1345,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                COALESCE(p.pred_lang, 'unknown') AS pred_lang,
                CAST(d.lang = COALESCE(p.pred_lang, 'unknown') AS INT) AS correct
         FROM documents d LEFT JOIN pred p ON d.doc_id = p.doc_id
-    """,
+"""
+
+
+@register(
+    "lang_id_corpus",
+    oracle=_LANG_ID_ORACLE,
     tags=("text", "langid"),
 )
 def lang_id_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1389,37 +1393,12 @@ def lang_id_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "lang_id_confusion",
-    oracle="""
-        WITH w AS (
-            SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w FROM documents
-        ),
-        cnt AS (SELECT lang, w, COUNT(*) AS c FROM w GROUP BY lang, w),
-        top AS (
-            SELECT lang, w FROM (
-                SELECT lang, w,
-                       ROW_NUMBER() OVER (PARTITION BY lang ORDER BY c DESC, w) AS rn
-                FROM cnt
-            ) WHERE rn <= 10
-        ),
-        score AS (
-            SELECT d.doc_id, t.lang AS cand_lang, COUNT(*) AS s
-            FROM w d JOIN top t ON d.w = t.w
-            GROUP BY d.doc_id, t.lang
-        ),
-        pred AS (
-            SELECT doc_id, cand_lang AS pred_lang FROM (
-                SELECT doc_id, cand_lang, s,
-                       ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY s DESC, cand_lang) AS rn
-                FROM score
-            ) WHERE rn = 1
-        )
-        SELECT d.lang AS true_lang,
-               COALESCE(p.pred_lang, 'unknown') AS pred_lang,
+    oracle=f"""
+        SELECT true_lang, pred_lang,
                COUNT(*) AS n_docs,
-               CAST(SUM(CAST(d.lang = COALESCE(p.pred_lang, 'unknown') AS INT))
-                    AS BIGINT) AS n_correct
-        FROM documents d LEFT JOIN pred p ON d.doc_id = p.doc_id
-        GROUP BY d.lang, COALESCE(p.pred_lang, 'unknown')
+               CAST(SUM(correct) AS BIGINT) AS n_correct
+        FROM ({_LANG_ID_ORACLE})
+        GROUP BY true_lang, pred_lang
     """,
     tags=("text", "langid", "eval", "confusion"),
 )
@@ -1766,19 +1745,7 @@ def embedding_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_ORACLE = f"""
-    WITH RECURSIVE
-    pairs AS ({_MINHASH_ORACLE}),
-    edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    nodes AS (SELECT DISTINCT u AS node FROM edges),
-    reach(node, lbl) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-    )
-    SELECT node AS doc_id, MIN(lbl) AS component_id FROM reach GROUP BY node
-"""
+_CC_ORACLE = cc_sql(_MINHASH_ORACLE)
 
 
 # The near-dup pair graph is consumed by BOTH connected-component variants
@@ -2143,58 +2110,30 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RECALL_ORACLE = f"""
-    WITH exact AS (
-        SELECT q_vec_id, vec_id FROM (
-            SELECT q.vec_id AS q_vec_id, v.vec_id AS vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_SQL_COS.format(a='q.embedding', b='v.embedding')} DESC,
-                                v.vec_id
-                   ) AS rank
-            FROM (SELECT * FROM embeddings WHERE vec_id < 20) q
-            JOIN embeddings v ON v.vec_id <> q.vec_id
-        ) WHERE rank <= 3
-    ),
-    bucketed AS (
-        SELECT vec_id, embedding, {_sql_sign_bucket('embedding')} AS bucket
-        FROM embeddings
-    ),
-    approx AS (
-        SELECT q_vec_id, vec_id FROM (
-            SELECT q.vec_id AS q_vec_id, v.vec_id AS vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_SQL_COS.format(a='q.embedding', b='v.embedding')} DESC,
-                                v.vec_id
-                   ) AS rank
-            FROM (SELECT * FROM bucketed WHERE vec_id < 20) q
-            JOIN bucketed v ON v.bucket = q.bucket AND v.vec_id <> q.vec_id
-        ) WHERE rank <= 3
+def _recall_by_query(exact: DataFrame, approx: DataFrame) -> DataFrame:
+    """Per q_vec_id: n_hit, the ``exact`` (q_vec_id, vec_id) neighbors
+    that ``approx`` also returns, k, the exact neighbor count, and
+    recall_at_k = n_hit / k rounded to 6 dp."""
+    hit = approx.select("q_vec_id", "vec_id").withColumn("hit", F.lit(1))
+    return (
+        exact.join(hit, ["q_vec_id", "vec_id"], "left")
+        .groupBy("q_vec_id")
+        .agg(
+            F.count("hit").alias("n_hit"),
+            F.count(F.lit(1)).alias("k"),
+            F.round(F.count("hit").cast("double") / F.count(F.lit(1)), 6).alias(
+                "recall_at_k"
+            ),
+        )
     )
-    SELECT e.q_vec_id,
-           COUNT(a.vec_id) AS n_hit,
-           COUNT(*) AS k,
-           round(CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*), 6) AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a ON e.q_vec_id = a.q_vec_id AND e.vec_id = a.vec_id
-    GROUP BY e.q_vec_id
-"""
 
 
-@register(
-    "similarity_ann_recall",
-    oracle=_RECALL_ORACLE,
-    tags=("similarity", "ann", "recall", "evaluation"),
-)
-def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query recall@3 of sign-LSH ANN against the exact brute-force
-    neighbors — the evaluation harness that turns 'approximate' into a
-    measured number.  Both pipelines are deterministic, so even the
-    EVALUATION is oracle-checked.
-
-    Scale: the same measurement runs on a sampled query set at any size;
-    recall-vs-bucket-bits is the tuning curve for the LSH scheme."""
+def _ann_recall(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
+    """Recall@3 of the neighbor frame ``approx`` (q_vec_id, vec_id, ...)
+    against the exact cosine top 3 of the queries vec_id < 20 (ties to
+    the smaller vec_id), per query.  The exact side is a broadcast
+    nested loop of 20 queries against the corpus plus a per-query
+    WindowGroupLimit."""
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -2210,19 +2149,55 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rank") <= 3)
         .select("q_vec_id", "vec_id")
     )
-    approx = similarity_ann_signlsh(spark, sf_dir).select("q_vec_id", "vec_id")
-    hit = approx.withColumn("hit", F.lit(1))
-    return (
-        exact.join(hit, ["q_vec_id", "vec_id"], "left")
-        .groupBy("q_vec_id")
-        .agg(
-            F.count("hit").alias("n_hit"),
-            F.count(F.lit(1)).alias("k"),
-            F.round(F.count("hit").cast("double") / F.count(F.lit(1)), 6).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    return _recall_by_query(exact, approx)
+
+
+def _sql_ann_recall(approx_sql: str) -> str:
+    """Oracle twin of ``_ann_recall``: per query, recall@3 of the
+    neighbor query ``approx_sql`` (q_vec_id, vec_id, ...) against the
+    exact cosine top 3 of the queries vec_id < 20, ties to the smaller
+    vec_id."""
+    return f"""
+    WITH exact AS (
+        SELECT q_vec_id, vec_id FROM (
+            SELECT q.vec_id AS q_vec_id, v.vec_id AS vec_id,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY q.vec_id
+                       ORDER BY {_SQL_COS.format(a='q.embedding', b='v.embedding')} DESC,
+                                v.vec_id
+                   ) AS rank
+            FROM (SELECT * FROM embeddings WHERE vec_id < 20) q
+            JOIN embeddings v ON v.vec_id <> q.vec_id
+        ) WHERE rank <= 3
+    ),
+    approx AS (SELECT q_vec_id, vec_id FROM ({approx_sql}))
+    SELECT e.q_vec_id,
+           COUNT(a.vec_id) AS n_hit,
+           COUNT(*) AS k,
+           round(CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*), 6) AS recall_at_k
+    FROM exact e
+    LEFT JOIN approx a ON e.q_vec_id = a.q_vec_id AND e.vec_id = a.vec_id
+    GROUP BY e.q_vec_id
+"""
+
+
+_RECALL_ORACLE = _sql_ann_recall(_ANN_ORACLE)
+
+
+@register(
+    "similarity_ann_recall",
+    oracle=_RECALL_ORACLE,
+    tags=("similarity", "ann", "recall", "evaluation"),
+)
+def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@3 of sign-LSH ANN against the exact brute-force
+    neighbors — the evaluation harness that turns 'approximate' into a
+    measured number.  Both pipelines are deterministic, so even the
+    EVALUATION is oracle-checked.
+
+    Scale: the same measurement runs on a sampled query set at any size;
+    recall-vs-bucket-bits is the tuning curve for the LSH scheme."""
+    return _ann_recall(spark, sf_dir, similarity_ann_signlsh(spark, sf_dir))
 
 
 @register(
@@ -2823,18 +2798,7 @@ def boilerplate_prefix_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _FUZZY_KEEP_ORACLE = f"""
-    WITH RECURSIVE
-    pairs AS ({_MINHASH_ORACLE}),
-    edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
-    nodes AS (SELECT DISTINCT u AS node FROM edges),
-    reach(node, lbl) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.node
-    ),
-    comp AS (SELECT node AS doc_id, MIN(lbl) AS component_id
-             FROM reach GROUP BY node),
+    WITH comp AS ({_CC_ORACLE}),
     scored AS (
         SELECT doc_id,
                len(list_distinct(string_split(text, ' '))) AS n_uniq
@@ -3362,39 +3326,122 @@ def bm25_micros_to_score(sc: Column) -> Column:
     return sc.cast("double") / 1_000_000
 
 
-@register(
-    "text_search_bm25_topk",
-    oracle="""
-        WITH tok AS (
+# The oracle twins of ``_postings`` and ``_bm25_side_tables``: tok(doc_id,
+# w, tf) counts each document's >3-char terms, dl(doc_id, dl) sums them.
+_SQL_TOK_DL = """tok AS (
             SELECT doc_id, w, COUNT(*) AS tf FROM (
                 SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
             ) WHERE len(w) > 3
             GROUP BY doc_id, w
         ),
-        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
-        dfreq AS (SELECT w, COUNT(*) AS df FROM tok GROUP BY w),
-        q AS (SELECT doc_id AS q_id, w FROM tok WHERE doc_id % 100 = 0),
-        scored AS (
-            SELECT q.q_id, t.doc_id,
-                   SUM(CAST(round(
-                       ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-                       * (t.tf * 2.2) / (t.tf + 1.2 * (0.25 + 0.75 * d.dl
+        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id)"""
+_SQL_BM25_STATS = "stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl)"
+_SQL_BM25_SIDE = f"""{_SQL_TOK_DL},
+        {_SQL_BM25_STATS},
+        dfreq AS (SELECT w, COUNT(*) AS df FROM tok GROUP BY w)"""
+# Each q_id's top 3 of the CTE ``scored`` (q_id, doc_id, sc) by sc, ties
+# to the smaller doc_id, with the score finalized to DOUBLE.
+_SQL_TOP3 = """SELECT q_id, doc_id, CAST(sc AS DOUBLE) AS score FROM (
+            SELECT q_id, doc_id, sc,
+                   ROW_NUMBER() OVER (PARTITION BY q_id
+                                      ORDER BY sc DESC, doc_id) AS rn
+            FROM scored
+        ) WHERE rn <= 3"""
+
+
+def _sql_bm25_sum(tf: str, df: str, dl: str) -> str:
+    """The oracle's BM25 score: the SUM of per-term contributions, each
+    rounded to 6 dp and accumulated as DECIMAL(28,6) (the exact twin of
+    ``bm25_contribution_micros``), from the qualified tf/df/dl columns
+    and the corpus ``stats s``."""
+    return f"""SUM(CAST(round(
+                       ln(1.0 + (s.n_docs - {df} + 0.5) / ({df} + 0.5))
+                       * ({tf} * 2.2) / ({tf} + 1.2 * (0.25 + 0.75 * {dl}
                              / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                   , 6) AS DECIMAL(28,6))) AS sc
+                   , 6) AS DECIMAL(28,6)))"""
+
+
+def _sql_bm25_exact(name: str) -> str:
+    """CTEs ``q`` (every 100th document's terms) and ``name`` (q_id,
+    doc_id, sc): exact BM25 of each query against the full postings,
+    self-matches excluded.  Needs ``_SQL_BM25_SIDE``."""
+    return f"""q AS (SELECT doc_id AS q_id, w FROM tok WHERE doc_id % 100 = 0),
+        {name} AS (
+            SELECT q.q_id, t.doc_id, {_sql_bm25_sum("t.tf", "f.df", "d.dl")} AS sc
             FROM q JOIN tok t ON q.w = t.w
                  JOIN dfreq f ON t.w = f.w
                  JOIN dl d ON t.doc_id = d.doc_id
                  CROSS JOIN stats s
             WHERE t.doc_id <> q.q_id
             GROUP BY q.q_id, t.doc_id
-        )
-        SELECT q_id, doc_id, CAST(sc AS DOUBLE) AS score FROM (
-            SELECT q_id, doc_id, sc,
-                   ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY sc DESC, doc_id) AS rn
-            FROM scored
-        ) WHERE rn <= 3
+        )"""
+
+
+def _sql_bm25_pruned(name: str) -> str:
+    """CTEs ``kept``, ``pruned`` and ``name`` (q_id, doc_id, sc): the
+    oracle twin of ``_bm25_pruned_index`` (terms at or below the median
+    df, each keeping its 64 highest-impact postings) and BM25 of every
+    100th document's kept terms against it.  Needs ``_SQL_BM25_SIDE``."""
+    return f"""kept AS (
+            SELECT w, df FROM dfreq
+            WHERE df <= (SELECT median(df) FROM dfreq)
+        ),
+        pruned AS (
+            SELECT w, doc_id, tf, df, dl FROM (
+                SELECT t.w, t.doc_id, t.tf, k.df, d.dl,
+                       ROW_NUMBER() OVER (
+                           PARTITION BY t.w
+                           ORDER BY round((t.tf * 2.2)
+                                    / (t.tf + 1.2 * (0.25 + 0.75 * d.dl
+                                       / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
+                               , 6) DESC,
+                               t.doc_id
+                       ) AS rn
+                FROM tok t JOIN kept k ON t.w = k.w
+                     JOIN dl d ON t.doc_id = d.doc_id
+                     CROSS JOIN stats s
+            ) WHERE rn <= {_BM25_PRUNE_TOP_M}
+        ),
+        {name} AS (
+            SELECT q.q_id, p.doc_id, {_sql_bm25_sum("p.tf", "p.df", "p.dl")} AS sc
+            FROM (SELECT t.doc_id AS q_id, t.w
+                  FROM tok t JOIN kept k ON t.w = k.w
+                  WHERE t.doc_id % 100 = 0) q
+                 JOIN pruned p ON q.w = p.w
+                 CROSS JOIN stats s
+            WHERE p.doc_id <> q.q_id
+            GROUP BY q.q_id, p.doc_id
+        )"""
+
+
+def _bm25_scored(q: DataFrame, postings: DataFrame, stats: DataFrame) -> DataFrame:
+    """(q_id, doc_id, sc): each query's BM25 against ``postings`` (w,
+    doc_id, tf, df, dl), sc the summed int64 micros of
+    ``bm25_contribution_micros``.  ``q`` holds (q_id, w); self-matches
+    are excluded and the 1-row corpus ``stats`` is broadcast."""
+    return (
+        q.join(postings, "w")
+        .where(F.col("doc_id") != F.col("q_id"))
+        .join(F.broadcast(stats))
+        .select("q_id", "doc_id", bm25_contribution_micros().alias("c"))
+        .groupBy("q_id", "doc_id")
+        .agg(F.sum("c").alias("sc"))
+    )
+
+
+def _top3(scored: DataFrame) -> DataFrame:
+    """Each q_id's 3 rows of highest sc, ties to the smaller doc_id: a
+    per-query WindowGroupLimit, never a global sort."""
+    wtop = Window.partitionBy("q_id").orderBy(F.desc("sc"), F.asc("doc_id"))
+    return scored.withColumn("rn", F.row_number().over(wtop)).where(F.col("rn") <= 3)
+
+
+@register(
+    "text_search_bm25_topk",
+    oracle=f"""
+        WITH {_SQL_BM25_SIDE},
+        {_sql_bm25_exact("scored")}
+        {_SQL_TOP3}
     """,
     tags=("text", "search", "bm25", "topk"),
     bench=True,
@@ -3418,42 +3465,18 @@ def text_search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse the postings' partitioning, the corpus stats (N, Σdl) broadcast
     as a 1-row aggregate, scoring reduces on (query, doc), and top-k is a
     WindowGroupLimit — never a global sort."""
-    # tok feeds FOUR subplans (dl, df, the query side, and the postings
-    # join) — un-checkpointed, the corpus tokenization ran 4x (measured
-    # ~3x the whole query); the session-cached materialization serves
-    # every retrieval query.
-    #
-    # r18 (guide §2.3 "narrower types"): profiled at sf0.1, 3.7 of 4.4 s
-    # was the scoring aggregation — 3.6M joined rows summed into a
-    # DECIMAL(28,6) buffer.  The per-row contribution is now carried as
-    # int64 micros so the grouped sum is a primitive long
-    # (bm25_contribution_micros; A/B-verified bit-equal at all three
-    # sfs — measured 4.39 → 2.85 s on the scoring aggregate; staging
-    # idf/dnorm onto the side tables was ALSO tried and bought nothing
-    # beyond the fixed point, so the join shape stays untouched).
-    # Values and the published schema are unchanged.
-    tok = _postings(spark, sf_dir)
-    dl = tok.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
-    dfreq = tok.groupBy("w").agg(F.count(F.lit(1)).alias("df"))
+    # tok feeds four subplans (dl, df, the query side and the postings
+    # join); the session-cached postings keep the corpus tokenization to
+    # one run.  Measured at sf0.1, the int64-micros contribution cut the
+    # scoring aggregate from 4.39 to 2.85 s against a DECIMAL(28,6) sum
+    # buffer, bit-equal at all three fixture sfs.
+    tok, dl, stats, dfreq = _bm25_side_tables(spark, sf_dir)
     q = tok.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("q_id"), "w"
     )
-    joined = (
-        q.join(tok.join(dfreq, "w").join(dl, "doc_id"), "w")
-        .where(F.col("doc_id") != F.col("q_id"))
-        .join(F.broadcast(stats))
-    )
-    scored = (
-        joined.select("q_id", "doc_id", bm25_contribution_micros().alias("c"))
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("c").alias("sc"))
-    )
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("sc"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= 3)
-        .select("q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score"))
+    scored = _bm25_scored(q, tok.join(dfreq, "w").join(dl, "doc_id"), stats)
+    return _top3(scored).select(
+        "q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score")
     )
 
 
@@ -3465,27 +3488,16 @@ _SEARCH_CORPUS_QUERY = "hash join merge column filter"
 
 @register(
     "curation_search_corpus",
-    oracle="""
-        WITH tok AS (
-            SELECT doc_id, w, COUNT(*) AS tf FROM (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-            ) WHERE len(w) > 3
-            GROUP BY doc_id, w
-        ),
-        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
+    oracle=f"""
+        WITH {_SQL_TOK_DL},
+        {_SQL_BM25_STATS},
         hits AS (
             SELECT * FROM tok
             WHERE w IN ('column', 'filter', 'hash', 'join', 'merge')
         ),
         dfreq AS (SELECT w, COUNT(*) AS df FROM hits GROUP BY w),
         scored AS (
-            SELECT h.doc_id,
-                   SUM(CAST(round(
-                       ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-                       * (h.tf * 2.2) / (h.tf + 1.2 * (0.25 + 0.75 * d.dl
-                             / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                   , 6) AS DECIMAL(28,6))) AS sc
+            SELECT h.doc_id, {_sql_bm25_sum("h.tf", "f.df", "d.dl")} AS sc
             FROM hits h JOIN dfreq f ON h.w = f.w
                  JOIN dl d ON h.doc_id = d.doc_id
                  CROSS JOIN stats s
@@ -3550,7 +3562,7 @@ def _bm25_pruned_index(
     """THE static prune rule — (kept terms, pruned postings) — shared by
     the production twin AND its recall eval so a threshold retune or
     rule change can never drift between the measured thing and the
-    measurement (review r9).  Stopping: drop terms above the
+    measurement.  Stopping: drop terms above the
     vocabulary's median df; impact ordering: keep each surviving term's
     top-64 postings by length-normalized tf saturation (ties doc_id)."""
     med = dfreq.agg(F.expr("percentile(df, 0.5)").alias("df_med"))
@@ -3580,59 +3592,10 @@ def _bm25_pruned_index(
 
 @register(
     "text_search_bm25_pruned_topk",
-    oracle="""
-        WITH tok AS (
-            SELECT doc_id, w, COUNT(*) AS tf FROM (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-            ) WHERE len(w) > 3
-            GROUP BY doc_id, w
-        ),
-        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
-        dfreq AS (SELECT w, COUNT(*) AS df FROM tok GROUP BY w),
-        kept AS (
-            SELECT w, df FROM dfreq
-            WHERE df <= (SELECT median(df) FROM dfreq)
-        ),
-        pruned AS (
-            SELECT w, doc_id, tf, df, dl FROM (
-                SELECT t.w, t.doc_id, t.tf, k.df, d.dl,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY t.w
-                           ORDER BY round((t.tf * 2.2)
-                                    / (t.tf + 1.2 * (0.25 + 0.75 * d.dl
-                                       / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                               , 6) DESC,
-                               t.doc_id
-                       ) AS rn
-                FROM tok t JOIN kept k ON t.w = k.w
-                     JOIN dl d ON t.doc_id = d.doc_id
-                     CROSS JOIN stats s
-            ) WHERE rn <= 64
-        ),
-        q AS (
-            SELECT t.doc_id AS q_id, t.w
-            FROM tok t JOIN kept k ON t.w = k.w
-            WHERE t.doc_id % 100 = 0
-        ),
-        scored AS (
-            SELECT q.q_id, p.doc_id,
-                   SUM(CAST(round(
-                       ln(1.0 + (s.n_docs - p.df + 0.5) / (p.df + 0.5))
-                       * (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * p.dl
-                             / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                   , 6) AS DECIMAL(28,6))) AS sc
-            FROM q JOIN pruned p ON q.w = p.w
-                 CROSS JOIN stats s
-            WHERE p.doc_id <> q.q_id
-            GROUP BY q.q_id, p.doc_id
-        )
-        SELECT q_id, doc_id, CAST(sc AS DOUBLE) AS score FROM (
-            SELECT q_id, doc_id, sc,
-                   ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY sc DESC, doc_id) AS rn
-            FROM scored
-        ) WHERE rn <= 3
+    oracle=f"""
+        WITH {_SQL_BM25_SIDE},
+        {_sql_bm25_pruned("scored")}
+        {_SQL_TOP3}
     """,
     tags=("text", "search", "bm25", "topk", "pruning", "impact_ordering"),
 )
@@ -3667,7 +3630,7 @@ def text_search_bm25_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query, doc) pair equals the baseline's score restricted to kept
     terms.  Measured at sf0.1: ~3.5x faster than the exact baseline
     (best-of-3 1.1 s vs 3.8 s); the approximation cost on this fixture
-    is large and is recorded honestly in SCALE_NOTES §Round 9 — the
+    is large (``text_search_bm25_pruned_recall`` measures it): the
     synthetic corpus has a 24-term vocabulary with near-uniform df
     (every doc shares ~77% of all terms), so the ranking signal is
     whole-vocabulary coverage, which NO per-term static prune can
@@ -3690,53 +3653,16 @@ def text_search_bm25_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(kept.select("w"), "w")
         .select(F.col("doc_id").alias("q_id"), "w")
     )
-    joined = (
-        q.join(pruned, "w")
-        .where(F.col("doc_id") != F.col("q_id"))
-        .join(F.broadcast(stats))
-    )
-    scored = (
-        # fixed-point accumulation (r18): int64 micros instead of a
-        # decimal sum buffer — see text_search_bm25_topk's r18 note
-        joined.select("q_id", "doc_id", bm25_contribution_micros().alias("c"))
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("c").alias("sc"))
-    )
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("sc"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= 3)
-        .select("q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score"))
+    return _top3(_bm25_scored(q, pruned, stats)).select(
+        "q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score")
     )
 
 
 @register(
     "text_search_bm25_pruned_recall",
-    oracle="""
-        WITH tok AS (
-            SELECT doc_id, w, COUNT(*) AS tf FROM (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-            ) WHERE len(w) > 3
-            GROUP BY doc_id, w
-        ),
-        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id),
-        stats AS (SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl FROM dl),
-        dfreq AS (SELECT w, COUNT(*) AS df FROM tok GROUP BY w),
-        q AS (SELECT doc_id AS q_id, w FROM tok WHERE doc_id % 100 = 0),
-        scored_exact AS (
-            SELECT q.q_id, t.doc_id,
-                   SUM(CAST(round(
-                       ln(1.0 + (s.n_docs - f.df + 0.5) / (f.df + 0.5))
-                       * (t.tf * 2.2) / (t.tf + 1.2 * (0.25 + 0.75 * d.dl
-                             / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                   , 6) AS DECIMAL(28,6))) AS sc
-            FROM q JOIN tok t ON q.w = t.w
-                 JOIN dfreq f ON t.w = f.w
-                 JOIN dl d ON t.doc_id = d.doc_id
-                 CROSS JOIN stats s
-            WHERE t.doc_id <> q.q_id
-            GROUP BY q.q_id, t.doc_id
-        ),
+    oracle=f"""
+        WITH {_SQL_BM25_SIDE},
+        {_sql_bm25_exact("scored_exact")},
         top_exact AS (
             SELECT q_id, doc_id, sc FROM (
                 SELECT q_id, doc_id, sc,
@@ -3745,41 +3671,7 @@ def text_search_bm25_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 FROM scored_exact
             ) WHERE rn <= 3
         ),
-        kept AS (
-            SELECT w, df FROM dfreq
-            WHERE df <= (SELECT median(df) FROM dfreq)
-        ),
-        pruned AS (
-            SELECT w, doc_id, tf, df, dl FROM (
-                SELECT t.w, t.doc_id, t.tf, k.df, d.dl,
-                       ROW_NUMBER() OVER (
-                           PARTITION BY t.w
-                           ORDER BY round((t.tf * 2.2)
-                                    / (t.tf + 1.2 * (0.25 + 0.75 * d.dl
-                                       / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                               , 6) DESC,
-                               t.doc_id
-                       ) AS rn
-                FROM tok t JOIN kept k ON t.w = k.w
-                     JOIN dl d ON t.doc_id = d.doc_id
-                     CROSS JOIN stats s
-            ) WHERE rn <= 64
-        ),
-        scored_pruned AS (
-            SELECT q.q_id, p.doc_id,
-                   SUM(CAST(round(
-                       ln(1.0 + (s.n_docs - p.df + 0.5) / (p.df + 0.5))
-                       * (p.tf * 2.2) / (p.tf + 1.2 * (0.25 + 0.75 * p.dl
-                             / (CAST(s.sum_dl AS DOUBLE) / s.n_docs)))
-                   , 6) AS DECIMAL(28,6))) AS sc
-            FROM (SELECT t.doc_id AS q_id, t.w
-                  FROM tok t JOIN kept k ON t.w = k.w
-                  WHERE t.doc_id % 100 = 0) q
-                 JOIN pruned p ON q.w = p.w
-                 CROSS JOIN stats s
-            WHERE p.doc_id <> q.q_id
-            GROUP BY q.q_id, p.doc_id
-        ),
+        {_sql_bm25_pruned("scored_pruned")},
         top_pruned AS (
             SELECT q_id, doc_id FROM (
                 SELECT q_id, doc_id,
@@ -3815,9 +3707,8 @@ def text_search_bm25_pruned_recall(spark: SparkSession, sf_dir: str) -> DataFram
     the same exact-decimal score tables both engines share, so the eval
     itself oracle-hashes exactly even though it MEASURES an
     approximation.  On this fixture the expected result is honest and
-    bleak (overlap 0 — see SCALE_NOTES §Round 9: a 24-term
-    near-uniform-df vocabulary is static pruning's structural worst
-    case); the eval exists so any future corpus change, threshold
+    bleak (overlap 0: a 24-term near-uniform-df vocabulary is static
+    pruning's structural worst case); the eval exists so any future corpus change, threshold
     retune, or prune-rule fix shows up as a measured recall shift in
     the driver artifact, not an unquantified claim.
 
@@ -3830,43 +3721,17 @@ def text_search_bm25_pruned_recall(spark: SparkSession, sf_dir: str) -> DataFram
     q = tok.where(F.col("doc_id") % 100 == 0).select(
         F.col("doc_id").alias("q_id"), "w"
     )
-    scored_exact = (
-        # fixed-point accumulation (r18): int64 micros instead of a
-        # decimal sum buffer — see text_search_bm25_topk's r18 note
-        q.join(tok.join(dfreq, "w").join(dl, "doc_id"), "w")
-        .where(F.col("doc_id") != F.col("q_id"))
-        .join(F.broadcast(stats))
-        .select("q_id", "doc_id", bm25_contribution_micros().alias("c"))
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("c").alias("sc"))
-    )
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("sc"), F.asc("doc_id"))
-    top_exact = (
-        scored_exact.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= 3)
-        .select("q_id", "doc_id", "sc")
-    )
+    top_exact = _top3(
+        _bm25_scored(q, tok.join(dfreq, "w").join(dl, "doc_id"), stats)
+    ).select("q_id", "doc_id", "sc")
     kept, pruned = _bm25_pruned_index(tok, dl, stats, dfreq)
-    scored_pruned = (
-        q.join(kept.select("w"), "w")
-        .join(pruned, "w")
-        .where(F.col("doc_id") != F.col("q_id"))
-        .join(F.broadcast(stats))
-        .select("q_id", "doc_id", bm25_contribution_micros().alias("c"))
-        .groupBy("q_id", "doc_id")
-        .agg(F.sum("c").alias("sc"))
-    )
-    top_pruned = (
-        scored_pruned.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= 3)
-        .select(
-            F.col("q_id").alias("p_q_id"), F.col("doc_id").alias("p_doc_id")
-        )
-    )
+    top_pruned = _top3(
+        _bm25_scored(q.join(kept.select("w"), "w"), pruned, stats)
+    ).select(F.col("q_id").alias("p_q_id"), F.col("doc_id").alias("p_doc_id"))
     # An overlapping pick's exact score IS the top_exact row's own sc
     # (scored_exact is unique per (q_id, doc_id) and the join keys force
     # the same pair), so no third join against scored_exact is needed —
-    # credit sc when the pick matched, 0 decimal otherwise (review r9).
+    # credit sc when the pick matched, 0 otherwise.
     return (
         top_exact.join(
             top_pruned,
@@ -4013,27 +3878,7 @@ def similarity_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MULTIPROBE_RECALL_ORACLE = f"""
-    WITH exact AS (
-        SELECT q_vec_id, vec_id FROM (
-            SELECT q.vec_id AS q_vec_id, v.vec_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY {_SQL_COS.format(a='q.embedding', b='v.embedding')} DESC,
-                                v.vec_id) AS rank
-            FROM (SELECT * FROM embeddings WHERE vec_id < 20) q
-            JOIN embeddings v ON v.vec_id <> q.vec_id
-        ) WHERE rank <= 3
-    ),
-    approx AS (SELECT q_vec_id, vec_id FROM ({_MULTIPROBE_ORACLE}))
-    SELECT e.q_vec_id,
-           COUNT(a.vec_id) AS n_hit,
-           COUNT(*) AS k,
-           round(CAST(COUNT(a.vec_id) AS DOUBLE) / COUNT(*), 6) AS recall_at_k
-    FROM exact e
-    LEFT JOIN approx a ON e.q_vec_id = a.q_vec_id AND e.vec_id = a.vec_id
-    GROUP BY e.q_vec_id
-"""
+_MULTIPROBE_RECALL_ORACLE = _sql_ann_recall(_MULTIPROBE_ORACLE)
 
 
 @register(
@@ -4048,34 +3893,7 @@ def similarity_ann_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFr
     (similarity_ann_recall) on the same query set, for ~9x the candidate
     cost.  Both pipelines deterministic; the evaluation itself is
     oracle-checked."""
-    emb = load(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = emb.where(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("q_vec_id"), F.col("emb").alias("q_emb")
-    )
-    cos = _cosine(F.col("q_emb"), F.col("emb"))
-    w = Window.partitionBy("q_vec_id").orderBy(F.desc("raw_cos"), F.asc("vec_id"))
-    exact = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("q_vec_id"))
-        .select("q_vec_id", "vec_id", cos.alias("raw_cos"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("q_vec_id", "vec_id")
-    )
-    approx = similarity_ann_multiprobe(spark, sf_dir).select("q_vec_id", "vec_id")
-    hit = approx.withColumn("hit", F.lit(1))
-    return (
-        exact.join(hit, ["q_vec_id", "vec_id"], "left")
-        .groupBy("q_vec_id")
-        .agg(
-            F.count("hit").alias("n_hit"),
-            F.count(F.lit(1)).alias("k"),
-            F.round(F.count("hit").cast("double") / F.count(F.lit(1)), 6).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    return _ann_recall(spark, sf_dir, similarity_ann_multiprobe(spark, sf_dir))
 
 
 @register(
@@ -4575,15 +4393,7 @@ def vocab_hapax_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-        WITH sh AS (
-            SELECT doc_id, unnest({_SQL_TRIGRAMS}) AS sh FROM documents
-        ),
-        m AS (SELECT doc_id, COUNT(*) AS m FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        )
+        WITH {_SQL_TRIGRAM_INTER}
         SELECT doc_a, doc_b,
                round(CAST(n_common AS DOUBLE) / least(ma.m, mb.m), 6) AS containment
         FROM inter
@@ -4602,20 +4412,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     that dedup_ngram_jaccard structurally cannot.
 
     Scale: identical shape to the Jaccard pipeline — inverted-index
-    posting lists (docs must share a shingle; never a cross join,
-    r19 posting-pair form — see _posting_pair_counts) feeding one
+    posting lists (docs must share a shingle; never a cross join;
+    see _posting_pair_counts) feeding one
     (doc_a, doc_b) count, sizes joined back per side.  The same prefix-
     filter and MinHash escalations apply when posting lists explode."""
-    docs = _with_shingles(load(spark, sf_dir, "documents"), "doc_id")
-    sh = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    # |shingle set| is the ARRAY SIZE — shingles is array_distinct'ed, so
-    # size(shingles) equals the old explode+count per doc exactly (docs
-    # with zero shingles gain an m row, but m is only ever inner-joined
-    # to pair docs, which by construction have >= 1 shingle).  Removes a
-    # full shingle re-explode + aggregation exchange per query (r18,
-    # guide §2.4); the doc-sized m side broadcasts as before.
-    m = docs.select("doc_id", F.size("shingles").cast("bigint").alias("m"))
-    inter = _posting_pair_counts(sh)
+    m, inter = _trigram_overlap(spark, sf_dir)
     ma = m.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("m_a"))
     mb = m.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("m_b"))
     cont = F.col("n_common").cast("double") / F.least("m_a", "m_b")
@@ -5333,19 +5134,7 @@ def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rank") <= 3)
             .select("q_vec_id", "vec_id")
         )
-    exact = topk("emb", "q_emb")
-    trunc = topk("emb16", "q_emb16").withColumn("hit", F.lit(1))
-    return (
-        exact.join(trunc, ["q_vec_id", "vec_id"], "left")
-        .groupBy("q_vec_id")
-        .agg(
-            F.count("hit").alias("n_hit"),
-            F.count(F.lit(1)).alias("k"),
-            F.round(F.count("hit").cast("double") / F.count(F.lit(1)), 6).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    return _recall_by_query(topk("emb", "q_emb"), topk("emb16", "q_emb16"))
 
 
 @register(
@@ -7562,15 +7351,7 @@ def lm_domain_surprisal_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_threshold_sweep",
     oracle=f"""
-        WITH sh AS (
-            SELECT doc_id, unnest({_SQL_TRIGRAMS}) AS sh FROM documents
-        ),
-        m AS (SELECT doc_id, COUNT(*) AS m FROM sh GROUP BY doc_id),
-        inter AS (
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-            FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-            GROUP BY a.doc_id, b.doc_id
-        ),
+        WITH {_SQL_TRIGRAM_INTER},
         jp AS (
             SELECT CAST(n_common AS DOUBLE) / (ma.m + mb.m - n_common) AS j
             FROM inter
@@ -7595,18 +7376,9 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     times; scoring once and bucketing is the whole trick.
 
     Scale: the pair scoring is the standard shingle posting-pair
-    pipeline (r19 form — see _posting_pair_counts); the 4-mark fan-out
+    pipeline (see _posting_pair_counts); the 4-mark fan-out
     multiplies only the tiny scored-pair set."""
-    docs = _with_shingles(load(spark, sf_dir, "documents"), "doc_id")
-    sh = docs.select("doc_id", F.explode("shingles").alias("sh"))
-    # |shingle set| is the ARRAY SIZE — shingles is array_distinct'ed, so
-    # size(shingles) equals the old explode+count per doc exactly (docs
-    # with zero shingles gain an m row, but m is only ever inner-joined
-    # to pair docs, which by construction have >= 1 shingle).  Removes a
-    # full shingle re-explode + aggregation exchange per query (r18,
-    # guide §2.4); the doc-sized m side broadcasts as before.
-    m = docs.select("doc_id", F.size("shingles").cast("bigint").alias("m"))
-    inter = _posting_pair_counts(sh)
+    m, inter = _trigram_overlap(spark, sf_dir)
     jp = (
         inter.join(m.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("ma")), "doc_a")
         .join(m.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("mb")), "doc_b")
@@ -7897,19 +7669,7 @@ def similarity_int8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("rank") <= 3)
             .select("q_vec_id", "vec_id")
         )
-    exact = topk("q_emb", "emb")
-    approx = topk("q_remb", "remb").withColumn("hit", F.lit(1))
-    return (
-        exact.join(approx, ["q_vec_id", "vec_id"], "left")
-        .groupBy("q_vec_id")
-        .agg(
-            F.count("hit").alias("n_hit"),
-            F.count(F.lit(1)).alias("k"),
-            F.round(F.count("hit").cast("double") / F.count(F.lit(1)), 6).alias(
-                "recall_at_k"
-            ),
-        )
-    )
+    return _recall_by_query(topk("q_emb", "emb"), topk("q_remb", "remb"))
 
 
 def _impact_by_source_oracle() -> str:
@@ -7987,14 +7747,8 @@ def dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_search_query_likelihood",
-    oracle="""
-        WITH tok AS (
-            SELECT doc_id, w, COUNT(*) AS tf FROM (
-                SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
-            ) WHERE len(w) > 3
-            GROUP BY doc_id, w
-        ),
-        dl AS (SELECT doc_id, SUM(tf) AS dl FROM tok GROUP BY doc_id),
+    oracle=f"""
+        WITH {_SQL_TOK_DL},
         cf AS (SELECT w, SUM(tf) AS cf FROM tok GROUP BY w),
         stats AS (SELECT SUM(dl) AS c_len FROM dl),
         q AS (SELECT doc_id AS q_id, w FROM tok WHERE doc_id % 100 = 0),
@@ -8011,12 +7765,7 @@ def dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE t.doc_id <> q.q_id
             GROUP BY q.q_id, t.doc_id
         )
-        SELECT q_id, doc_id, CAST(sc AS DOUBLE) AS score FROM (
-            SELECT q_id, doc_id, sc,
-                   ROW_NUMBER() OVER (PARTITION BY q_id
-                                      ORDER BY sc DESC, doc_id) AS rn
-            FROM scored
-        ) WHERE rn <= 3
+        {_SQL_TOP3}
     """,
     tags=("search", "query_likelihood", "lm", "ranking"),
 )
@@ -8047,14 +7796,13 @@ def text_search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") != F.col("q_id"))
         .crossJoin(F.broadcast(stats))
     )
-    # fixed-point accumulation (r18): the 6-dp contribution rides as
-    # int64 micros so the grouped sum is a primitive long, not a
-    # DECIMAL(28,6) buffer — the same rewrite (and the same A/B
-    # bit-equality verification at all three sfs) as the BM25 family;
-    # see text_search_bm25_topk's r18 note.  r19: the HALF_UP rounding
-    # goes through _util.half_up_long (sign-aware — these log-prob
-    # contributions are negative) instead of F.round's per-row
-    # BigDecimal; equality proof and measurements in its docstring.
+    # Fixed-point accumulation: the 6-dp contribution rides as int64
+    # micros so the grouped sum is a primitive long, not a DECIMAL(28,6)
+    # buffer, bit-equal to the decimal sum at all three fixture sfs, as
+    # for BM25.  HALF_UP rounding goes through _util.half_up_long
+    # (sign-aware: these log-prob contributions are negative) instead of
+    # F.round's per-row BigDecimal; equality proof and measurements in
+    # its docstring.
     from discogs_etl_spark.queries._util import half_up_long
 
     contrib = half_up_long(
@@ -8069,11 +7817,8 @@ def text_search_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("q_id", "doc_id")
         .agg(F.sum("c").alias("sc"))
     )
-    wtop = Window.partitionBy("q_id").orderBy(F.desc("sc"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(wtop))
-        .where(F.col("rn") <= 3)
-        .select("q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score"))
+    return _top3(scored).select(
+        "q_id", "doc_id", bm25_micros_to_score(F.col("sc")).alias("score")
     )
 
 

@@ -1042,6 +1042,22 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, rev): total order price per order date, summed as
+    DECIMAL(18,2) and cast to double, the day-bounded series the
+    time-series queries read.  The rollup is the only data-sized
+    shuffle; what reads it is calendar-sized."""
+    return (
+        load(spark, sf_dir, "orders")
+        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("rev")
+        )
+    )
+
+
 @register(
     "stats_cusum_daily_revenue",
     oracle="""
@@ -1080,15 +1096,7 @@ def stats_cusum_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast joins.  Determinism: revenue and deviations accumulate as
     DECIMAL (order-free); mean/max/equality all evaluate on identical
     doubles in both engines."""
-    d = (
-        load(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("rev")
-        )
-    )
+    d = _daily_revenue(spark, sf_dir)
     m = d.agg(
         (
             F.sum(F.col("rev").cast("decimal(18,2)")).cast("double")
@@ -1311,15 +1319,7 @@ def stats_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson accumulations are all over that tiny series.  Sums accumulate
     as rounded DECIMAL so both engines' correlation doubles agree
     bit-for-bit."""
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("rev")
-        )
-    )
+    daily = _daily_revenue(spark, sf_dir)
     d = daily.withColumn("rn", F.row_number().over(Window.orderBy("day")))
     lags = spark.range(1, 8).select(F.col("id").alias("lag"))
     a = d.crossJoin(F.broadcast(lags))
@@ -1600,15 +1600,7 @@ def timeseries_locf_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     LOCF window orders the day-bounded spine — none of it data-sized.
     First-day-missing would stay NULL; the spine starts at the first
     OBSERVED day, so the first row is always real (never silent NULL)."""
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("rev")
-        )
-    )
+    daily = _daily_revenue(spark, sf_dir)
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     cal = bounds.select(F.explode(F.sequence("lo", "hi")).alias("day"))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2428,15 +2420,7 @@ def forecast_snaive_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the backtest runs over the day-bounded rollup; error sums
     accumulate as rounded DECIMAL so both engines report identical
     skill numbers."""
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("rev")
-        )
-    )
+    daily = _daily_revenue(spark, sf_dir)
     d = daily.withColumn("rn", F.row_number().over(Window.orderBy("day")))
     a = d.alias("a")
     b = d.select(F.col("rn").alias("rn_b"), F.col("rev").alias("forecast"))
@@ -3009,15 +2993,7 @@ def seasonality_strength_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: daily rollup, a 7-row group-mean table, and two scalar
     aggregates — variance decomposition at aggregation cost."""
-    daily = (
-        load(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("day", "o_orderdate").cast("date").alias("day"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("rev")
-        )
-    )
+    daily = _daily_revenue(spark, sf_dir)
     tagged = daily.select(
         "rev",
         (F.datediff("day", F.lit("1970-01-05").cast("date")) % 7).alias("dow"),

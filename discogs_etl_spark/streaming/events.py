@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from discogs_etl_spark.queries._oracle_sql import SESSION_GAP_S, sessions_sql
 from discogs_etl_spark.queries._util import dec
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.session import local_frame, scoped_conf
@@ -196,27 +197,8 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_session_window",
-    oracle="""
-        WITH flagged AS (
-            -- Spark merges an event into the open session iff it lands
-            -- STRICTLY before last_event + gap, so a gap of exactly 30:00
-            -- starts a new session: is_new uses >=, not >.
-            SELECT user_id, ts, event_id, value,
-                   CASE WHEN LAG(ts) OVER w IS NULL
-                             OR epoch(ts) - epoch(LAG(ts) OVER w) >= 1800.0
-                        THEN 1 ELSE 0 END AS is_new
-            FROM events
-            WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        ), sess AS (
-            -- same (ts, event_id) tie-break as the flagged CTE: with
-            -- duplicate (user_id, ts) pairs a ts-only prefix sum could
-            -- order tied rows differently from the is_new derivation.
-            SELECT user_id, ts, value,
-                   SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS session_id
-            FROM flagged
-        )
+    oracle=f"""
+        WITH {sessions_sql("value")}
         SELECT user_id,
                MIN(ts) AS session_start,
                COUNT(*) AS n_events,
@@ -227,19 +209,23 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "session_window"),
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native ``session_window`` (30-minute gap) streaming aggregation —
-    the stateful-streaming expression of gap-based sessionization.  The
-    oracle is the batch lag/prefix-sum sessionization: Spark's session
-    windows (merge-on-overlap with gap timeout) and the SQL formulation
-    define the same partition of each user's timeline.
+    """Native ``session_window`` (SESSION_GAP_S gap) streaming
+    aggregation — the stateful-streaming expression of gap-based
+    sessionization.  The oracle is the batch lag/prefix-sum
+    sessionization (``sessions_sql``, shared with the batch queries):
+    Spark's session windows (merge-on-overlap with gap timeout) and the
+    SQL formulation define the same partition of each user's timeline,
+    a gap of exactly SESSION_GAP_S included (tests/test_streaming.py
+    runs both on a crafted boundary file).
 
     Scale: session state merges in-place per key and the watermark closes
     sessions 2 hours behind the max event time — state is O(open
     sessions)."""
     events = read_events_stream(spark, sf_dir)
+    gap = f"{SESSION_GAP_S // 60} minutes"
     agg = (
         events.withWatermark("ts", "2 hours")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.min("ts").alias("session_start"),

@@ -65,13 +65,20 @@ def test_star_contraction_components_adversarial(spark):
     """connected_components_star on graphs the sf fixtures don't produce:
     a long chain (forces multiple contraction rounds — diameter 39), a
     separate 2-node component, a hub star, and id ordering that puts the
-    component min at the chain's far end."""
+    component min at the chain's far end.  The oracles' shared
+    recursive-CTE fragment (``cc_sql``) must give the same components in
+    DuckDB."""
+    import duckdb
+    import pandas as pd
+
+    from discogs_etl_spark.queries._oracle_sql import cc_sql
     from discogs_etl_spark.queries.llm import connected_components_star
     chain = [(i, i + 1) for i in range(100, 139)]          # min = 100
     rev_chain = [(i + 1, i) for i in range(500, 520)]      # reversed orientation
     pair = [(7, 3)]
     star = [(205, x) for x in range(200, 211) if x != 205]
-    edges = spark.createDataFrame(chain + rev_chain + pair + star, "a long, b long")
+    graph = chain + rev_chain + pair + star
+    edges = spark.createDataFrame(graph, "a long, b long")
     got = {
         (r.doc_id, r.component_id)
         for r in connected_components_star(spark, edges).collect()
@@ -81,6 +88,9 @@ def test_star_contraction_components_adversarial(spark):
     want |= {(3, 3), (7, 3)}
     want |= {(x, 200) for x in range(200, 211)}
     assert got == want
+    con = duckdb.connect()
+    con.register("g", pd.DataFrame(graph, columns=["doc_a", "doc_b"]))
+    assert set(con.execute(cc_sql("SELECT doc_a, doc_b FROM g")).fetchall()) == want
 
 
 def test_incremental_dedup_ingest(spark, tmp_path):

@@ -186,3 +186,94 @@ def test_transform_with_state_gated_or_works(spark):
     got_n = {r["user_id"]: r["n_events"] for r in got.collect()}
     exp_n = {r["user_id"]: r["n"] for r in expected.collect()}
     assert got_n == exp_n
+
+
+def _boundary_events(out_dir):
+    """An events.parquet with the fixture's schema and the session
+    boundaries the fixtures never hold: a gap of exactly SESSION_GAP_S,
+    one of SESSION_GAP_S + 1 µs, a (user_id, ts) tie that event_id
+    orders, and a single-event user."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from discogs_etl_spark.queries._oracle_sql import SESSION_GAP_S
+
+    t0 = datetime.datetime(2024, 1, 1)
+    gap = datetime.timedelta(seconds=SESSION_GAP_S)
+    us = datetime.timedelta(microseconds=1)
+    rows = [  # (event_id, ts, user_id, value)
+        (10, t0, 1, 1.25),
+        (12, t0 + gap, 1, 2.5),  # exactly the gap: same session
+        (14, t0 + 2 * gap + us, 1, 4.0),  # gap + 1 µs: new session
+        (13, t0 + 2 * gap + us, 1, 8.75),  # tie, ordered by event_id
+        (20, t0 + gap, 2, 16.0),  # the user's only event
+        (31, t0 + 3 * gap, 3, 0.5),
+        (30, t0 + 3 * gap, 3, 0.25),  # tie at a session start
+        (32, t0 + 4 * gap, 3, 1.0),  # exactly the gap after the tie
+    ]
+    table = pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows), pa.string()),
+            "value": pa.array([r[3] for r in rows], pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }
+    )
+    fixture = pq.read_schema(f"{SF_DIR}/events.parquet")
+    assert table.schema.remove_metadata() == fixture.remove_metadata()
+    pq.write_table(table, str(out_dir / "events.parquet"))
+    return str(out_dir)
+
+
+def test_session_boundaries_agree(spark, tmp_path):
+    """Sessionization on the boundaries the fixtures never hold (no gap
+    between a user's events is exactly 1800 s at any sf): the batch and
+    stream queries equal their registered oracles, the batch kernel
+    equals ``F.session_window``, and so does the shared SQL fragment.  A
+    gap of exactly SESSION_GAP_S keeps one session in Spark's
+    ``session_window``; the 1 µs longer gap splits."""
+    import duckdb
+
+    from discogs_etl_spark.queries._oracle_sql import SESSION_GAP_S, sessions_sql
+    from discogs_etl_spark.queries.analytics import _sessionize
+    from discogs_etl_spark.registry import all_specs
+    from discogs_etl_spark.tables import load
+    from tests.test_oracle import canon_rows
+
+    sf = _boundary_events(tmp_path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf}/events.parquet')")
+    specs = all_specs()
+    for name in ("sessionization_events", "stream_session_window"):
+        got = specs[name].fn(spark, sf)
+        res = con.execute(specs[name].oracle)
+        want_cols = [d[0] for d in res.description]
+        assert canon_rows(got.columns, [tuple(r) for r in got.collect()]) == canon_rows(
+            want_cols, res.fetchall()
+        ), name
+
+    events = load(spark, sf, "events")
+    bounds = [
+        F.unix_micros(F.min("ts")).alias("start_us"),
+        F.unix_micros(F.max("ts")).alias("end_us"),
+        F.count(F.lit(1)).alias("n"),
+    ]
+    kernel = _sessionize(events).groupBy("user_id", "session_id").agg(*bounds)
+    window = events.groupBy(
+        F.session_window("ts", f"{SESSION_GAP_S // 60} minutes"), "user_id"
+    ).agg(*bounds)
+    cols = ["user_id", "start_us", "end_us", "n"]
+    spark_sessions = sorted(tuple(r) for r in kernel.select(cols).collect())
+    assert spark_sessions == sorted(tuple(r) for r in window.select(cols).collect())
+    sql_sessions = con.execute(
+        f"""WITH {sessions_sql()}
+            SELECT user_id, epoch_us(MIN(ts)), epoch_us(MAX(ts)), COUNT(*)
+            FROM sess GROUP BY user_id, session_id"""
+    ).fetchall()
+    assert spark_sessions == sorted(sql_sessions)
+    # user 1: {10, 12}, {13, 14}; user 2: {20}; user 3: {30, 31, 32}
+    assert [s[3] for s in spark_sessions] == [2, 2, 1, 3]
