@@ -168,24 +168,19 @@ def _sequential_download(url: str, dest: str) -> LandedDump:
     return LandedDump(url, dest, h.hexdigest(), os.path.getsize(dest))
 
 
-def land_dumps(
-    urls: list[str],
-    landing_dir: str,
-    skip_existing: bool = True,
-    ranged: bool = False,
-    max_workers: int = 4,
-) -> list[LandedDump]:
+def land_dumps(urls: list[str], landing_dir: str) -> list[LandedDump]:
     """Land dump URLs into a local directory with an inline sha256 and
     atomic rename on completion (reference run.py:20-41 goes URL→lake in
-    one command).  ``ranged=True`` uses the parallel ranged-GET path
-    (reference io.py:153-382) for servers that support byte ranges;
-    the default is the sequential streamed GET — file:// fixtures and
-    small manifests gain nothing from ranging.
+    one command).  Every http(s) URL goes through ``ranged_download``,
+    which chooses from what the server reports: parallel ranged GETs
+    (reference io.py:153-382) when a HEAD advertises byte ranges and a
+    size above one chunk, else the sequential streamed GET, which is also
+    the path for every other scheme (file:// fixtures).
 
-    ``skip_existing`` makes re-runs incremental: an already-landed file is
-    re-hashed (cheap, local) but not re-fetched.  Partial downloads never
-    become visible — data streams to ``<name>.part`` and is renamed only
-    after the stream ends cleanly."""
+    Re-runs are incremental: an already-landed file is re-hashed (cheap,
+    local) but not re-fetched.  Partial downloads never become visible —
+    data streams to ``<name>.part`` and is renamed only after the stream
+    ends cleanly."""
     from urllib.parse import urlparse
 
     os.makedirs(landing_dir, exist_ok=True)
@@ -195,11 +190,10 @@ def land_dumps(
         if not name:
             raise ValueError(f"cannot derive a filename from {url!r}")
         dest = os.path.join(landing_dir, name)
-        if skip_existing and os.path.exists(dest):
+        if os.path.exists(dest):
             out.append(LandedDump(url, dest, _sha256_file(dest), os.path.getsize(dest)))
-            continue
-        if ranged and urlparse(url).scheme in ("http", "https"):
-            out.append(ranged_download(url, dest, max_workers=max_workers))
+        elif urlparse(url).scheme in ("http", "https"):
+            out.append(ranged_download(url, dest))
         else:
             out.append(_sequential_download(url, dest))
     return out

@@ -49,12 +49,18 @@ def cc_sql(pairs_sql: str) -> str:
     reachable from it.  A recursive CTE closes reachability, so the cost
     grows with node count times component size: an oracle for graphs of
     fixture size, not a production algorithm.  ``pairs_sql`` may name
-    CTEs of the enclosing query."""
+    CTEs of the enclosing query.
+
+    ``pairs`` and ``edges`` are MATERIALIZED: DuckDB 1.0 inlines a CTE
+    at every reference, so without it each iteration of ``reach``
+    re-derived the whole pair pipeline (measured at sf0.01 on 4 vCPUs:
+    the 12 oracles that compose this fragment took 75 s inlined and
+    14 s materialized, with identical results)."""
     return f"""
     WITH RECURSIVE
-    pairs AS ({pairs_sql}),
-    edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-              UNION SELECT doc_b, doc_a FROM pairs),
+    pairs AS MATERIALIZED ({pairs_sql}),
+    edges AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
+                           UNION SELECT doc_b, doc_a FROM pairs),
     nodes AS (SELECT DISTINCT u AS node FROM edges),
     reach(node, lbl) AS (
         SELECT node, node FROM nodes

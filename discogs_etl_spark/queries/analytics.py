@@ -4848,18 +4848,29 @@ def sessions_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     day is still too big, the same two-pass trick applies fractally —
     sub-partition by hour, sweep each, then cumulate the 24 per-hour
     totals as hour-level carry (the standard distributed prefix-sum)."""
+    return _max_concurrency(_session_bounds(spark, sf_dir))
+
+
+def _session_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, session_id, s_start, s_end) of every session, checkpointed.
+
+    Materialized once because every consumer (the sweep's starts, ends
+    and carry, and the Little's-law report) references this subtree, and
+    Spark does not share common subplans across DataFrame branches:
+    unshared, the events scan and both sessionization windows ran once
+    per consumer.  The bounds are sessions-sized (≪ events), so the
+    checkpoint holds only the small interval table."""
     sess = _sessionize(load(spark, sf_dir, "events"))
-    # Materialize the session bounds once: three consumers (starts, ends,
-    # carry) reference this subtree, and Spark does not share common
-    # subplans across DataFrame branches, so unshared the events scan and
-    # both sessionization windows ran three times per run (three parquet
-    # scans in the plan).  bounds is sessions-sized (≪ events), so the
-    # checkpoint holds only the small interval table.
-    bounds = (
+    return (
         sess.groupBy("user_id", "session_id")
         .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
         .localCheckpoint()
     )
+
+
+def _max_concurrency(bounds: DataFrame) -> DataFrame:
+    """(day, carry_in, max_concurrency) of the session ``bounds``: the
+    day-partitioned sweep of sessions_max_concurrency."""
     starts = bounds.select(
         "user_id", "session_id", F.col("s_start").alias("t"), F.lit(1).alias("delta")
     )
@@ -6081,23 +6092,17 @@ def events_littles_law_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions_max_concurrency into the one-row summary an SRE actually
     reads (the eval-harness pattern applied to systems analytics).
 
-    Scale: session bounds are the user-keyed sessionization shuffle;
-    the report aggregates are scalars; the peak reuses the day-
-    partitioned sweep (never a global single-partition sort)."""
-    sess = _sessionize(load(spark, sf_dir, "events"))
-    bounds = (
-        sess.groupBy("user_id", "session_id")
-        .agg(F.min("ts").alias("s_start"), F.max("ts").alias("s_end"))
-    )
+    Scale: one user-keyed sessionization shuffle, whose checkpointed
+    session bounds feed both the scalar report aggregates and the peak's
+    day-partitioned sweep (never a global single-partition sort)."""
+    bounds = _session_bounds(spark, sf_dir)
     dur = F.round(epoch("s_end") - epoch("s_start"), 3)
     obs = bounds.agg(
         F.count(F.lit(1)).alias("n_sessions"),
         F.sum(dur.cast("decimal(28,3)")).cast("double").alias("total_dur"),
         (epoch(F.max("s_end")) - epoch(F.min("s_start"))).alias("t_window"),
     )
-    peak = sessions_max_concurrency(spark, sf_dir).agg(
-        F.max("max_concurrency").alias("peak")
-    )
+    peak = _max_concurrency(bounds).agg(F.max("max_concurrency").alias("peak"))
     return obs.crossJoin(F.broadcast(peak)).select(
         F.col("n_sessions").cast("bigint").alias("n_sessions"),
         F.round(F.col("n_sessions") / (F.col("t_window") / 3600.0), 6).alias(

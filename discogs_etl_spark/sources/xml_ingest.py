@@ -10,7 +10,7 @@ typed records straight into the static schemas of
 The kernel re-implements the reference's record semantics from scratch
 (element→record coercions of reference parser.py:30-169; streaming repair
 of process.py:22-45 and 221-238; cleaning of utils.py:7-58) on top of
-stdlib ``xml.etree`` (lxml is used if importable).  Pinned behaviors, each
+stdlib ``xml.etree``.  Pinned behaviors, each
 covered by tests/test_xml_ingest.py:
 
 - numeric defaults: missing → 0 for artist/label/release ids, master
@@ -40,17 +40,9 @@ from __future__ import annotations
 
 import io
 import re
+import xml.etree.ElementTree as ET
 import zlib
 from collections.abc import Iterator
-
-try:  # pragma: no cover - lxml is optional; stdlib ET is the default here
-    from lxml import etree as ET
-
-    _HAVE_LXML = True
-except ImportError:  # pragma: no cover
-    import xml.etree.ElementTree as ET
-
-    _HAVE_LXML = False
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -63,13 +55,6 @@ from discogs_etl_spark.transforms.cleaning import (
 )
 
 GZIP_MAGIC = b"\x1f\x8b"
-
-# backend-specific incomplete-document errors (stdlib vs lxml)
-_PARSE_ERRORS = tuple(
-    e
-    for e in (getattr(ET, "ParseError", None), getattr(ET, "XMLSyntaxError", None))
-    if e is not None
-)
 
 
 def detect_data_type(url: str) -> str:
@@ -415,7 +400,7 @@ def iter_records_stream(
     parser = ET.XMLPullParser(events=("start", "end"))
     # Only emit item elements that sit directly under the root: the
     # reference guards with lxml's elem.getparent() (process.py:272, 327);
-    # depth tracking via start events works for stdlib ET and lxml alike —
+    # depth tracking via start events does the same without parent links —
     # this is what keeps <sublabels><label> from masquerading as a label
     # record.
     depth = 0
@@ -430,7 +415,7 @@ def iter_records_stream(
         nonlocal depth, root, broken
         try:
             events = parser.read_events()
-        except _PARSE_ERRORS:
+        except ET.ParseError:
             broken = True
             return
         while True:
@@ -438,7 +423,7 @@ def iter_records_stream(
                 event, elem = next(events)
             except StopIteration:
                 return
-            except _PARSE_ERRORS:
+            except ET.ParseError:
                 broken = True
                 return
             if event == "start":
@@ -461,7 +446,7 @@ def iter_records_stream(
     for text in _iter_repaired_text(stream, data_type, chunk_bytes):
         try:
             parser.feed(text)
-        except _PARSE_ERRORS:
+        except ET.ParseError:
             broken = True
         yield from _drain()
         if broken:
@@ -473,7 +458,7 @@ def iter_records_stream(
             return
     try:
         parser.close()
-    except _PARSE_ERRORS:
+    except ET.ParseError:
         # Truncated input (e.g. a cut-short gzip stream, reference
         # process.py:47-64 leniency): EOF before the document closed.
         # Records that completed before the cut were already yielded.

@@ -13,8 +13,8 @@ Semantics pinned (and unit-tested against golden fixtures):
   acknowledged at utils.py:27).  We keep that behavior on the streaming
   parse path only, matching the reference's split personality (the label
   path uses ``clean_xml_content`` alone; SURVEY.md §4.3), and document it.
-- ``fix_xml_structure``: drop stray ``<document>``/``<documents>`` wrapper
-  tags found in dirty pre-2010 dumps (reference process.py:221-238,
+- ``fix_xml_structure_text``: drop stray ``<document>``/``<documents>``
+  wrapper tags found in dirty pre-2010 dumps (reference process.py:221-238,
   process.py:22-45).
 """
 
@@ -28,7 +28,6 @@ _INVALID_XML_RE = re.compile(
     "[^\x09\x0a\x0d\x20-퟿-�\U00010000-\U0010ffff]"
 )
 _WS_RUN_RE = re.compile(r"\s+")
-_WRAPPER_TAG_RE = re.compile(rb"</?documents?>")
 _WRAPPER_TAG_TEXT_RE = re.compile(r"</?documents?>")
 # A bare '&' (not starting a valid entity/char reference) is the most
 # common well-formedness error in dirty dumps ("AT&T" in a profile);
@@ -55,13 +54,9 @@ def collapse_whitespace(text: str) -> str:
     return _WS_RUN_RE.sub(" ", text)
 
 
-def fix_xml_structure(data: bytes) -> bytes:
+def fix_xml_structure_text(text: str) -> str:
     """Remove stray <document>/<documents> wrapper tags
     (process.py:221-238)."""
-    return _WRAPPER_TAG_RE.sub(b"", data)
-
-
-def fix_xml_structure_text(text: str) -> str:
     return _WRAPPER_TAG_TEXT_RE.sub("", text)
 
 

@@ -37,8 +37,8 @@ The pins cover a chosen set; the rest of the registry is covered by the
 nested-loop audit (``ALLOWED`` + ``nested_loop_counts`` below), which
 tests/test_oracle.py runs on every query it builds, and by the
 work-growth gate (``measure_work`` + ``WORK_ALLOWED`` below), which
-tests/test_work_growth.py runs on every query at sf0.01 and at a 10x
-smaller fixture.
+tests/test_work_growth.py runs on every query at sf0.01 (reading the
+oracle comparison's measured collect) and at a 10x smaller fixture.
 
 The fingerprint is taken at a FIXED condition (sf dir + the tuned test
 session: local[8], shuffle.partitions=8, AQE on) — AQE's runtime
@@ -437,9 +437,10 @@ def nested_loop_counts(df) -> tuple[int, int]:
 #       comparisons.
 #
 # W is an exact, machine-independent count (no noise, nothing to commit,
-# nothing to re-measure on a slow host).  tests/test_work_growth.py takes
-# it for every registered query at sf0.01 (hi) and at a fixture whose every
-# scaling table is exactly GROWTH times smaller (lo, ``build_lo_fixture``),
+# nothing to re-measure on a slow host).  The suite takes it for every
+# registered query at sf0.01 (hi: the one collect tests/test_oracle.py
+# compares with the oracle) and at a fixture whose every scaling table
+# is exactly GROWTH times smaller (lo, ``build_lo_fixture``),
 # so the growth exponent is alpha = log_GROWTH(W_hi / W_lo): ~0 for a
 # fixed-size input, ~1 linear, ~2 quadratic.  alpha > ALPHA_FLAG fails
 # the query's own test unless WORK_ALLOWED lists it, and an allowance

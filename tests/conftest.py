@@ -29,6 +29,9 @@ def load_script(name: str):
     return mod
 
 
+_PF = load_script("plan_fingerprint")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from discogs_etl_spark.session import get_spark
@@ -37,6 +40,32 @@ def spark():
     spark = get_spark(app_name="discogs-etl-spark-tests", master="local[8]", shuffle_partitions=8)
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def w_hi():
+    """Query name -> W at SF_ORACLE (plan_fingerprint.measure_work),
+    filled by ``measured_collect``: the work gate's hi side, taken from
+    the oracle comparison's run, so the gate adds no sf0.01 collect."""
+    return {}
+
+
+def measured_collect(spark, w_hi, name):
+    """``(df, rows)`` of query ``name`` built and collected once at
+    SF_ORACLE inside ``measure_work`` (memos and cache emptied, AQE
+    off), its W stored in ``w_hi`` before the caller asserts anything.
+    The one sf0.01 run of a query that both tests/test_oracle.py's
+    comparison and tests/test_work_growth.py's gate read."""
+    from discogs_etl_spark.registry import all_specs
+
+    fn = all_specs()[name].fn
+
+    def run():
+        df = fn(spark, SF_ORACLE)
+        return df, [tuple(r) for r in df.collect()]
+
+    w_hi[name], (df, rows) = _PF.measure_work(spark, run)
+    return df, rows
 
 
 @pytest.fixture(scope="session")

@@ -6,10 +6,21 @@ order-insensitive canonical value multiset (the moral equivalent of the
 driver's value hash).  Exact equality — no tolerances — because the query
 builders are written to be bit-deterministic (see registry.py).
 
-The same built DataFrame also feeds the registry-wide nested-loop audit
-(scripts/plan_fingerprint.py: ALLOWED, nested_loop_counts), so every
-registered query's static plan is checked on every run, at no extra
-build cost.
+Each query is built and collected ONCE at sf0.01, inside the work gate's
+``measure_work`` (tests/conftest.py::measured_collect: session memos and
+cache emptied, adaptive execution off).  That one collect gives both the
+rows compared here and the gate's W at sf0.01, which
+tests/test_work_growth.py reads.  The same built DataFrame feeds the
+registry-wide nested-loop audit (scripts/plan_fingerprint.py: ALLOWED,
+nested_loop_counts) through a fresh plan under the session's own
+settings (AQE on), so every registered query's static plan is checked
+on every run, at no extra build cost.
+
+Three checks run with AQE on, as the driver runs: the replay of the
+driver's first 50 queries through scripts/oracle_check.py (values),
+tests/test_plans.py's PLAN_PINS (AQE-final plans, no values), and
+tests/test_empty_inputs.py (every query on zero-row inputs, no values).
+A memo hit is checked against its miss by ``test_memo_hit_matches_miss``.
 """
 
 from __future__ import annotations
@@ -22,7 +33,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from discogs_etl_spark.registry import all_specs
-from tests.conftest import REPO, SF_ORACLE, SF_SMOKE, load_script
+from tests.conftest import REPO, SF_ORACLE, SF_SMOKE, load_script, measured_collect
 
 _PF = load_script("plan_fingerprint")
 
@@ -119,18 +130,19 @@ def test_nested_loop_audit_is_exact(spark):
 
 
 ORACLE_SPECS = {n: s for n, s in all_specs().items() if s.oracle is not None}
-ROWS_ONLY_SPECS = {n: s for n, s in all_specs().items() if s.oracle is None}
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SPECS))
-def test_query_matches_oracle(spark, duck, name):
-    spec = ORACLE_SPECS[name]
-    sdf = spec.fn(spark, SF_ORACLE)
-    assert_nested_loops_audited(name, sdf)
+def test_query_matches_oracle(spark, duck, w_hi, name):
+    sdf, srows = measured_collect(spark, w_hi, name)
+    # A fresh plan of the built frame, so the audit reads the static plan
+    # the session's own settings choose (AQE on), not the AQE-off one the
+    # measured collect ran: with AQE off, stats_psi_value_drift's two
+    # compared sides share one reused subtree and plan one loop, not two.
+    assert_nested_loops_audited(name, sdf.select("*"))
     scols = sdf.columns
-    srows = [tuple(r) for r in sdf.collect()]
 
-    res = duck.execute(spec.oracle)
+    res = duck.execute(ORACLE_SPECS[name].oracle)
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
 
@@ -145,13 +157,35 @@ def test_query_matches_oracle(spark, duck, name):
     )
 
 
-@pytest.mark.parametrize("name", sorted(ROWS_ONLY_SPECS))
-def test_rows_only_query_runs(spark, name):
-    spec = ROWS_ONLY_SPECS[name]
-    df = spec.fn(spark, SF_ORACLE)
-    assert_nested_loops_audited(name, df)
-    assert df.count() >= 0
-    assert len(df.columns) > 0
+# One consumer per session_memo family: the pair graph, the postings and
+# the co-order edges.
+@pytest.mark.parametrize(
+    "name", ["dedup_connected_components", "text_search_inverted_topk", "graph_pagerank_coorder"]
+)
+def test_memo_hit_matches_miss(spark, name):
+    """The measured oracle run empties the session memos before every
+    query, so it compares only memo misses with the oracles.  A memo hit
+    must return the rows of the miss that built the memo."""
+    from discogs_etl_spark.queries._util import _SESSION_MEMOS, clear_session_memos
+
+    fn = ORACLE_SPECS[name].fn
+
+    def memos():
+        return [df for cache in _SESSION_MEMOS for df in cache.values()]
+
+    def rows(df):
+        return canon_rows(df.columns, [tuple(r) for r in df.collect()])
+
+    clear_session_memos()
+    assert memos() == []
+    miss = rows(fn(spark, SF_SMOKE))
+    built = memos()
+    assert built, f"{name}: the first build memoized nothing"
+    hit = rows(fn(spark, SF_SMOKE))
+    assert list(map(id, memos())) == list(map(id, built)), (
+        f"{name}: the second build did not read the memo"
+    )
+    assert hit == miss
 
 
 def test_entry_smoke(spark):
@@ -185,15 +219,19 @@ def test_oracle_schema_driver_hash_safe(duck, name):
 
 
 def test_oracle_check_replays_a_query():
-    """scripts/oracle_check.py end to end.  It builds and stops its own
-    plain session, so it runs in a subprocess, not in the suite's."""
+    """scripts/oracle_check.py end to end on the driver's own check: the
+    first 50 registered queries at sf0.01 in a plain session, so with
+    AQE on — the suite's value check of the driver's setting, which the
+    measured AQE-off collect above does not run.  The script builds and
+    stops its own session, so it runs in a subprocess."""
+    names = list(all_specs())[:50]
     out = subprocess.run(
-        [sys.executable, "scripts/oracle_check.py", "--sf-dirs", SF_SMOKE, "q1_pricing_summary"],
+        [sys.executable, "scripts/oracle_check.py", "--sf-dirs", SF_ORACLE, *names],
         cwd=REPO,
         capture_output=True,
         text=True,
-        timeout=600,
+        timeout=1200,
     )
-    assert out.returncode == 0, out.stdout + out.stderr
+    assert out.returncode == 0, out.stdout + out.stderr[-5000:]
     ok = [line.split()[:3] for line in out.stdout.splitlines() if line.startswith("OK")]
-    assert ok == [["OK", "sf0.001", "q1_pricing_summary"]], out.stdout
+    assert ok == [["OK", "sf0.01", n] for n in names], out.stdout

@@ -110,6 +110,8 @@ class _RangeHandler:
         state = {"fail_next": flaky_first}
 
         class H(http.server.BaseHTTPRequestHandler):
+            ranges: list[str] = []  # every Range header received
+
             def log_message(self, *a):  # silence
                 pass
 
@@ -127,6 +129,7 @@ class _RangeHandler:
                     self.end_headers()
                     self.wfile.write(payload)
                     return
+                H.ranges.append(rng)
                 if state["fail_next"]:
                     state["fail_next"] = False
                     self.send_response(503)
@@ -157,25 +160,32 @@ def test_ranged_download_parallel_assembly(tmp_path):
     """Ranged-parallel landing (reference io.py:153-382): the file is
     fetched as multiple byte ranges, written at offsets, and the
     assembled bytes hash identically to the source — including a retried
-    503 on one range (exp-backoff path)."""
+    503 on one range (exp-backoff path).  ``land_dumps`` takes the same
+    path for a range-capable server and a payload above one default
+    (8 MiB) chunk."""
     import hashlib as _hl
     import random
 
     from discogs_etl_spark.pipeline import ranged_download
 
-    rnd = random.Random(42)
-    payload = bytes(rnd.getrandbits(8) for _ in range(5 * (1 << 20) + 12345))
-    srv = _serve(_RangeHandler(payload, flaky_first=True))
+    payload = random.Random(42).randbytes((8 << 20) + 12345)
+    handler = _RangeHandler(payload, flaky_first=True)
+    srv = _serve(handler)
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}/discogs_20190301_releases.xml.gz"
         dest = str(tmp_path / "dump.bin")
-        # chunk_size floor is 1 MB → 6 ranges over this payload
+        # chunk_size floor is 1 MB → 9 ranges over this payload
         landed = ranged_download(url, dest, chunk_size=1 << 20, max_workers=3)
         assert landed.n_bytes == len(payload)
         assert landed.sha256 == _hl.sha256(payload).hexdigest()
         with open(dest, "rb") as f:
             assert f.read() == payload
         assert not list(tmp_path.glob("*.part"))
+
+        handler.ranges.clear()
+        (landed,) = land_dumps([url], str(tmp_path / "landing"))
+        assert landed.sha256 == _hl.sha256(payload).hexdigest()
+        assert sorted(handler.ranges) == ["bytes=0-8388607", f"bytes=8388608-{len(payload) - 1}"]
     finally:
         srv.shutdown()
 

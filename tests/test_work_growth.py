@@ -3,11 +3,13 @@ execution_work, assert_work_growth, build_lo_fixture).
 
 ``test_work_growth[<name>]`` grades every registered query: its work at
 sf0.01 against its work at a fixture 10x smaller in every scaling table.
-Both sides are measured here, apart from tests/test_oracle.py's value
-checks, which run in the suite's ordinary session (memos shared, AQE
-on).  The other tests prove the gate sees what it exists to see.  Each
-synthetic query is measured at n and GROWTH·n rows, the gate's own 10x
-step:
+The sf0.01 side is the one measured collect tests/test_oracle.py
+compares with the oracle (tests/conftest.py::measured_collect, stored in
+the session's ``w_hi`` map); this file measures it with the same helper
+only when that test has not run in the session (the file alone, ``-k``).
+The lo side is measured here.  The other tests prove the gate sees what
+it exists to see.  Each synthetic query is measured at n and GROWTH·n
+rows, the gate's own 10x step:
 
 * the three data-driven blowups with innocent plans — an equi-join over
   a fixed bucket space, an explode whose fan-out scales, a hot key that
@@ -32,26 +34,22 @@ from pyspark.sql import functions as F
 
 from discogs_etl_spark.registry import all_specs
 from discogs_etl_spark.tables import TABLE_NAMES
-from tests.conftest import SF_ORACLE, load_script
+from tests.conftest import SF_ORACLE, load_script, measured_collect
 
 _PF = load_script("plan_fingerprint")
 SPECS = all_specs()
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
-def test_work_growth(spark, sf_lo, name):
+def test_work_growth(spark, sf_lo, w_hi, name):
     """Every registered query's work grows at most ALPHA_FLAG-fast over
     the 10x data step, unless WORK_ALLOWED lists it (and then it must
     still flag); a reading within ALPHA_MARGIN of the flag is not
-    judged.  The action is the one the oracle suite runs."""
-    spec = SPECS[name]
-
-    def work(sf_dir):
-        df = spec.fn(spark, sf_dir)
-        return df.collect() if spec.oracle is not None else df.count()
-
-    w_lo, w_hi = (_PF.measure_work(spark, lambda d=d: work(d))[0] for d in (sf_lo, SF_ORACLE))
-    _PF.assert_work_growth(name, w_lo, w_hi)
+    judged.  The action is the oracle comparison's collect."""
+    if name not in w_hi:
+        measured_collect(spark, w_hi, name)
+    w_lo = _PF.measure_work(spark, lambda: SPECS[name].fn(spark, sf_lo).collect())[0]
+    _PF.assert_work_growth(name, w_lo, w_hi[name])
 
 
 def _growth(spark, build, n):
