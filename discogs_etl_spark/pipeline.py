@@ -30,12 +30,24 @@ from discogs_etl_spark.session import local_frame
 from discogs_etl_spark.sources.manifest import catalog_entries, checksum_map, latest_dumps
 
 
+# ranged_download: the byte-range size (the reference splits into >= 1 MB
+# ranges, io.py:219-236), the ranged GETs in flight, the tries per range
+# (reference io.py:277-310: 5 attempts, doubling delay) and the socket
+# timeout of every request — HEAD probe, ranged GET and sequential GET.
+CHUNK_SIZE = 8 << 20
+MAX_WORKERS = 4
+MAX_RETRIES = 5
+TIMEOUT_S = 300.0
+# backfill: dumps ingested at once, one thread each.
+MAX_CONCURRENT_DUMPS = 4
+
+
 @dataclass(frozen=True)
 class DumpResult:
     filename: str
     data_type: str
     lake_path: str
-    sha256: str | None
+    sha256: str
     checksum_ok: bool | None  # None → no expected checksum known
 
 
@@ -55,7 +67,7 @@ class LandedDump:
     n_bytes: int
 
 
-def _probe_range_support(url: str, timeout: float) -> int | None:
+def _probe_range_support(url: str) -> int | None:
     """HEAD the URL; return the content length iff the server advertises
     byte-range support (reference io.py:204-217 sizes the download the
     same way before splitting).  ``None`` → fall back to sequential."""
@@ -63,7 +75,7 @@ def _probe_range_support(url: str, timeout: float) -> int | None:
 
     req = Request(url, method="HEAD")  # noqa: S310 (caller-supplied URL)
     try:
-        with urlopen(req, timeout=timeout) as r:  # noqa: S310
+        with urlopen(req, timeout=TIMEOUT_S) as r:  # noqa: S310
             if r.headers.get("Accept-Ranges", "").lower() != "bytes":
                 return None
             length = r.headers.get("Content-Length")
@@ -72,22 +84,19 @@ def _probe_range_support(url: str, timeout: float) -> int | None:
         return None
 
 
-def _fetch_range(
-    url: str, start: int, end: int, timeout: float, max_retries: int
-) -> bytes:
-    """One ranged GET with exponential-backoff retries (reference
-    io.py:277-310: 5 attempts, doubling delay).  ``end`` is inclusive,
-    per RFC 9110 byte-range semantics."""
+def _fetch_range(url: str, start: int, end: int) -> bytes:
+    """One ranged GET with exponential-backoff retries (MAX_RETRIES
+    tries).  ``end`` is inclusive, per RFC 9110 byte-range semantics."""
     import time as _time
     from urllib.request import Request, urlopen
 
     last_err: Exception | None = None
-    for attempt in range(max_retries):
+    for attempt in range(MAX_RETRIES):
         if attempt:  # back off BEFORE retries 2..N, never after the last
             _time.sleep(min(2 ** (attempt - 1) * 0.1, 5.0))
         try:
             req = Request(url, headers={"Range": f"bytes={start}-{end}"})  # noqa: S310
-            with urlopen(req, timeout=timeout) as r:  # noqa: S310
+            with urlopen(req, timeout=TIMEOUT_S) as r:  # noqa: S310
                 data = r.read()
             if len(data) != end - start + 1:
                 raise OSError(
@@ -97,19 +106,12 @@ def _fetch_range(
             return data
         except OSError as e:  # includes HTTPError/URLError/timeouts
             last_err = e
-    raise OSError(f"range {start}-{end} failed after {max_retries} tries") from last_err
+    raise OSError(f"range {start}-{end} failed after {MAX_RETRIES} tries") from last_err
 
 
-def ranged_download(
-    url: str,
-    dest: str,
-    chunk_size: int = 8 << 20,
-    max_workers: int = 4,
-    max_retries: int = 5,
-    timeout: float = 300.0,
-) -> LandedDump:
+def ranged_download(url: str, dest: str) -> LandedDump:
     """Parallel ranged-GET download (reference io.py:153-382
-    OptimizedDownloader: HEAD for size → split into ≥1 MB ranges →
+    OptimizedDownloader: HEAD for size → split into CHUNK_SIZE ranges →
     bounded-concurrency ranged GETs with retries → assemble; sha256 over
     the assembled bytes).  Servers without byte-range support fall back
     to the sequential streamed path automatically.
@@ -125,13 +127,12 @@ def ranged_download(
     at their own offsets (no per-range temp files, unlike the reference's
     concat step), then atomically renamed; a crash never leaves a
     half-visible dump."""
-    total = _probe_range_support(url, timeout)
-    if total is None or total <= chunk_size:
+    total = _probe_range_support(url)
+    if total is None or total <= CHUNK_SIZE:
         return _sequential_download(url, dest)
-    chunk_size = max(chunk_size, 1 << 20)  # ≥1 MB ranges (io.py:219-236)
     ranges = [
-        (start, min(start + chunk_size, total) - 1)
-        for start in range(0, total, chunk_size)
+        (start, min(start + CHUNK_SIZE, total) - 1)
+        for start in range(0, total, CHUNK_SIZE)
     ]
     tmp = dest + ".part"
     with open(tmp, "wb") as f:
@@ -140,12 +141,12 @@ def ranged_download(
     with open(tmp, "r+b") as f:
 
         def fetch_and_write(r: tuple[int, int]) -> None:
-            data = _fetch_range(url, r[0], r[1], timeout, max_retries)
+            data = _fetch_range(url, r[0], r[1])
             with lock:
                 f.seek(r[0])
                 f.write(data)
 
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=MAX_WORKERS) as pool:
             # list() propagates the first worker exception
             list(pool.map(fetch_and_write, ranges))
     sha = _sha256_file(tmp)
@@ -155,12 +156,13 @@ def ranged_download(
 
 def _sequential_download(url: str, dest: str) -> LandedDump:
     """Single-stream GET with inline sha256 (reference process.py:95-173),
-    atomic rename on completion."""
+    atomic rename on completion.  A server that stops answering raises
+    after TIMEOUT_S, as a ranged GET does."""
     from urllib.request import urlopen
 
     h = hashlib.sha256()
     tmp = dest + ".part"
-    with urlopen(url) as r, open(tmp, "wb") as f:  # noqa: S310 (caller-supplied URL)
+    with urlopen(url, timeout=TIMEOUT_S) as r, open(tmp, "wb") as f:  # noqa: S310
         while chunk := r.read(1 << 20):
             f.write(chunk)
             h.update(chunk)
@@ -205,20 +207,11 @@ def backfill_from_urls(
     landing_dir: str,
     lake_root: str,
     checksums: DataFrame | None = None,
-    max_concurrent_dumps: int = 4,
-    verify_checksums: bool = True,
 ) -> list[DumpResult]:
     """The reference's one-command story (run.py:20-41): URLs → landing
     dir → parse → partitioned lake, checksum audit included."""
     landed = land_dumps(urls, landing_dir)
-    return backfill(
-        spark,
-        [d.path for d in landed],
-        lake_root,
-        checksums=checksums,
-        max_concurrent_dumps=max_concurrent_dumps,
-        verify_checksums=verify_checksums,
-    )
+    return backfill(spark, [d.path for d in landed], lake_root, checksums=checksums)
 
 
 def backfill(
@@ -226,8 +219,6 @@ def backfill(
     dump_paths: list[str],
     lake_root: str,
     checksums: DataFrame | None = None,
-    max_concurrent_dumps: int = 4,
-    verify_checksums: bool = True,
 ) -> list[DumpResult]:
     """Process a set of local/landed dump files into the partitioned lake.
 
@@ -245,15 +236,13 @@ def backfill(
 
     def run_one(entry) -> DumpResult:
         path = path_by_name[entry.filename]
-        sha = ok = None
-        if verify_checksums:
-            sha = _sha256_file(path)
-            exp = expected.get(entry.filename)
-            ok = (sha.lower() == exp.lower()) if exp else None
+        sha = _sha256_file(path)
+        exp = expected.get(entry.filename)
+        ok = (sha.lower() == exp.lower()) if exp else None
         lake_path = ingest_dump_to_lake(spark, path, lake_root)
         return DumpResult(entry.filename, entry.data_type, lake_path, sha, ok)
 
-    with ThreadPoolExecutor(max_workers=max_concurrent_dumps) as pool:
+    with ThreadPoolExecutor(max_workers=MAX_CONCURRENT_DUMPS) as pool:
         return list(pool.map(run_one, latest_dumps(catalog_entries(dump_paths))))
 
 

@@ -371,7 +371,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg((F.sum(revenue_fp).cast("double") / 1e4).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
@@ -481,13 +481,13 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .join(
-            F.broadcast(supp),
+            supp,
             (li.l_suppkey == supp.s_suppkey) & (cust.c_nationkey == supp.s_nationkey),
         )
-        .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+        .join(nation, supp.s_nationkey == nation.n_nationkey)
+        .join(region, nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg((F.sum(revenue_fp).cast("double") / 1e4).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("n_name"))
@@ -508,12 +508,14 @@ def q5_regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def join_broadcast_part_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact⋈dimension with an explicit broadcast hint (§2.4): no shuffle of
-    the fact table at all — the classic 100 TB pattern."""
+    """Fact⋈dimension equi-join (§2.4), no hint: the session's broadcast
+    threshold ships ``part`` at fixture size, so the fact table never
+    shuffles, and falls back to a sort-merge join once ``part`` outgrows
+    it (20M rows at TPC-H SF100)."""
     li = load(spark, sf_dir, "lineitem")
     part = load(spark, sf_dir, "part")
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("p_brand")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum("l_quantity").alias("sum_qty"))
     )
@@ -1865,10 +1867,10 @@ def q7_nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(n1), supp.s_nationkey == F.col("s_nk"))
-        .join(F.broadcast(n2), cust.c_nationkey == F.col("c_nk"))
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(n1, supp.s_nationkey == F.col("s_nk"))
+        .join(n2, cust.c_nationkey == F.col("c_nk"))
         .where(F.col("supp_nation") < F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg((F.sum(rev_fp).cast("double") / 1e4).alias("revenue"))
@@ -1930,7 +1932,7 @@ def q14_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     promo = F.when(F.col("p_type").like("PROMO%"), rev_fp).otherwise(0)
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.round(
                 F.lit(100.0)
@@ -1964,7 +1966,7 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     join)."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
-    j = li.join(F.broadcast(p), p.p_partkey == li.l_partkey)
+    j = li.join(p, p.p_partkey == li.l_partkey)
     q = F.col("l_quantity")
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15) & q.between(1, 20))
@@ -2205,12 +2207,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     vol_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     flat = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(cn), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(reg), F.col("cn_region") == reg.r_regionkey)
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(sn), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(cn, F.col("c_nationkey") == F.col("cn_key"))
+        .join(reg, F.col("cn_region") == reg.r_regionkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(sn, F.col("s_nationkey") == F.col("sn_key"))
+        .join(part, li.l_partkey == part.p_partkey)
     )
     num = F.sum(F.when(F.col("supp_nation") == "NATION_3", vol_fp).otherwise(F.lit(0)))
     den = F.sum(vol_fp)
@@ -2259,8 +2261,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev_fp = fixed("l_extendedprice", 2) * (F.lit(100) - fixed("l_discount", 2))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
+        .join(nat, cust.c_nationkey == nat.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg((F.sum(rev_fp).cast("double") / 1e4).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
@@ -2348,7 +2350,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load(spark, sf_dir, "supplier")
     return (
         supp.join(revenue, supp.s_suppkey == revenue.supplier_no)
-        .join(F.broadcast(best), F.col("total_revenue") == F.col("best_rev"))
+        .join(best, F.col("total_revenue") == F.col("best_rev"))
         .select("s_suppkey", "s_name", "total_revenue")
         .orderBy("s_suppkey")
     )
@@ -2432,7 +2434,7 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         F.broadcast(big)
         .join(orders, orders.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
+        .join(cust, orders.o_custkey == cust.c_custkey)
         .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty")
         .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
         .limit(20)
@@ -2494,7 +2496,7 @@ def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         flat.join(per_order, "l_orderkey")
         .where((F.col("late") == 1) & (F.col("n_supps") > 1) & (F.col("n_late") == 1))
-        .join(F.broadcast(supp), F.col("l_suppkey") == supp.s_suppkey)
+        .join(supp, F.col("l_suppkey") == supp.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
         .orderBy(F.desc("numwait"), F.asc("s_name"))
@@ -2547,7 +2549,7 @@ def q22_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.join(F.broadcast(thr))
         .where(F.col("c_acctbal") > F.col("threshold"))
         .join(
-            F.broadcast(big_orders.select("o_custkey").distinct()),
+            big_orders.select("o_custkey").distinct(),
             cust.c_custkey == F.col("o_custkey"),
             "left_anti",
         )
@@ -2636,9 +2638,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load(spark, sf_dir, "nation")
     reg = load(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
     eligible = (
-        ps.join(F.broadcast(supp), ps.ps_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
+        ps.join(supp, ps.ps_suppkey == supp.s_suppkey)
+        .join(nat, supp.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
         .select("ps_partkey", "ps_supplycost_c", "s_acctbal", "s_name", "n_name")
     )
     part = load(spark, sf_dir, "part").where(
@@ -2646,7 +2648,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("ps_partkey")
     return (
-        eligible.join(F.broadcast(part), eligible.ps_partkey == part.p_partkey)
+        eligible.join(part, eligible.ps_partkey == part.p_partkey)
         .withColumn("min_cost_c", F.min("ps_supplycost_c").over(w))
         .where(F.col("ps_supplycost_c") == F.col("min_cost_c"))
         .select(
@@ -2704,10 +2706,10 @@ def q9_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ps_supplycost_c"
     ) * fixed("l_quantity", 2)
     return (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+        li.join(part, li.l_partkey == part.p_partkey)
         .join(ps, (li.l_partkey == ps.ps_partkey) & (li.l_suppkey == ps.ps_suppkey))
-        .join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
+        .join(supp, li.l_suppkey == supp.s_suppkey)
+        .join(nat, supp.s_nationkey == nat.n_nationkey)
         .join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -2752,8 +2754,8 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load(spark, sf_dir, "supplier")
     nat = load(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_3")
     natps = (
-        ps.join(F.broadcast(supp), ps.ps_suppkey == supp.s_suppkey)
-        .join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
+        ps.join(supp, ps.ps_suppkey == supp.s_suppkey)
+        .join(nat, supp.s_nationkey == nat.n_nationkey)
         .select(
             "ps_partkey",
             (F.col("ps_supplycost_c") * F.col("ps_availqty_f2")).alias("value_f4"),
@@ -2810,11 +2812,11 @@ def q16_parts_supplier_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         ps.join(
-            F.broadcast(bad_supp.select("s_suppkey")),
+            bad_supp.select("s_suppkey"),
             ps.ps_suppkey == F.col("s_suppkey"),
             "left_anti",
         )
-        .join(F.broadcast(part), ps.ps_partkey == part.p_partkey)
+        .join(part, ps.ps_partkey == part.p_partkey)
         .groupBy("p_brand", "p_type", "p_size")
         .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
         .orderBy(F.desc("supplier_cnt"), "p_brand", "p_type", "p_size")
@@ -2877,7 +2879,7 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     small_parts = load(spark, sf_dir, "part").where(F.col("p_name").like("small%"))
     qualifying = (
         ps.join(
-            F.broadcast(small_parts.select("p_partkey")),
+            small_parts.select("p_partkey"),
             ps.ps_partkey == F.col("p_partkey"),
             "left_semi",
         )
@@ -2892,10 +2894,10 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = load(spark, sf_dir, "nation")
     reg = load(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
     return (
-        supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
+        supp.join(nat, supp.s_nationkey == nat.n_nationkey)
+        .join(reg, nat.n_regionkey == reg.r_regionkey)
         .join(
-            F.broadcast(qualifying),
+            qualifying,
             supp.s_suppkey == F.col("ps_suppkey"),
             "left_semi",
         )
@@ -2944,7 +2946,7 @@ def funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = (
         ev.where(F.col("event_type") == "click")
-        .join(F.broadcast(v), "user_id")
+        .join(v, "user_id")
         .where(F.col("ts") > F.col("t_view"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t_click"))
@@ -3782,7 +3784,7 @@ def join_null_safe_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("label"),
     )
     return (
-        a.join(F.broadcast(b), a["k"].eqNullSafe(b["bk"]))
+        a.join(b, a["k"].eqNullSafe(b["bk"]))
         .select("o_orderkey", "label")
     )
 
@@ -4645,8 +4647,8 @@ def growth_mom_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     monthly = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        o.join(c, o.o_custkey == c.c_custkey)
+        .join(n, F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy(
             "n_name", F.date_trunc("month", "o_orderdate").cast("date").alias("month")
         )
@@ -5153,7 +5155,7 @@ def window_rolling_percentile_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = e.select("d").distinct()
     fan = e.select(
         F.explode(F.sequence("d", F.date_add("d", 6))).alias("wd"), "value"
-    ).join(F.broadcast(grid.select(F.col("d").alias("wd"))), "wd", "left_semi")
+    ).join(grid.select(F.col("d").alias("wd")), "wd", "left_semi")
     return fan.groupBy(F.col("wd").alias("day")).agg(
         F.count(F.lit(1)).alias("n_values"),
         F.round(F.expr("percentile(value, 0.95)"), 4).alias("p95_7d"),
@@ -5615,7 +5617,7 @@ def graph_link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame
     cand = (
         common.join(oriented, ["u", "v"], "left_anti")
         .join(F.broadcast(deg.select(F.col("node").alias("u"), F.col("d").alias("du"))), "u")
-        .join(F.broadcast(deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))), "v")
+        .join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
     )
     jac = F.col("cn") / (F.col("du") + F.col("dv") - F.col("cn")).cast("double")
     return (
@@ -6327,7 +6329,7 @@ def topn_with_others_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     rev = (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy("p_brand")
         .agg(
             F.sum(
@@ -6529,7 +6531,7 @@ def revenue_bridge_price_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     per = (
         li.where(F.year("l_shipdate").isin(1996, 1997))
-        .join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        .join(p, li["l_partkey"] == p["p_partkey"])
         .groupBy("p_brand", F.year("l_shipdate").cast("bigint").alias("yr"))
         .agg(
             F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("q"),
@@ -6671,8 +6673,8 @@ def allocation_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
         .groupBy("n_name")
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -6945,11 +6947,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = und.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     ed = (
         und.join(
-            F.broadcast(deg.select(F.col("node").alias("a"), F.col("d").alias("x"))),
+            deg.select(F.col("node").alias("a"), F.col("d").alias("x")),
             "a",
         )
         .join(
-            F.broadcast(deg.select(F.col("node").alias("b"), F.col("d").alias("y"))),
+            deg.select(F.col("node").alias("b"), F.col("d").alias("y")),
             "b",
         )
         .select("x", "y")
@@ -7231,7 +7233,7 @@ def parts_bundle_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "u",
         )
         .join(
-            F.broadcast(freq.select(F.col("part").alias("v"), F.col("n").alias("nv"))),
+            freq.select(F.col("part").alias("v"), F.col("n").alias("nv")),
             "v",
         )
     )
@@ -7527,7 +7529,7 @@ def features_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round("sp", 2).cast("decimal(28,2)")).cast("double").alias("tot"),
     )
     return (
-        base.join(F.broadcast(seg), "c_mktsegment")
+        base.join(seg, "c_mktsegment")
         .where(F.col("n") > 1)
         .select(
             "c_custkey",
@@ -7908,7 +7910,7 @@ def nested_agg_avg_of_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     per_cust = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy("c_nationkey", "o_custkey")
         .agg(
             F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
@@ -7917,7 +7919,7 @@ def nested_agg_avg_of_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        per_cust.join(F.broadcast(n), per_cust["c_nationkey"] == n["n_nationkey"])
+        per_cust.join(n, per_cust["c_nationkey"] == n["n_nationkey"])
         .groupBy("n_name")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
@@ -8056,8 +8058,8 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node")
     )
     club = oriented.join(
-        F.broadcast(hubs.select(F.col("node").alias("u"))), "u", "left_semi"
-    ).join(F.broadcast(hubs.select(F.col("node").alias("v"))), "v", "left_semi")
+        hubs.select(F.col("node").alias("u")), "u", "left_semi"
+    ).join(hubs.select(F.col("node").alias("v")), "v", "left_semi")
     n_club = club.count()
     return (
         load(spark, sf_dir, "lineitem")
@@ -8894,7 +8896,7 @@ def pricing_consistency_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part").where(F.col("p_retailprice") > 0).select(
         "p_partkey", "p_retailprice"
     )
-    j = l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"]).select(
+    j = l.join(p, l["l_partkey"] == p["p_partkey"]).select(
         (
             F.col("l_extendedprice")
             / (F.col("l_quantity") * F.col("p_retailprice"))

@@ -403,7 +403,7 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sha = sized.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha"))
     shb = sized.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb"))
-    pairs = cand.join(F.broadcast(sha), "doc_a").join(F.broadcast(shb), "doc_b")
+    pairs = cand.join(sha, "doc_a").join(shb, "doc_b")
     n_common = F.size(F.array_intersect("sha", "shb"))
     jacc = F.round(
         n_common.cast("double") / (F.size("sha") + F.size("shb") - n_common), 6
@@ -1119,7 +1119,7 @@ def similarity_ann_signlsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("raw_cos"), F.asc("vec_id"))
     return (
         emb.join(
-            F.broadcast(q),
+            q,
             (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != F.col("q_vec_id")),
         )
         .select("q_vec_id", "vec_id", cos.alias("raw_cos"))
@@ -1921,7 +1921,7 @@ def similarity_ivf_topk_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("raw_cos"), F.asc("vec_id"))
     return (
         assigned.join(
-            F.broadcast(q),
+            q,
             (F.col("list_id") == F.col("q_list_id"))
             & (F.col("vec_id") != F.col("q_vec_id")),
         )
@@ -2102,7 +2102,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.col("tf") * F.log(F.lit(float(n)) / F.col("df"))
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
     return (
-        tf.join(F.broadcast(df), "term")
+        tf.join(df, "term")
         .withColumn("score", score)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= 5)
@@ -2579,7 +2579,7 @@ def decontaminate_eval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         sh.where(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(eval_sh), "s")
+        .join(eval_sh, "s")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap_shingles"))
     )
@@ -2848,7 +2848,7 @@ def dedup_fuzzy_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size(F.array_distinct(_words())).cast("long").alias("n_uniq")
     )
     lab = (
-        scored.join(F.broadcast(labels), "doc_id", "left")
+        scored.join(labels, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("component_id", "doc_id").alias("component_id"),
@@ -2912,7 +2912,7 @@ def quality_gate_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY score)").alias("thr")
     )
     return (
-        scored.join(F.broadcast(thr), "lang")
+        scored.join(thr, "lang")
         .where(F.col("score") >= F.col("thr"))
         .select("doc_id", "lang", "score", "thr")
     )
@@ -3868,7 +3868,7 @@ def similarity_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("q_vec_id").orderBy(F.desc("raw_cos"), F.asc("vec_id"))
     return (
         emb.join(
-            F.broadcast(q),
+            q,
             (F.col("bucket") == F.col("pb")) & (F.col("vec_id") != F.col("q_vec_id")),
         )
         .select("q_vec_id", "vec_id", cos.alias("raw_cos"))
@@ -3941,7 +3941,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w", F.lit(1).alias("in_vocab"))
     )
     return (
-        tok.join(F.broadcast(vocab), "w", "left")
+        tok.join(vocab, "w", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -4659,7 +4659,7 @@ def embedding_dispersion_by_label(spark: SparkSession, sf_dir: str) -> DataFrame
         ).alias("c")
     )
     parts = (
-        e.join(F.broadcast(cent), ["label", "pos"])
+        e.join(cent, ["label", "pos"])
         .groupBy("vec_id", "label")
         .agg(
             F.sum(F.round(F.col("v") * F.col("c"), 12).cast("decimal(38,12)"))
@@ -5196,8 +5196,8 @@ def terms_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("da") * F.col("db").cast("double"))
     )
     return (
-        pair.join(F.broadcast(df.select(F.col("term").alias("term_a"), F.col("df").alias("da"))), "term_a")
-        .join(F.broadcast(df.select(F.col("term").alias("term_b"), F.col("df").alias("db"))), "term_b")
+        pair.join(df.select(F.col("term").alias("term_a"), F.col("df").alias("da")), "term_a")
+        .join(df.select(F.col("term").alias("term_b"), F.col("df").alias("db")), "term_b")
         .select(
             "term_a",
             "term_b",

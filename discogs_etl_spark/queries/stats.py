@@ -811,7 +811,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         dau.withColumn("week", F.date_trunc("week", "day").cast("date"))
-        .join(F.broadcast(wau), "week")
+        .join(wau, "week")
         .select(
             "day",
             "dau",
@@ -901,7 +901,7 @@ def stats_hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFr
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_type", "l_suppkey")
         .agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev_fp"))
     )
@@ -2702,7 +2702,7 @@ def price_elasticity_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     is type-cardinality rows."""
     l = load(spark, sf_dir, "lineitem").where(F.col("l_quantity") > 0)
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    pt = l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"]).select(
+    pt = l.join(p, l["l_partkey"] == p["p_partkey"]).select(
         F.col("p_type").alias("ptype"),
         F.col("l_discount").cast("double").alias("x"),
         F.round(F.log("l_quantity"), 9).alias("y"),
@@ -2921,7 +2921,7 @@ def whale_retention_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     jj = j.join(
-        F.broadcast(sizes.select(F.col("week").alias("week_b"), F.col("sz").alias("n_whales_b"))),
+        sizes.select(F.col("week").alias("week_b"), F.col("sz").alias("n_whales_b")),
         "week_b",
     )
     return jj.select(

@@ -14,6 +14,9 @@ unchanged:
 - Arrow-backed Python interop (Pandas UDFs are the only Python on the hot
   path anywhere in this engine).
 - UTC session timezone so timestamp semantics are environment-independent.
+- One join-strategy bound, the 64 MiB ``autoBroadcastJoinThreshold``:
+  equi-joins carry no broadcast hint unless
+  ``scripts/plan_fingerprint.py::EQUI_JOIN_HINTS`` lists one.
 
 ``local_frame`` is the one way the engine turns driver-side Python rows
 into a DataFrame (catalogs, audit/report rows, constant tables).
@@ -76,52 +79,61 @@ def _driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
 
 
+# Runtime-settable confs every engine session holds: get_spark sets them
+# at build time, tune_for_correctness on a plain session a caller built
+# itself, so both plan and compute alike.
+RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.adaptive.enabled": "true",
+    # Join strategy: Catalyst broadcasts a side estimated under this bound
+    # and AQE re-decides from observed sizes (Spark's default: 10 MiB).
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # InferFiltersFromGenerate clones the full generator expression into
+    # a pre-Generate filter; for expensive array builders (shingling)
+    # that doubles the CPU of every explode — measured 2x on the
+    # minhash pipeline.  The pruning it buys (skipping empty arrays
+    # before Generate) is negligible for our plans.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+    # HotSpot never JIT-compiles methods over 8000 bytecodes
+    # (-XX:-DontCompileHugeMethods is the non-default), so a
+    # whole-stage-codegen method past that limit runs in the bytecode
+    # INTERPRETER forever.  Spark's default only falls back past
+    # 65535 (the JVM hard limit); aligning the fallback with the JIT
+    # threshold makes big fused stages (the unrolled 64-dim dot
+    # products) drop back to split per-expression codegen, which JITs.
+    # Measured on the cosine pair family: the fused-but-unJITtable
+    # plan runs 7x slower than the fallback.  Value-neutral: it changes
+    # WHICH compiled form runs, never what it computes.
+    "spark.sql.codegen.hugeMethodLimit": "8000",
+}
+
+
+def _runtime_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """RUNTIME_CONFS plus the shuffle partition count: one per core
+    locally, at least 8 (Spark's 200 is pure scheduling overhead at test
+    SFs, notably for stateful streaming); a cluster should pass 2-3x its
+    total cores and let AQE coalesce."""
+    n = shuffle_partitions or max(_cpus(), 8)
+    return {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(n)}
+
+
 def get_spark(
     app_name: str = "discogs-etl-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's tuned defaults."""
-    cpus = _cpus()
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # Local mode: one shuffle partition per core is right at test SFs.
-        # Cluster deployments should pass an explicit value (2-3x total
-        # cores) and let AQE coalesce.
-        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.adaptive.enabled", "true")
+        .master(master or f"local[{_cpus()}]")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # InferFiltersFromGenerate clones the full generator expression into
-        # a pre-Generate filter; for expensive array builders (shingling)
-        # that doubles the CPU of every explode — measured 2x on the
-        # minhash pipeline.  The pruning it buys (skipping empty arrays
-        # before Generate) is negligible for our plans.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # HotSpot never JIT-compiles methods over 8000 bytecodes
-        # (-XX:-DontCompileHugeMethods is the non-default), so a
-        # whole-stage-codegen method past that limit runs in the bytecode
-        # INTERPRETER forever.  Spark's default only falls back past
-        # 65535 (the JVM hard limit); aligning the fallback with the JIT
-        # threshold makes big fused stages (the unrolled 64-dim dot
-        # products) drop back to split per-expression codegen, which JITs.
-        # Measured on the cosine pair family: the fused-but-unJITtable
-        # plan runs 7x slower than the fallback (guide §1.2 step 3 — a
-        # config that fixes a structural compilation problem).
-        .config("spark.sql.codegen.hugeMethodLimit", "8000")
         # zstd over the default snappy: ~30% smaller lake files for ~equal
         # read CPU — at 100 TB stored that's the cheaper default.
         .config("spark.sql.parquet.compression.codec", "zstd")
@@ -129,28 +141,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
+        .config(map=_runtime_confs(shuffle_partitions))
     )
     return builder.getOrCreate()
 
 
 def tune_for_correctness(spark: SparkSession) -> SparkSession:
-    """Runtime-settable knobs applied when we receive a session we did not
-    build (the verification driver constructs its own).  Only touches
-    runtime-mutable confs; timestamp determinism is the critical one."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
-    # The driver's plain session keeps the 200-partition default; at the
-    # correctness SFs that is pure scheduling overhead (notably for
-    # stateful streaming, where state partitioning follows this number).
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(_cpus(), 8)))
-    # Align the whole-stage-codegen fallback with HotSpot's 8000-bytecode
-    # JIT ceiling (see get_spark) — runtime-mutable, value-neutral: it
-    # changes WHICH compiled form runs, never what it computes.
-    spark.conf.set("spark.sql.codegen.hugeMethodLimit", "8000")
+    """Apply the engine's runtime confs to a session the engine did not
+    build (a caller's own plain session), so it plans and computes as a
+    ``get_spark`` session does."""
+    for k, v in _runtime_confs().items():
+        spark.conf.set(k, v)
     return spark
 
 

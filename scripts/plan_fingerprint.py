@@ -23,8 +23,10 @@ tests/test_plans.py checks:
   r9 lesson: Catalyst re-derives subtrees from the scan unless the
   materialization actually happened).
 * ``bhj``/``smj``/``shj`` — join strategies on named joins: a dimension
-  join that loses its broadcast (hint dropped, threshold misread)
-  flips bhj -> smj deterministically at the pinned sf/session.
+  join that loses its broadcast (a side's size estimate grown past the
+  session's broadcast threshold, the threshold misread, an
+  ``EQUI_JOIN_HINTS`` hint dropped) flips bhj -> smj deterministically
+  at the pinned sf/session.
 * ``bnlj``/``cartesian`` — always pinned, almost always to zero; the
   only nonzero pins are the deliberate broadcast-hinted crossJoins
   (kmeans centroid assignment and friends), which
@@ -167,8 +169,9 @@ def fingerprint(df, *, executed: bool = True) -> dict[str, int]:
 #                 a checkpointed iteration silently re-deriving the corpus
 #                 (pc1/pc1_gram pin ZERO parquet scans: the fold must be
 #                 physically materialized)
-#   bhj/smj/shj   a dimension join losing its broadcast (hint dropped,
-#                 threshold misread) flips bhj -> smj deterministically
+#   bhj/smj/shj   a dimension join losing its broadcast (estimate past the
+#                 threshold, threshold misread, an EQUI_JOIN_HINTS hint
+#                 dropped) flips bhj -> smj deterministically
 #   bnlj/cartesian  nonzero ONLY for the deliberate broadcast-hinted
 #                 scalar crossJoins (test_every_crossjoin_is_broadcast_hinted
 #                 proves each is hinted)
@@ -397,6 +400,82 @@ ALLOWED: dict[str, tuple[int, str]] = {
         1,
         "calendar: week x later-week pairs over the weekly whale rollup — "
         "bounded by span^2 weeks",
+    ),
+}
+
+
+# Equi-join broadcast hints.  Join strategy is the session's: Catalyst
+# broadcasts a side whose size estimate is under
+# spark.sql.autoBroadcastJoinThreshold (64 MiB, session.RUNTIME_CONFS),
+# AQE re-decides from observed sizes, and an equi-join it does not
+# broadcast falls back to a sort-merge join, which scales.  A hint
+# instead forces the broadcast whatever the size, so an equi-join keeps
+# one only where the planner's estimate misses a bound the query knows
+# and dropping the hint moves a build side or a strategy.
+# tests/test_plans.py::test_every_equi_join_hint_is_listed fails a hinted
+# equi-join in a function not listed here, a second one in a listed
+# function, and a listed function without one.  Cross, keyless and theta
+# joins are not listed: without a hint they plan as a CartesianProduct
+# (ALLOWED's audit forbids it), and test_every_crossjoin_is_broadcast_hinted
+# requires theirs.
+#
+# Without column statistics Catalyst sizes a grouped aggregate, a window
+# or a filter from its input (scaled by row width), so a side that the
+# query bounds by a small key set reads as big as the table it came from.
+# Each hint below is on such a side, and without it the plan builds the
+# other side (measured: a BHJ build-side swap in the static or executed
+# plan at sf0.001 or sf0.01).
+#
+# enclosing function -> the bound the planner's estimate lacks.
+EQUI_JOIN_HINTS: dict[str, str] = {
+    "_power_iterate": (
+        "the iterate v is 64 rows, the checkpointed covariance 4,096; the "
+        "unhinted plan builds the covariance side in all 9 matvec joins, "
+        "and its executed plan reads one checkpoint scan fewer (the "
+        "embedding_power_iteration_pc1 pins)"
+    ),
+    "q18_large_volume_customer": (
+        "the HAVING sum_qty > 250 order set is a few rows, but its estimate "
+        "scales with lineitem, so the unhinted plan builds orders"
+    ),
+    "funnel_view_click_purchase": (
+        "the click-stage user set c is one row per converting user; its "
+        "estimate carries the events scan and view join it aggregates, so "
+        "the unhinted plan builds the purchase events instead"
+    ),
+    "graph_link_prediction_jaccard": (
+        "the u-side degree lookup is one row per node; its estimate scales "
+        "with the edges, so the unhinted plan builds the candidate pairs"
+    ),
+    "parts_bundle_detection": (
+        "the u-side basket frequency is one row per part; its estimate "
+        "scales with the baskets, so the unhinted plan builds the pair table"
+    ),
+    "lang_id_corpus": (
+        "the per-language top-10 word profile is languages x 10 rows; its "
+        "estimate scales with the corpus, so the unhinted plan builds the "
+        "corpus words"
+    ),
+    "lm_next_word_accuracy": (
+        "the argmax model is one row per w1 (the vocabulary); its estimate "
+        "scales with the bigram instances, which the unhinted plan builds"
+    ),
+    "stats_mad_by_event_type": (
+        "the per-event-type median table is 5 rows; its estimate scales "
+        "with events, so the unhinted plan broadcasts events"
+    ),
+    "sketch_countmin_heavy_hitters": (
+        "the sketch is a fixed seeds x width table; its estimate scales "
+        "with the events, so the unhinted plan builds the candidates"
+    ),
+    "stats_seasonal_adjust_daily": (
+        "the day-of-week profile is 7 rows; the daily rollup it joins is "
+        "small too, and without the hint AQE's runtime re-plan builds the "
+        "daily side in most runs"
+    ),
+    "events_value_winsorize": (
+        "the per-event-type [p01, p99] bounds are 5 rows; their estimate "
+        "scales with events, so the unhinted plan broadcasts events"
     ),
 }
 

@@ -19,13 +19,24 @@ SF_ORACLE = os.path.join(TESTDATA, "sf0.01")
 
 def load_script(name: str):
     """Import ``scripts/{name}.py`` (or the repo-root ``{name}.py``, e.g.
-    ``bench``) as a module — neither directory is a package."""
+    ``bench``) as a module — neither directory is a package.  Loaded once
+    per process and registered in ``sys.modules`` under ``name``, so every
+    caller shares one module object, also across the two imports of this
+    file (pytest's ``conftest`` and the test files' ``tests.conftest``)."""
+    mod = sys.modules.get(name)
+    if mod is not None:
+        return mod
     path = REPO / "scripts" / f"{name}.py"
     if not path.exists():
         path = REPO / f"{name}.py"
     spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    sys.modules[name] = mod
+    try:
+        spec.loader.exec_module(mod)
+    except BaseException:
+        del sys.modules[name]
+        raise
     return mod
 
 

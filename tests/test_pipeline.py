@@ -156,7 +156,7 @@ def _serve(handler):
     return srv
 
 
-def test_ranged_download_parallel_assembly(tmp_path):
+def test_ranged_download_parallel_assembly(tmp_path, monkeypatch):
     """Ranged-parallel landing (reference io.py:153-382): the file is
     fetched as multiple byte ranges, written at offsets, and the
     assembled bytes hash identically to the source — including a retried
@@ -166,6 +166,7 @@ def test_ranged_download_parallel_assembly(tmp_path):
     import hashlib as _hl
     import random
 
+    from discogs_etl_spark import pipeline
     from discogs_etl_spark.pipeline import ranged_download
 
     payload = random.Random(42).randbytes((8 << 20) + 12345)
@@ -174,8 +175,10 @@ def test_ranged_download_parallel_assembly(tmp_path):
     try:
         url = f"http://127.0.0.1:{srv.server_address[1]}/discogs_20190301_releases.xml.gz"
         dest = str(tmp_path / "dump.bin")
-        # chunk_size floor is 1 MB → 9 ranges over this payload
-        landed = ranged_download(url, dest, chunk_size=1 << 20, max_workers=3)
+        # 1 MiB ranges → 9 ranges over this payload
+        with monkeypatch.context() as m:
+            m.setattr(pipeline, "CHUNK_SIZE", 1 << 20)
+            landed = ranged_download(url, dest)
         assert landed.n_bytes == len(payload)
         assert landed.sha256 == _hl.sha256(payload).hexdigest()
         with open(dest, "rb") as f:
@@ -223,3 +226,37 @@ def test_ranged_download_falls_back_sequential(tmp_path):
         assert landed.sha256 == _hl.sha256(payload).hexdigest()
     finally:
         srv.shutdown()
+
+
+def test_ranged_download_times_out_on_a_silent_server(tmp_path, monkeypatch):
+    """A server that accepts the connection and never answers: the HEAD
+    probe times out, the sequential fallback must time out too (it used
+    to wait forever), and ``ranged_download`` raises OSError.  The call
+    runs in a daemon thread, so a hang fails the join instead of
+    stalling the suite."""
+    import socket
+    import threading
+
+    from discogs_etl_spark import pipeline
+
+    monkeypatch.setattr(pipeline, "TIMEOUT_S", 0.5)
+    srv = socket.socket()
+    srv.bind(("127.0.0.1", 0))
+    srv.listen(8)  # the kernel completes handshakes; nothing ever accepts
+    url = f"http://127.0.0.1:{srv.getsockname()[1]}/d.gz"
+    raised: list[BaseException] = []
+
+    def run():
+        try:
+            pipeline.ranged_download(url, str(tmp_path / "d.gz"))
+        except Exception as e:  # noqa: BLE001 — the test inspects it
+            raised.append(e)
+
+    t = threading.Thread(target=run, daemon=True)
+    try:
+        t.start()
+        t.join(30)
+        assert not t.is_alive(), "ranged_download hung on a silent server"
+        assert len(raised) == 1 and isinstance(raised[0], OSError), raised
+    finally:
+        srv.close()

@@ -563,12 +563,115 @@ def test_every_crossjoin_is_broadcast_hinted():
     )
 
 
+def _is_equi_on(on) -> bool:
+    """Whether a ``.join`` condition AST has an equality key: a column
+    name or a list of them, ``a == b``, ``a.eqNullSafe(b)``, or a ``&``
+    conjunction holding one of these.  Keyless, ``None`` and pure theta
+    conditions (``!=``, ``<``) are not equi-joins."""
+    import ast
+
+    if isinstance(on, ast.Constant):
+        return isinstance(on.value, str)
+    if isinstance(on, (ast.List, ast.Tuple)):
+        return bool(on.elts) and all(_is_equi_on(e) for e in on.elts)
+    if isinstance(on, ast.Compare):
+        return len(on.ops) == 1 and isinstance(on.ops[0], ast.Eq)
+    if isinstance(on, ast.Call):
+        return isinstance(on.func, ast.Attribute) and on.func.attr == "eqNullSafe"
+    if isinstance(on, ast.BinOp) and isinstance(on.op, ast.BitAnd):
+        return _is_equi_on(on.left) or _is_equi_on(on.right)
+    return False
+
+
+def _equi_join_hint_functions() -> dict[str, list[str]]:
+    """Enclosing function name -> the ``file:line`` of each F.broadcast
+    hint on an equi-join in the package: the hinted side passed to
+    ``.join(side, on, ...)`` or the receiver of ``F.broadcast(x).join``."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "discogs_etl_spark"
+    found: dict[str, list[str]] = {}
+
+    def visit(node, fn, where):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "join"
+        ):
+            hinted = [
+                side
+                for side in (node.args[:1] + [node.func.value])
+                if isinstance(side, ast.Call)
+                and (
+                    (isinstance(side.func, ast.Attribute) and side.func.attr == "broadcast")
+                    or (isinstance(side.func, ast.Name) and side.func.id == "broadcast")
+                )
+            ]
+            on = next((k.value for k in node.keywords if k.arg == "on"), None)
+            how = next((k.value for k in node.keywords if k.arg == "how"), None)
+            on = node.args[1] if len(node.args) > 1 else on
+            how = node.args[2] if len(node.args) > 2 else how
+            cross = isinstance(how, ast.Constant) and how.value == "cross"
+            if hinted and not cross and on is not None and _is_equi_on(on):
+                for side in hinted:
+                    found.setdefault(fn, []).append(f"{where}:{side.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, fn, where)
+
+    for f in sorted(pkg.rglob("*.py")):
+        visit(ast.parse(f.read_text()), "<module>", f.name)
+    return found
+
+
+def test_every_equi_join_hint_is_listed():
+    """Join strategy is the session's: an equi-join without a hint falls
+    back to a sort-merge join, and Catalyst broadcasts a side estimated
+    under ``spark.sql.autoBroadcastJoinThreshold``.  A broadcast hint on
+    an equi-join is kept only where the planner's estimate misses a bound
+    the query knows, in a function that
+    ``scripts/plan_fingerprint.py::EQUI_JOIN_HINTS`` lists with that
+    reason, one hint per function; a listed function without such a hint
+    fails too, so the list stays exact.  Cross, keyless and theta joins
+    keep their hints (test_every_crossjoin_is_broadcast_hinted)."""
+    listed = load_script("plan_fingerprint").EQUI_JOIN_HINTS
+    found = _equi_join_hint_functions()
+    unlisted = {fn: sites for fn, sites in found.items() if fn not in listed}
+    assert not unlisted, (
+        f"equi-join broadcast hints outside EQUI_JOIN_HINTS: {unlisted} — "
+        "delete the hint (the 64 MiB session threshold decides), or list the "
+        "function with the bound the planner cannot see"
+    )
+    stale = sorted(set(listed) - set(found))
+    assert not stale, f"EQUI_JOIN_HINTS entries without an equi-join hint: {stale}"
+    # each reason names one hinted side, so a second hint in a listed
+    # function is unlisted too
+    extra = {fn: sites for fn, sites in found.items() if len(sites) > 1}
+    assert not extra, f"more than one equi-join hint per EQUI_JOIN_HINTS entry: {extra}"
+    for fn, why in listed.items():
+        assert why.strip(), f"{fn}: empty EQUI_JOIN_HINTS reason"
+
+
 # ---------------------------------------------------------------------------
 # Executed-plan fingerprint gate: scripts/plan_fingerprint.py::PLAN_PINS
 # holds the pins, what each key catches and why each query is pinned.
 # ---------------------------------------------------------------------------
 
 PLAN_PINS = load_script("plan_fingerprint").PLAN_PINS
+
+
+def test_load_script_loads_each_script_once():
+    """One module object per script for the whole session: the gates'
+    module-level state cannot split between callers."""
+    import conftest  # pytest's import of tests/conftest.py
+
+    from tests import conftest as imported  # the test files' import of it
+
+    pf = load_script("plan_fingerprint")
+    assert load_script("plan_fingerprint") is pf
+    assert conftest._PF is pf and imported._PF is pf
 
 
 def test_plan_pins_cover_the_whole_gate_set():
@@ -617,6 +720,24 @@ def test_executed_plan_fingerprint(spark, q, name):
         "if not, a Catalyst strategy flip or a lost checkpoint/broadcast "
         "just got caught before it shipped."
     )
+
+
+@pytest.mark.parametrize(
+    "name", ["join_broadcast_part_agg", "q3_shipping_priority", "q5_regional_revenue"]
+)
+def test_equi_joins_follow_the_broadcast_threshold(spark, q, name):
+    """The session threshold, not a hint, picks these joins' strategy.
+    With it at 1 byte every side reads as too big to broadcast (as
+    ``part`` and ``customer`` are at TPC-H SF100), and each join that the
+    pin shows as a broadcast hash join at fixture size plans as a
+    sort-merge join instead; a broadcast hint would force BHJ whatever
+    the size."""
+    from discogs_etl_spark.session import scoped_conf
+
+    pf = load_script("plan_fingerprint")
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "1"}):
+        fp = pf.fingerprint(q[name](spark, SF), executed=False)
+    assert fp["bhj"] == 0 and fp["smj"] == PLAN_PINS[name]["bhj"], fp
 
 
 def test_plan_sweep_allowed_names_are_registered():

@@ -98,3 +98,25 @@ def test_every_driver_entry_path_applies_utc_pin(spark):
         )
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_tune_for_correctness_matches_get_spark(spark, monkeypatch):
+    """A plain session after ``tune_for_correctness`` holds get_spark's
+    value for every runtime conf of the engine (``session._runtime_confs``),
+    the join-strategy bound included, which a plain session reads as
+    Spark's 10 MiB default.  get_spark's values are read from the
+    SparkContext conf its builder wrote, which runtime sets never touch."""
+    from discogs_etl_spark.session import _runtime_confs, tune_for_correctness
+
+    built = spark.sparkContext.getConf()
+    # the suite's session passes its partition count; tune derives it
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", built.get("spark.sql.shuffle.partitions"))
+    keys = sorted(_runtime_confs())
+    plain = spark.newSession()
+    for k in keys:
+        plain.conf.unset(k)
+    assert plain.conf.get("spark.sql.autoBroadcastJoinThreshold") != built.get(
+        "spark.sql.autoBroadcastJoinThreshold"
+    )
+    tune_for_correctness(plain)
+    assert {k: plain.conf.get(k) for k in keys} == {k: built.get(k) for k in keys}
