@@ -45,5 +45,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle twin per query (omissions → rows-only check)."""
+    """DuckDB oracle twin per query."""
     return _registry.oracle_sql()

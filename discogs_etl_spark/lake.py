@@ -19,13 +19,11 @@ task per partition; partition pruning on year/month is free at read time.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# discogs_YYYYMMDD_{type}s.xml.gz — reference s3.py:21-38.
-_DUMP_NAME_RE = re.compile(r"discogs_(\d{4})(\d{2})(\d{2})_(artists|labels|masters|releases)")
+from discogs_etl_spark.sources.manifest import dump_entry
 
 _PLURAL_TO_TYPE = {
     "artists": "artist",
@@ -36,16 +34,18 @@ _PLURAL_TO_TYPE = {
 
 
 def parse_dump_url(url: str) -> dict:
-    """Filename → (data_type, year, month, day) (reference s3.py:21-38)."""
-    m = _DUMP_NAME_RE.search(url)
-    if not m:
+    """Filename → (data_type, year, month, day) (reference s3.py:21-38),
+    parsed by the dump catalog's ``dump_entry``: a basename that is not
+    a dump, or an impossible date, raises ``ValueError``."""
+    entry = dump_entry(url)
+    if entry is None:
         raise ValueError(f"unrecognized dump filename in {url!r}")
-    year, month, day, plural = m.groups()
+    d = entry.dump_date
     return {
-        "data_type": _PLURAL_TO_TYPE[plural],
-        "year": int(year),
-        "month": month,  # keep zero-padded string, like the lake layout
-        "day": day,
+        "data_type": entry.data_type,
+        "year": d.year,
+        "month": f"{d.month:02d}",  # keep zero-padded string, like the lake layout
+        "day": f"{d.day:02d}",
     }
 
 

@@ -235,18 +235,17 @@ def clear_session_memos() -> None:
 
 
 def session_memo(cache, spark, sf_dir, build):
-    """Memoize a DataFrame behind an eager localCheckpoint, keyed by
-    (Spark application id, sf_dir) — the shared mechanism of the dedup
-    family's pair graph, the co-order edge set, and the lexical
-    postings.  Entries from earlier (stopped) sessions are evicted:
-    their checkpointed blocks died with the executors, and a long-lived
+    """``build()``'s result, memoized per (Spark application id, sf_dir)
+    — the one per-application state mechanism of the package: the dedup
+    family's pair graph, the co-order edge set and the lexical postings
+    (each built behind an eager localCheckpoint), and the embedding
+    width check.  Entries from earlier (stopped) sessions are evicted:
+    checkpointed blocks die with their executors, and a long-lived
     process that cycles SparkSessions must not pin dead DataFrames."""
     app = spark.sparkContext.applicationId
     for k in [k for k in cache if k[0] != app]:
         del cache[k]
     key = (app, sf_dir)
-    df = cache.get(key)
-    if df is None:
-        df = build().localCheckpoint()
-        cache[key] = df
-    return df
+    if key not in cache:
+        cache[key] = build()
+    return cache[key]

@@ -3280,6 +3280,7 @@ def _coorder_oriented_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.explode(F.expr(_COORDER_PAIR_EXPR)).alias("e"))
             .select("e.u", "e.v")
             .distinct()
+            .localCheckpoint()
         ),
     )
 

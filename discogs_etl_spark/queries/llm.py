@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from discogs_etl_spark.queries._oracle_sql import cc_sql
-from discogs_etl_spark.queries._util import half_up_long, memo_cache
+from discogs_etl_spark.queries._util import half_up_long, memo_cache, session_memo
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.session import local_frame, scoped_conf
 from discogs_etl_spark.tables import load
@@ -127,16 +127,13 @@ _EMB_DIM_CHECKED: dict[tuple[str, str], int] = memo_cache()
 
 def _checked_emb_dim(spark: SparkSession, sf_dir: str) -> int:
     """``_EMB_DIM``, runtime-asserted against the actual embeddings
-    table once per (session, sf_dir) — one count/min/max(size) aggregate
-    over the id-and-width projection (footer-cheap), memoized like
-    session_memo's caches.  Raises if ANY vector's width differs, so
-    the unrolled fold can never silently NULL out pairs; a table with
-    zero rows has no width to drift and passes."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _EMB_DIM_CHECKED if k[0] != app]:
-        del _EMB_DIM_CHECKED[k]
-    key = (app, sf_dir)
-    if key not in _EMB_DIM_CHECKED:
+    table once per (session, sf_dir) through ``session_memo`` — one
+    count/min/max(size) aggregate over the id-and-width projection
+    (footer-cheap).  Raises if ANY vector's width differs, so the
+    unrolled fold can never silently NULL out pairs; a table with zero
+    rows has no width to drift and passes."""
+
+    def check() -> int:
         row = (
             load(spark, sf_dir, "embeddings")
             .agg(
@@ -154,8 +151,9 @@ def _checked_emb_dim(spark: SparkSession, sf_dir: str) -> int:
                 "fixture at that width or update _EMB_DIM — out-of-"
                 "bounds indexing would silently drop pairs, not error"
             )
-        _EMB_DIM_CHECKED[key] = _EMB_DIM
-    return _EMB_DIM
+        return _EMB_DIM
+
+    return session_memo(_EMB_DIM_CHECKED, spark, sf_dir, check)
 
 
 def _dot(a: Column, b: Column, w: int | None = None) -> Column:
@@ -1767,13 +1765,15 @@ def minhash_scored_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns checkpoint as cheaply as two; edge-only consumers go
     through minhash_pair_graph's projection so their shapes are
     unchanged."""
-    from discogs_etl_spark.queries._util import session_memo
-
     return session_memo(
         _PAIR_GRAPH_CACHE,
         spark,
         sf_dir,
-        lambda: dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b", "jaccard"),
+        lambda: (
+            dedup_minhash_lsh(spark, sf_dir)
+            .select("doc_a", "doc_b", "jaccard")
+            .localCheckpoint()
+        ),
     )
 
 
@@ -3233,8 +3233,6 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     (histogram-intersection and BM25) and their df/dl side tables derive
     from this; at 100 TB this materialization IS the persisted inverted
     index, built once and served to every query."""
-    from discogs_etl_spark.queries._util import session_memo
-
     return session_memo(
         _POSTINGS_CACHE,
         spark,
@@ -3245,6 +3243,7 @@ def _postings(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.length("w") > 3)
             .groupBy("doc_id", "w")
             .agg(F.count(F.lit(1)).alias("tf"))
+            .localCheckpoint()
         ),
     )
 

@@ -37,7 +37,7 @@ _REGISTRY: dict[str, "QuerySpec"] = {}
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL twin; None → driver does rows-only check
+    oracle: str  # DuckDB SQL twin
     tags: tuple[str, ...] = field(default_factory=tuple)
     doc: str = ""
     bench: bool = False  # include in bench.py's headline set
@@ -45,7 +45,7 @@ class QuerySpec:
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     tags: tuple[str, ...] = (),
     bench: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
@@ -85,9 +85,7 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: spec.oracle for name, spec in all_specs().items() if spec.oracle is not None
-    }
+    return {name: spec.oracle for name, spec in all_specs().items()}
 
 
 def bench_specs() -> dict[str, QuerySpec]:

@@ -43,23 +43,27 @@ class DumpEntry(NamedTuple):
     url: str
 
 
+def dump_entry(key: str, base_url: str = "") -> DumpEntry | None:
+    """One key's catalog entry; None when its basename is not a dump (a
+    crashed download's ``.part``, any other file), and ``ValueError`` on
+    an impossible dump date."""
+    filename = key.rsplit("/", 1)[-1]
+    m = _FNAME_PATTERN.fullmatch(filename)
+    if m is None:
+        return None
+    ymd = m[1]
+    try:
+        d = date(int(ymd[:4]), int(ymd[4:6]), int(ymd[6:]))
+    except ValueError as e:
+        raise ValueError(f"{key}: invalid dump date {ymd}") from e
+    # plural → singular type map (reference s3.py:390-395)
+    return DumpEntry(filename, d, d.strftime("%Y-%m"), m[2][:-1], base_url + key)
+
+
 def catalog_entries(keys: Iterable[str], base_url: str = "") -> list[DumpEntry]:
-    """Key list → typed catalog entries; non-dump keys are dropped and an
-    impossible dump date raises ``ValueError``."""
-    out = []
-    for key in keys:
-        filename = key.rsplit("/", 1)[-1]
-        m = _FNAME_PATTERN.fullmatch(filename)
-        if m is None:
-            continue
-        ymd = m[1]
-        try:
-            d = date(int(ymd[:4]), int(ymd[4:6]), int(ymd[6:]))
-        except ValueError as e:
-            raise ValueError(f"{key}: invalid dump date {ymd}") from e
-        # plural → singular type map (reference s3.py:390-395)
-        out.append(DumpEntry(filename, d, d.strftime("%Y-%m"), m[2][:-1], base_url + key))
-    return out
+    """Key list → typed catalog entries (``dump_entry``); non-dump keys
+    are dropped."""
+    return [e for e in (dump_entry(k, base_url) for k in keys) if e is not None]
 
 
 def checksum_map(pairs: Iterable[tuple[str, str]]) -> dict[str, str]:

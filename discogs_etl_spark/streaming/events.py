@@ -32,28 +32,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from discogs_etl_spark.queries._oracle_sql import SESSION_GAP_S, sessions_sql
 from discogs_etl_spark.queries._util import dec
 from discogs_etl_spark.registry import register
 from discogs_etl_spark.session import local_frame, scoped_conf
-
-# The on-disk parquet stores TIMESTAMP(MICROS) with isAdjustedToUTC=false
-# (verified via the parquet footer at every sf), which Spark reads as
-# TIMESTAMP_NTZ.  Streaming scans need an explicit schema, so declare ts
-# exactly as the batch reader sees it — no legacy confs, no unit
-# conversion (see discogs_etl_spark.tables.load, which sniffs the footer).
-_EVENTS_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+from discogs_etl_spark.tables import SCHEMAS
 
 
 def _landing_dir(sf_dir: str) -> str:
@@ -85,7 +69,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing directory, one file = one input split (new files are picked
     up incrementally on a real landing prefix)."""
     raw = (
-        spark.readStream.schema(_EVENTS_RAW_SCHEMA)
+        spark.readStream.schema(SCHEMAS["events"])
         .format("parquet")
         .load(_landing_dir(sf_dir))
     )

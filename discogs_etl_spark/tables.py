@@ -1,121 +1,87 @@
 """Fixture-table loaders.
 
-The correctness/bench fixtures are one Parquet file per table under an
-``sf_dir`` (see TESTDATA.md).  Loading is a plain Parquet scan — Catalyst
-owns column pruning and predicate pushdown — with one memo in front of it.
+The correctness and bench fixtures are one Parquet file per table under
+an ``sf_dir`` (see TESTDATA.md).  Every table's schema is declared here,
+never inferred (SURVEY §1.2, §1.4): ``load`` is
+``spark.read.schema(SCHEMAS[name]).parquet(path)``, which runs no Spark
+job, the first load of a table included.  Catalyst still owns column
+pruning and predicate pushdown, and every load gets fresh attribute ids,
+so self-joins of two loads resolve.
 
-A schema-less ``spark.read.parquet`` runs a schema-inference job
-(``ParquetUtils.inferSchema`` → ``mergeSchemasInParallel``) on every call,
-even for a one-file table whose footer has not changed since the last
-read: 80–124 ms each, against 13–28 ms with the schema given (4-vCPU
-host, ``local[4]``, fixture sizes).  ``load`` therefore memoizes the
-schema Spark itself inferred, keyed by ``(applicationId, path, st_size,
-st_mtime_ns)``, and on a hit reads ``spark.read.schema(cached).parquet(path)``,
-which runs no job.
-
-- **The schema, never the DataFrame.**  Every read must get fresh
-  attribute ids; a memoized DataFrame would hand two ``load`` calls of
-  one table the same ids and make their self-joins ambiguous.
-- **Invalidation.**  Rewriting the file changes its size or mtime, so
-  the next ``load`` misses and re-infers.  Entries of other (stopped)
-  applications are evicted on every call, as ``queries/_util.session_memo``
-  does: each new session still infers on its first load.
-- **Regular files only.**  A directory (or a path ``os.stat`` cannot
-  see) falls through to a plain ``spark.read.parquet``: its size and
-  mtime do not track the files inside it.
-- The events table's footer sniff (``_ts_is_nanos``) is stored in the
-  same entry, so a hit reads no footer at all.
+- **The declared types are the files' types.**  Each DDL equals what a
+  plain ``spark.read.parquet`` infers from the fixture footers (the
+  timestamp columns are stored as ``timestamp[us]`` without UTC
+  adjustment, hence ``TIMESTAMP_NTZ``); ``tests/test_tables.py`` checks
+  schema and optimized-plan equality for every table of every fixture
+  directory.  A file whose physical type differs (a nanosecond ``ts``,
+  say) fails at execution with ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``.
+- **The footer's columns are checked.**  A declared read returns a
+  column the file lacks as NULLs and drops a column the file adds, so
+  ``load`` compares the footer's column names
+  (``pyarrow.parquet.read_schema``: no data read, no job) with the
+  declaration and raises ``ValueError`` naming the table and the missing
+  or extra columns.
+- **events.ts is cast to TIMESTAMP.**  Under the UTC-pinned session the
+  cast keeps the wall clock exactly, the streaming plane needs TIMESTAMP
+  for watermarks, and DuckDB's naive timestamps collect to the same UTC
+  datetimes.  The streaming reader declares the raw file with
+  ``SCHEMAS["events"]`` too.
 """
 
 from __future__ import annotations
 
 import os
-import stat
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
 
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, p_size INT, "
+        "p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE, "
+        "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, l_tax DOUBLE, "
+        "l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, event_type STRING, value DOUBLE, "
+        "props STRING"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+TABLE_NAMES = tuple(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# (applicationId, path, st_size, st_mtime_ns) -> (inferred schema, ts_is_nanos)
-_SCHEMA_MEMO: dict[tuple, tuple[StructType, bool]] = {}
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLE_NAMES:
+    if name not in SCHEMAS:
         raise KeyError(f"unknown fixture table {name!r}; one of {TABLE_NAMES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
+    footer = set(pq.read_schema(path).names)
+    df = spark.read.schema(SCHEMAS[name]).parquet(path)
+    declared = set(df.columns)
+    missing, extra = declared - footer, footer - declared
+    if missing or extra:
+        raise ValueError(
+            f"{path}: table {name!r} does not match its declared schema; "
+            f"missing columns {sorted(missing)}, extra columns {sorted(extra)}"
+        )
     if name == "events":
-        from pyspark.sql import functions as F
-
-        # The fixtures' ts physical type has changed across driver rounds
-        # (TIMESTAMP(NANOS) in round 1, TIMESTAMP(MICROS)/NTZ since) —
-        # sniff the footer instead of assuming.  micros/millis timestamps
-        # Spark reads natively (as TIMESTAMP_NTZ when isAdjustedToUTC is
-        # false); only the nanos case needs the legacy long read plus the
-        # same ns→us truncation DuckDB applies.  Either way, normalize to
-        # TIMESTAMP: under the UTC-pinned session that cast preserves the
-        # wall clock exactly, the streaming plane needs TIMESTAMP for
-        # watermarks, and DuckDB's naive timestamps collect to the same
-        # UTC datetimes.
-        df, nanos = _read(spark, path, sniff_nanos=True)
-        if nanos:
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return _read(spark, path)[0]
-
-
-def _read(spark: SparkSession, path: str, sniff_nanos: bool = False) -> tuple[DataFrame, bool]:
-    """``spark.read.parquet(path)`` through the schema memo (module
-    docstring); also returns whether the footer's ``ts`` is nanos (only
-    sniffed when asked)."""
-    key = _memo_key(spark, path)
-    hit = _SCHEMA_MEMO.get(key) if key else None
-    nanos = hit[1] if hit else sniff_nanos and _ts_is_nanos(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if hit:
-        return spark.read.schema(hit[0]).parquet(path), nanos
-    df = spark.read.parquet(path)
-    if key:
-        _SCHEMA_MEMO[key] = (df.schema, nanos)
-    return df, nanos
-
-
-def _memo_key(spark: SparkSession, path: str) -> tuple | None:
-    """The memo key of a regular file, after evicting other applications'
-    entries; None for anything else (a directory, a missing path)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
-    app = spark.sparkContext.applicationId
-    for k in [k for k in list(_SCHEMA_MEMO) if k[0] != app]:
-        _SCHEMA_MEMO.pop(k, None)
-    return (app, path, st.st_size, st.st_mtime_ns)
-
-
-def _ts_is_nanos(path: str) -> bool:
-    import pyarrow.parquet as pq
-
-    try:
-        field = pq.ParquetFile(path).schema_arrow.field("ts")
-    except (KeyError, OSError):
-        return False
-    t = field.type
-    return getattr(t, "unit", None) == "ns"
+        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df

@@ -24,19 +24,18 @@ def gen_queries_md() -> str:
     lines = [
         "# QUERIES — registry reference (auto-generated by scripts/gen_docs.py)",
         "",
-        "One row per registered query: oracle status (`O` exact DuckDB twin /",
-        "`R` rows-only), bench-set membership, tags, and the first docstring",
-        "line.  See COVERAGE.md for the SURVEY §2 mapping.",
+        "One row per registered query (each has an exact DuckDB oracle twin):",
+        "bench-set membership, tags, and the first docstring line.  See",
+        "COVERAGE.md for the SURVEY §2 mapping.",
         "",
-        "| query | oracle | bench | tags | summary |",
-        "|---|---|---|---|---|",
+        "| query | bench | tags | summary |",
+        "|---|---|---|---|",
     ]
     for name, spec in sorted(all_specs().items()):
         doc = (spec.doc or "").strip().splitlines()
         summary = doc[0].rstrip(".") if doc else ""
         lines.append(
-            f"| `{name}` | {'O' if spec.oracle else 'R'} | "
-            f"{'yes' if spec.bench else ''} | {', '.join(spec.tags)} | {summary} |"
+            f"| `{name}` | {'yes' if spec.bench else ''} | {', '.join(spec.tags)} | {summary} |"
         )
     lines.append("")
     return "\n".join(lines)

@@ -41,6 +41,24 @@ def test_cli_backfill_query_compact(spark, tmp_path, capsys):
     assert "rewritten_partitions" in out
 
 
+def test_cli_query_reads_each_lake_prefix_once(spark, tmp_path, monkeypatch, capsys):
+    from discogs_etl_spark import cli
+
+    for plural in ("releases", "artists"):
+        (tmp_path / plural).mkdir()
+    reads = []
+
+    def counting_read_lake(spark, root, data_type):
+        reads.append(data_type)
+        return spark.range(1)
+
+    monkeypatch.setattr(cli, "read_lake", counting_read_lake)
+    sql = "SELECT count(*) AS n FROM releases CROSS JOIN artists"
+    assert main(["query", sql, "--lake", str(tmp_path)]) == 0
+    assert json.loads(capsys.readouterr().out) == {"n": 1}
+    assert sorted(reads) == ["artist", "release"]
+
+
 def test_cli_dedup_and_profile(spark, tmp_path, capsys):
     """User-facing curation verbs: dedup a corpus with duplicated texts
     (exact + minhash agree on the survivor count here — duplicates are

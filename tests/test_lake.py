@@ -8,6 +8,7 @@ import contextlib
 import gzip
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from discogs_etl_spark.lake import (
@@ -35,6 +36,20 @@ def _partition_filters(df) -> str:
 def test_parse_dump_url():
     info = parse_dump_url("s3://dumps/data/2019/discogs_20190301_releases.xml.gz")
     assert info == {"data_type": "release", "year": 2019, "month": "03", "day": "01"}
+
+
+@pytest.mark.parametrize(
+    "url",
+    [
+        "s3://dumps/data/2023/discogs_20231399_releases.xml.gz",
+        "landing/discogs_20230115_releases.xml.gz.part",
+    ],
+    ids=["impossible-date", "partial-download"],
+)
+def test_parse_dump_url_rejects_what_the_catalog_drops(url):
+    # the lake writer and the dump catalog parse one filename grammar
+    with pytest.raises(ValueError):
+        parse_dump_url(url)
 
 
 def test_lake_roundtrip_and_pruning(spark, tmp_path):

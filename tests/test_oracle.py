@@ -129,7 +129,7 @@ def test_nested_loop_audit_is_exact(spark):
         assert_nested_loops_audited("join_range_band_pricing", a.join(b, a.x == b.u))
 
 
-ORACLE_SPECS = {n: s for n, s in all_specs().items() if s.oracle is not None}
+ORACLE_SPECS = all_specs()
 
 
 @pytest.mark.parametrize("name", sorted(ORACLE_SPECS))

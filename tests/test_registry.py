@@ -75,7 +75,7 @@ def test_register_rejects_duplicate_name(monkeypatch):
     monkeypatch.setattr(registry, "_REGISTRY", dict(registry.all_specs()))
     name, spec = next(iter(registry._REGISTRY.items()))
     with pytest.raises(ValueError, match="duplicate query name"):
-        registry.register(name)(lambda spark, sf_dir: None)
+        registry.register(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
     assert registry._REGISTRY[name] is spec
 
 
@@ -89,7 +89,7 @@ def test_register_builds_spec_from_builder(empty_registry):
 
 def test_register_keeps_call_order(empty_registry):
     for name in ("zeta", "alpha", "mid"):
-        registry.register(name)(lambda spark, sf_dir: None)
+        registry.register(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
     assert list(registry.all_specs())[-3:] == ["zeta", "alpha", "mid"]
 
 

@@ -68,10 +68,8 @@ def test_checkpointed_incremental_arrival(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from discogs_etl_spark.streaming.events import (
-        _EVENTS_RAW_SCHEMA,
-        run_stream_to_parquet,
-    )
+    from discogs_etl_spark.streaming.events import run_stream_to_parquet
+    from discogs_etl_spark.tables import SCHEMAS
 
     landing = tmp_path / "landing"
     landing.mkdir()
@@ -81,7 +79,7 @@ def test_checkpointed_incremental_arrival(spark, tmp_path):
 
     def passthrough():
         raw = (
-            spark.readStream.schema(_EVENTS_RAW_SCHEMA)
+            spark.readStream.schema(SCHEMAS["events"])
             .format("parquet")
             .load(str(landing))
         )

@@ -1,6 +1,7 @@
-"""``tables.load``'s schema memo: a repeated load of an unchanged fixture
-file reuses the schema Spark inferred for it, runs no job, and still
-reads exactly what a plain ``spark.read.parquet`` reads."""
+"""``tables.load`` reads every fixture table with its declared schema:
+the same schema and optimized plan a plain ``spark.read.parquet`` gives,
+no Spark job, and a loud failure when the file's columns are not the
+declared ones."""
 
 from __future__ import annotations
 
@@ -12,10 +13,10 @@ import time
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from discogs_etl_spark import tables
 from discogs_etl_spark.tables import TABLE_NAMES, load
-from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.conftest import REPO, SF_ORACLE, SF_SMOKE, TESTDATA
 
 
 def _normalised_plan(df) -> str:
@@ -48,62 +49,52 @@ def _jobs_per_group(spark, groups_and_actions) -> dict[str, int]:
     return {g: _group_jobs(spark, g) for g, _ in groups_and_actions}
 
 
-@pytest.fixture
-def nation_copy(tmp_path):
-    shutil.copy(os.path.join(SF_SMOKE, "nation.parquet"), tmp_path / "nation.parquet")
-    return str(tmp_path)
+FIXTURE_DIRS = {
+    "sf0.001": SF_SMOKE,
+    "sf0.01": SF_ORACLE,
+    "sf0.1": os.path.join(TESTDATA, "sf0.1"),
+    "perfbench-sf0.01": str(REPO / "perfbench" / "fixtures" / "sf0.01"),
+    "sf_lo": None,  # session fixtures (tests/conftest.py)
+    "sf_empty": None,
+}
 
 
-@pytest.mark.parametrize("sf_dir", [SF_SMOKE, SF_ORACLE], ids=["sf0.001", "sf0.01"])
+@pytest.mark.parametrize("sf_key", FIXTURE_DIRS)
 @pytest.mark.parametrize("name", TABLE_NAMES)
-def test_memo_hit_reads_what_a_plain_read_reads(spark, sf_dir, name):
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    load(spark, sf_dir, name)
-    st = os.stat(path)
-    key = (spark.sparkContext.applicationId, path, st.st_size, st.st_mtime_ns)
-    assert key in tables._SCHEMA_MEMO
-    hit = tables._read(spark, path)[0]
-    plain = spark.read.parquet(path)
-    assert hit.schema == plain.schema
-    assert _normalised_plan(hit) == _normalised_plan(plain)
+def test_load_reads_what_a_plain_read_reads(spark, request, sf_key, name):
+    sf_dir = FIXTURE_DIRS[sf_key] or request.getfixturevalue(sf_key)
+    plain = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events":
+        plain = plain.withColumn("ts", F.col("ts").cast("timestamp"))
+    declared = load(spark, sf_dir, name)
+    assert declared.schema == plain.schema
+    assert _normalised_plan(declared) == _normalised_plan(plain)
 
 
-def test_second_load_runs_no_job(spark, nation_copy):
-    jobs = _jobs_per_group(
-        spark,
-        [
-            ("tables-first-load", lambda: load(spark, nation_copy, "nation")),
-            ("tables-second-load", lambda: load(spark, nation_copy, "nation")),
-        ],
-    )
-    assert jobs["tables-first-load"] >= 1
-    assert jobs["tables-second-load"] == 0
+def test_first_load_runs_no_job(spark, tmp_path):
+    for t in TABLE_NAMES:
+        shutil.copy(os.path.join(SF_SMOKE, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    groups = [(f"tables-load-{t}", lambda t=t: load(spark, str(tmp_path), t)) for t in TABLE_NAMES]
+    plain = ("tables-plain-read", lambda: spark.read.parquet(str(tmp_path / "nation.parquet")))
+    jobs = _jobs_per_group(spark, [*groups, plain])
+    assert jobs.pop("tables-plain-read") >= 1  # the counter sees an inference job
+    assert jobs == {g: 0 for g, _ in groups}
 
 
-def test_overwritten_file_is_reinferred(spark, nation_copy):
-    assert "n_extra" not in load(spark, nation_copy, "nation").columns
-    path = os.path.join(nation_copy, "nation.parquet")
-    t = pq.read_table(path)
-    pq.write_table(t.append_column("n_extra", pa.array(range(t.num_rows), pa.int64())), path)
-    jobs = _jobs_per_group(
-        spark,
-        [
-            ("tables-reinfer", lambda: load(spark, nation_copy, "nation")),
-            ("tables-rehit", lambda: load(spark, nation_copy, "nation")),
-        ],
-    )
-    assert jobs["tables-reinfer"] >= 1
-    assert jobs["tables-rehit"] == 0
-    df = load(spark, nation_copy, "nation")
-    assert "n_extra" in df.columns
-    assert df.agg({"n_extra": "sum"}).first()[0] == sum(range(t.num_rows))
+@pytest.mark.parametrize("change", ["missing", "extra"])
+def test_undeclared_footer_columns_raise_before_any_job(spark, tmp_path, change):
+    t = pq.read_table(os.path.join(SF_SMOKE, "nation.parquet"))
+    if change == "missing":
+        t, col = t.drop_columns(["n_regionkey"]), "n_regionkey"
+    else:
+        t, col = t.append_column("n_extra", pa.array(range(t.num_rows), pa.int64())), "n_extra"
+    pq.write_table(t, str(tmp_path / "nation.parquet"))
 
+    def attempt():
+        with pytest.raises(ValueError, match=rf"'nation'.*{change} columns \['{col}'\]"):
+            load(spark, str(tmp_path), "nation")
 
-def test_directory_falls_through_unmemoized(spark, tmp_path):
-    path = str(tmp_path / "nation.parquet")
-    spark.range(3).withColumnRenamed("id", "n_nationkey").write.parquet(path)
-    assert load(spark, str(tmp_path), "nation").count() == 3
-    assert not any(k[1] == path for k in tables._SCHEMA_MEMO)
+    assert _jobs_per_group(spark, [("tables-undeclared", attempt)]) == {"tables-undeclared": 0}
 
 
 def test_self_join_of_two_loads_resolves(spark, duck):
@@ -118,13 +109,3 @@ def test_self_join_of_two_loads_resolves(spark, duck):
         "ON a.n_regionkey = b.n_regionkey AND a.n_nationkey < b.n_nationkey"
     ).fetchone()
     assert n == expected > 0
-
-
-def test_stopped_application_entries_are_evicted(spark, nation_copy):
-    path = os.path.join(nation_copy, "nation.parquet")
-    stale = ("app-stopped-earlier", path, 0, 0)
-    tables._SCHEMA_MEMO[stale] = (load(spark, nation_copy, "nation").schema, False)
-    load(spark, nation_copy, "nation")
-    assert stale not in tables._SCHEMA_MEMO
-    app = spark.sparkContext.applicationId
-    assert tables._SCHEMA_MEMO and all(k[0] == app for k in tables._SCHEMA_MEMO)
